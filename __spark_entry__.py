@@ -2372,6 +2372,7 @@ def _q_geo_replication_stream(spark, sf_dir):
     import tempfile
 
     from pulsar_spark.sources.topics import write_topic
+    from pulsar_spark.streaming import await_drain
     from pulsar_spark.streaming.replication import replicate_stream
 
     base = tempfile.mkdtemp(prefix="psgeo_")
@@ -2381,10 +2382,7 @@ def _q_geo_replication_stream(spark, sf_dir):
     )
     write_topic(m, src, repartition=False)
     for _ in range(2):  # second drain must forward nothing new
-        q = replicate_stream(spark, src, dst, "east", "west", base + "/ck")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("geo_replication_stream drain exceeded 300 s")
+        await_drain(replicate_stream(spark, src, dst, "east", "west", base + "/ck"))
     return spark.read.parquet(dst).select(
         "src_partition", "src_offset", "event_id", "replicated_from"
     )
@@ -2786,6 +2784,7 @@ def _q_streaming_curation(spark, sf_dir):
     import tempfile
 
     from pulsar_spark.sources.topics import create_topic, produce
+    from pulsar_spark.streaming import await_drain
     from pulsar_spark.streaming.curation import streaming_curate
 
     base = tempfile.mkdtemp(prefix="pscur_")
@@ -2806,11 +2805,9 @@ def _q_streaming_curation(spark, sf_dir):
             gate=F.col("n_chars") >= 200,
             seq_len=256,
         )
-        if not q.awaitTermination(300):
-            # fail LOUDLY: reading the output mid-drain would return a
-            # nondeterministic partial frame
-            q.stop()
-            raise TimeoutError("streaming_curation drain exceeded 300 s")
+        # fail LOUDLY: reading the output mid-drain would return a
+        # nondeterministic partial frame
+        await_drain(q)
     return (
         spark.read.parquet(base + "/out")
         .select("batch_id", "source", "bin_id", "n_docs", "sum_tokens")

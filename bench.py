@@ -426,8 +426,8 @@ def main() -> None:
         def _hygiene():
             # r12: the r11 fan_out+localCheckpoint pin of the scrubbed
             # sample is REVERTED — the r11 driver read it flat-to-worse
-            # and the mandated re-A/B (tools/ab_x5_pin.py, interleaved,
-            # 6 rounds) read pinned min 1.800/median 2.157 vs unpinned
+            # and the mandated re-A/B (a one-off interleaved script, 6
+            # rounds; tools/ab_bench.py runs that protocol now) read pinned min 1.800/median 2.157 vs unpinned
             # 1.722/2.095 with 7 vs 5 jobs: the pin job costs what the
             # duplicated PII regex pass saves, so the plain shape wins
             # on both wall and job count. Back to the honest pre-r11

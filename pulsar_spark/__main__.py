@@ -688,6 +688,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "consume-namespace":
         import os as _os
 
+        from pulsar_spark.durable import write_atomic
         from pulsar_spark.sources import (
             MultiCheckpoint,
             read_namespace_from_checkpoint,
@@ -702,8 +703,7 @@ def main(argv: list[str] | None = None) -> int:
         for row in df.orderBy(*cols).limit(args.limit).collect():
             print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
         if args.checkpoint:
-            with open(args.checkpoint, "wb") as fh:
-                fh.write(advanced.to_bytes())
+            write_atomic(args.checkpoint, advanced.to_bytes())
     elif args.cmd == "subscription":
         # spark-session verbs: backlog / clear-backlog / seek
         from pulsar_spark.sources import (

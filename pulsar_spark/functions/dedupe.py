@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_spark.durable import recover_swap, rewrite_path, swap_in
+
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (min id) per exact text fingerprint."""
@@ -1298,7 +1300,7 @@ def incremental_exact_dedup(
     # a compaction may have died between its two swap renames — recover
     # BEFORE probing, or the store reads as empty and every previously
     # seen duplicate silently re-admits
-    _recover_store_swap(spark, store_path)
+    recover_swap(spark, store_path)
     cols = new_docs.columns
     fp = _exact_fingerprint(text_col)
     collapsed = (
@@ -1358,7 +1360,7 @@ def commit_fingerprints(
     # never write into a store whose compaction swap is mid-flight: the
     # write would recreate the root next to the __old dir and the next
     # recovery would then discard the real history
-    _recover_store_swap(survivors.sparkSession, store_path)
+    recover_swap(survivors.sparkSession, store_path)
     fps = survivors.select(_exact_fingerprint(text_col).alias("_fp"))
     if epoch is None:
         fps.write.mode("append").parquet(store_path)
@@ -1451,7 +1453,7 @@ def incremental_near_dedup(
     spark = new_docs.sparkSession
     # recover a torn compaction swap before probing (see
     # incremental_exact_dedup); drop any legacy pre-r11 probe scratch
-    _recover_store_swap(spark, store_path)
+    recover_swap(spark, store_path)
     _clean_scratch(spark, f"{store_path}/_scratch")
     # 0. materialize the batch's MinHash signatures ONCE. Three
     # consumers need them (within-batch LSH, history probe, store
@@ -1568,10 +1570,11 @@ def incremental_near_dedup(
         )
         stored_bands = _read_stored_bands(spark, band_dirs, probe=probe)
         # The .distinct() was A/B-tested for removal/weakening in r12
-        # (tools/ab_x10_cand_dedup.py, interleaved, 5 rounds): dropping
-        # it reads 19 -> 18 jobs and min 2.671 -> 2.596 s (~3%, inside
-        # this host's noise band), and dropDuplicates([id, _fp]) reads
-        # mixed (min 2.780, median 3.040). KEPT: a pair that matches on
+        # (one-off interleaved A/B, 5 rounds; tools/ab_bench.py runs
+        # that protocol now): dropping it reads 19 -> 18 jobs and min
+        # 2.671 -> 2.596 s (~3%, inside this host's noise band), and
+        # dropDuplicates([id, _fp]) reads mixed (min 2.780, median
+        # 3.040). KEPT: a pair that matches on
         # k of the 16 bands emits k duplicate rows, so the no-distinct
         # shape inflates the candidate set AQE broadcasts into the sig
         # verify by up to the band factor at store scale — a real
@@ -1754,8 +1757,9 @@ def _read_stored_bands(spark, band_dirs: list[str], probe: DataFrame | None = No
     full-scan exactly as before. The two groups cannot share one read:
     Spark refuses partition discovery over roots with conflicting
     directory structures."""
-    fs, jvm = _store_fs(spark, band_dirs[0])
+    jvm = spark._jvm
     P = jvm.org.apache.hadoop.fs.Path
+    fs = P(band_dirs[0]).getFileSystem(spark._jsc.hadoopConfiguration())
     # Explicit data schema (r11): the store layout is engine-owned and
     # fixed (`commit_near_fingerprints` always writes these three
     # columns), so schema INFERENCE — a 1-task footer-read job per
@@ -1881,7 +1885,7 @@ def commit_near_fingerprints(
     frame (a SUPERSET of the survivors is fine — it is semi-joined onto
     the survivor ids); the values are the same deterministic expression
     either way."""
-    _recover_store_swap(survivors.sparkSession, store_path)
+    recover_swap(survivors.sparkSession, store_path)
     if sigs is not None:
         sigs = sigs.join(
             survivors.select(id_col), on=id_col, how="left_semi"
@@ -1921,44 +1925,6 @@ def commit_near_fingerprints(
         sigs.unpersist()
 
 
-def _store_fs(spark, store_path: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_path)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _fs_rename(fs, src, dst) -> None:
-    """Hadoop ``fs.rename`` returns False instead of raising on most
-    failures (missing parent, existing destination, cross-store move).
-    A swap step that silently no-ops would strand a compaction rewrite
-    with no error — check the boolean and fail loudly."""
-    if not fs.rename(src, dst):
-        raise IOError(f"fs.rename({src}, {dst}) returned false")
-
-
-def _recover_store_swap(spark, store_path: str) -> None:
-    """Complete or roll back an interrupted store-compaction swap —
-    the same two-rename invariants as the tiered-storage rewrite
-    (sources/tiered.py _recover_swap), over the Hadoop FileSystem API
-    so remote stores (hdfs://, s3a://) recover too. ``store_path`` is
-    normalized (trailing slash stripped) so the swap names are true
-    SIBLINGS of the store — an unstripped path would make
-    ``store_path + '__old'`` a child of the store itself."""
-    store_path = store_path.rstrip("/")
-    fs, jvm = _store_fs(spark, store_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    base, tmp, old = P(store_path), P(store_path + "__rewrite"), P(store_path + "__old")
-    if not fs.exists(base):
-        if fs.exists(tmp):
-            _fs_rename(fs, tmp, base)
-        elif fs.exists(old):
-            _fs_rename(fs, old, base)
-    if fs.exists(base) and fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(base) and fs.exists(tmp):
-        fs.delete(tmp, True)
-
-
 def _store_inputs(spark, store_path: str) -> list[str]:
     """Every data location in a store directory: loose root part files
     (non-epoch appends) plus ALL ``batch_id=N`` epoch dirs."""
@@ -1979,23 +1945,19 @@ def compact_fingerprint_store(spark, store_path: str, into_epoch: int = 0) -> di
     Contract change it buys: epochs folded into the base are no longer
     replay-idempotent (a replayed pre-compaction epoch would anti-join
     against its own folded fingerprints) — compact only past the
-    replay horizon, exactly like checkpoint GC. Crash-safe via the
-    two-rename swap (+ ``_recover_store_swap`` on entry); a second
+    replay horizon, exactly like checkpoint GC. Crash-safe via
+    ``durable.swap_in`` (+ ``recover_swap`` on entry); a second
     compaction of an already-compacted store is a no-op rewrite."""
     store_path = store_path.rstrip("/")
-    _recover_store_swap(spark, store_path)
+    recover_swap(spark, store_path)
     inputs = _store_inputs(spark, store_path)
     if not inputs:
         return {"fingerprints": 0, "inputs": 0, "compacted": False}
     fps = spark.read.parquet(*inputs).select("_fp").distinct()
-    rewrite = store_path + "__rewrite"
+    rewrite = rewrite_path(store_path)
     fps.write.mode("overwrite").parquet(f"{rewrite}/batch_id={int(into_epoch)}")
     n = spark.read.parquet(f"{rewrite}/batch_id={int(into_epoch)}").count()
-    fs, jvm = _store_fs(spark, store_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    _fs_rename(fs, P(store_path), P(store_path + "__old"))
-    _fs_rename(fs, P(rewrite), P(store_path))
-    fs.delete(P(store_path + "__old"), True)
+    swap_in(spark, store_path)
     return {"fingerprints": n, "inputs": len(inputs), "compacted": True}
 
 
@@ -2008,12 +1970,12 @@ def compact_near_store(spark, store_path: str, into_epoch: int = 0) -> dict:
     true signature-set size, so the map-side probe scan cost stops
     growing with epoch count."""
     store_path = store_path.rstrip("/")
-    _recover_store_swap(spark, store_path)
+    recover_swap(spark, store_path)
     sig_in = _store_inputs(spark, f"{store_path}/sigs")
     band_in = _store_inputs(spark, f"{store_path}/bands")
     if not sig_in and not band_in:
         return {"signatures": 0, "band_rows": 0, "inputs": 0, "compacted": False}
-    rewrite = store_path + "__rewrite"
+    rewrite = rewrite_path(store_path)
     sigs = spark.read.parquet(*sig_in).dropDuplicates(["_fp"])
     sigs.write.mode("overwrite").parquet(
         f"{rewrite}/sigs/batch_id={int(into_epoch)}"
@@ -2026,11 +1988,7 @@ def compact_near_store(spark, store_path: str, into_epoch: int = 0) -> dict:
     _write_bands_partitioned(bands, f"{rewrite}/bands/batch_id={int(into_epoch)}")
     n_sig = spark.read.parquet(f"{rewrite}/sigs/batch_id={int(into_epoch)}").count()
     n_band = spark.read.parquet(f"{rewrite}/bands/batch_id={int(into_epoch)}").count()
-    fs, jvm = _store_fs(spark, store_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    _fs_rename(fs, P(store_path), P(store_path + "__old"))
-    _fs_rename(fs, P(rewrite), P(store_path))
-    fs.delete(P(store_path + "__old"), True)
+    swap_in(spark, store_path)
     return {
         "signatures": n_sig,
         "band_rows": n_band,

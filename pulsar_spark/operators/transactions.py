@@ -17,13 +17,13 @@ coordinator surface for the batch API.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pulsar_spark.durable import read_json, write_atomic
 
 OPEN, COMMITTED, ABORTED = "OPEN", "COMMITTED", "ABORTED"
 
@@ -41,19 +41,13 @@ class TransactionCoordinator:
     path: str
 
     def _load(self) -> dict[str, dict]:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as fh:
-            return json.load(fh)
+        return read_json(self.path, {})
 
     def _save(self, state: dict[str, dict]) -> None:
         # atomic rename: the status flip IS the durable commit point
         # for v5 transactions (sources/scalable_txn.py), so a torn
         # write here would tear the commit itself
-        from pulsar_spark.sources.cursors import atomic_write_json
-
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        atomic_write_json(self.path, state)
+        write_atomic(self.path, state)
 
     def begin(self, timeout_s: float = 60.0) -> int:
         state = self._load()

@@ -23,12 +23,13 @@ schema before append.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from pulsar_spark.durable import read_json, write_atomic
 
 STRATEGIES = {
     "ALWAYS_INCOMPATIBLE",
@@ -81,11 +82,7 @@ class SchemaRegistry:
         return os.path.join(self.path, f"{safe}.json")
 
     def versions(self, topic: str) -> list[StructType]:
-        f = self._file(topic)
-        if not os.path.exists(f):
-            return []
-        with open(f) as fh:
-            return [StructType.fromJson(j) for j in json.load(fh)]
+        return [StructType.fromJson(j) for j in read_json(self._file(topic), [])]
 
     def latest(self, topic: str) -> tuple[int, StructType] | None:
         vs = self.versions(topic)
@@ -122,9 +119,7 @@ class SchemaRegistry:
             if problems:
                 raise IncompatibleSchemaError("; ".join(problems))
         versions.append(schema)
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._file(topic), "w") as fh:
-            json.dump([v.jsonValue() for v in versions], fh)
+        write_atomic(self._file(topic), [v.jsonValue() for v in versions])
         return len(versions) - 1
 
     @staticmethod

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_spark.durable import read_json, write_atomic
+
 
 @dataclass(frozen=True)
 class SegmentLoadStats:
@@ -349,32 +351,25 @@ def report_if_changed(
     aging; rewriting on every tick would starve merges. The baseline is
     re-seeded from the stored record (not reset) after an ownership
     move, for the same reason. Returns True iff a write happened."""
-    import json
     import os
 
-    d = os.path.join(topic_path, _LOAD_DIR)
-    path = os.path.join(d, f"{int(segment_id)}.json")
-    if os.path.exists(path):
-        with open(path) as fh:
-            v = json.load(fh)
+    path = os.path.join(topic_path, _LOAD_DIR, f"{int(segment_id)}.json")
+    v = read_json(path)
+    if v is not None:
         last = SegmentLoadStats(
             v["msg_rate_in"], v["bytes_rate_in"], v["msg_rate_out"], v["bytes_rate_out"]
         )
         if not is_material_change(last, current, threshold):
             return False
-    os.makedirs(d, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "msg_rate_in": current.msg_rate_in,
-                "bytes_rate_in": current.bytes_rate_in,
-                "msg_rate_out": current.msg_rate_out,
-                "bytes_rate_out": current.bytes_rate_out,
-            },
-            fh,
-        )
-    os.replace(tmp, path)
+    write_atomic(
+        path,
+        {
+            "msg_rate_in": current.msg_rate_in,
+            "bytes_rate_in": current.bytes_rate_in,
+            "msg_rate_out": current.msg_rate_out,
+            "bytes_rate_out": current.bytes_rate_out,
+        },
+    )
     return True
 
 
@@ -382,7 +377,6 @@ def load_samples(topic_path: str) -> dict[int, SegmentLoadSample]:
     """Read every stored load record plus its last-modified time — the
     controller leader's input to ``auto_scale_decide`` (the record
     store's Stat mtime is the 'cold since' clock)."""
-    import json
     import os
 
     d = os.path.join(topic_path, _LOAD_DIR)
@@ -393,8 +387,7 @@ def load_samples(topic_path: str) -> dict[int, SegmentLoadSample]:
         if not name.endswith(".json"):
             continue
         path = os.path.join(d, name)
-        with open(path) as fh:
-            v = json.load(fh)
+        v = read_json(path)
         out[int(name[:-5])] = SegmentLoadSample(
             SegmentLoadStats(
                 v["msg_rate_in"],
@@ -417,14 +410,9 @@ def load_autoscale_state(topic_path: str) -> dict:
     within one evaluator call (ScalableTopicController.java — the
     evaluator itself is pure; the controller owns the clocks). Returns
     {"last_split_at_ms": int|None, "last_merge_at_ms": int|None}."""
-    import json
     import os
 
-    path = os.path.join(topic_path, _STATE_FILE)
-    if not os.path.exists(path):
-        return {"last_split_at_ms": None, "last_merge_at_ms": None}
-    with open(path) as fh:
-        v = json.load(fh)
+    v = read_json(os.path.join(topic_path, _STATE_FILE), {})
     return {
         "last_split_at_ms": v.get("last_split_at_ms"),
         "last_merge_at_ms": v.get("last_merge_at_ms"),
@@ -454,18 +442,13 @@ def seed_cooldowns_from_layout(meta: dict) -> dict:
 def record_autoscale_action(topic_path: str, kind: str, now_ms: int) -> None:
     """Persist the action timestamp after an applied split/merge so the
     next tick's ``auto_scale_decide`` sees the cooldown clock."""
-    import json
     import os
 
     if kind not in ("split", "merge"):
         raise ValueError(f"kind must be split|merge, got {kind!r}")
     state = load_autoscale_state(topic_path)
     state[f"last_{kind}_at_ms"] = int(now_ms)
-    path = os.path.join(topic_path, _STATE_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, path)
+    write_atomic(os.path.join(topic_path, _STATE_FILE), state)
 
 
 def autoscale_tick(

@@ -10,15 +10,15 @@ as ``{partition: first_unconsumed_offset}``. Replicated subscriptions
 SUBSCRIPTION_UPDATE markers; ordinary consumers advance them by
 acknowledging.
 
-Same durability contract as the scalable registry: temp file +
-``os.replace`` so a crash mid-write never tears the JSON, single
-admin-writer assumption at file granularity.
+Same durability contract as the scalable registry: every write goes
+through ``durable.write_atomic``, so a crash mid-write never tears the
+JSON; single admin-writer assumption at file granularity.
 """
 from __future__ import annotations
 
-import json
 import os
-import tempfile
+
+from pulsar_spark.durable import read_json, write_atomic
 
 _CURSORS = "_cursors.json"
 
@@ -28,41 +28,11 @@ def _path(topic_path: str) -> str:
 
 
 def _read(topic_path: str) -> dict:
-    p = _path(topic_path)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def atomic_write_json(path: str, obj: dict) -> None:
-    """Temp file + ``os.replace`` in the destination directory, the
-    shared durable-sidecar write: readers never see torn JSON, the
-    file's existing permissions are preserved (mkstemp creates 0600),
-    and the descriptor is owned by the file object from the first
-    line so every failure path closes it."""
-    d = os.path.dirname(path) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(
-        prefix="_" + os.path.basename(path) + "_", suffix=".tmp", dir=d
-    )
-    try:
-        with os.fdopen(fd, "w") as fh:
-            try:
-                mode = os.stat(path).st_mode & 0o777
-            except FileNotFoundError:
-                mode = 0o644
-            os.fchmod(fh.fileno(), mode)
-            json.dump(obj, fh, indent=1, sort_keys=True)
-        os.replace(tmp, path)
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+    return read_json(_path(topic_path), {})
 
 
 def _write(topic_path: str, subs: dict) -> None:
-    atomic_write_json(_path(topic_path), subs)
+    write_atomic(_path(topic_path), subs)
 
 
 def create_subscription(

@@ -20,6 +20,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_spark.durable import read_json, recover_swap, rewrite_path, swap_in, write_atomic
+
 _SOURCES: dict[str, Callable[..., DataFrame]] = {}
 _SINKS: dict[str, Callable[..., Any]] = {}
 
@@ -156,13 +158,7 @@ class BatchSourceRunner:
         self.ledger_path = ledger_path
 
     def _committed(self) -> list[str]:
-        import json
-        import os
-
-        if not os.path.exists(self.ledger_path):
-            return []
-        with open(self.ledger_path) as fh:
-            return json.load(fh)
+        return read_json(self.ledger_path, [])
 
     def trigger(self, spark: SparkSession, count_rows: bool = False) -> dict[str, int]:
         """Run one discovery cycle; returns counts for observability.
@@ -171,15 +167,11 @@ class BatchSourceRunner:
         read of the batch purely for observability, off by default so
         the ingest path stays one pass (``-1`` when disabled).
 
-        The ledger commit is atomic (temp file + ``os.replace``): a
-        crash mid-commit leaves the previous ledger intact, so the
-        worst case is re-reading the current batch (the documented
-        at-least-once contract), never a corrupt ledger or a re-ingest
-        of history.
+        The ledger commit is ``durable.write_atomic``: a crash
+        mid-commit leaves the previous ledger intact, so the worst case
+        is re-reading the current batch (the documented at-least-once
+        contract), never a corrupt ledger or a re-ingest of history.
         """
-        import json
-        import os
-
         committed = self._committed()
         tasks = [t for t in self.discover() if t not in set(committed)]
         if not tasks:
@@ -187,11 +179,7 @@ class BatchSourceRunner:
         df = self.read_tasks(spark, tasks)
         n = df.count() if count_rows else -1
         self.sink(df)
-        os.makedirs(os.path.dirname(self.ledger_path) or ".", exist_ok=True)
-        tmp = self.ledger_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(committed + tasks, fh)
-        os.replace(tmp, self.ledger_path)
+        write_atomic(self.ledger_path, committed + tasks)
         return {"discovered": len(tasks), "ingested_rows": n}
 
 
@@ -252,22 +240,17 @@ def kv_sink(path: str, key_col: str = "key", order_col: str = "offset"):
     store already holds.
 
     Scale shape: one hash agg over batch + existing store keyed by
-    ``key_col`` (max_by on ``order_col``), rewritten atomically via a
-    staging dir — the same two-phase pattern as compaction's storage
-    rewrite. The store stays O(distinct keys), not O(writes).
+    ``key_col`` (max_by on ``order_col``), rewritten beside the store
+    and installed with ``durable.swap_in``. The store stays
+    O(distinct keys), not O(writes).
     """
     import os
-    import shutil
 
     def write(df: DataFrame) -> None:
         spark = df.sparkSession
-        old = path.rstrip("/") + "__old"
-        # Recover an interrupted swap FIRST: a crash between the two
-        # renames below leaves the store only under __old; restoring it
-        # before merging means no committed write is ever lost (same
-        # two-rename recovery discipline as tiered-storage offload).
-        if not os.path.isdir(path) and os.path.isdir(old):
-            os.rename(old, path)
+        # Recover an interrupted swap FIRST, so no committed write is
+        # ever lost and no stale __old is in the swap's way.
+        recover_swap(spark, path)
         value_cols = [c for c in df.columns if c != key_col]
         merged = df
         # Only merge when data files exist: a zero-row write leaves a
@@ -281,13 +264,8 @@ def kv_sink(path: str, key_col: str = "key", order_col: str = "offset"):
             .agg(F.max_by(F.struct(*value_cols), F.col(order_col)).alias("_v"))
             .select(key_col, "_v.*")
         )
-        staging = path.rstrip("/") + "__staging"
-        latest.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+        latest.write.mode("overwrite").parquet(rewrite_path(path))
+        swap_in(spark, path)
 
     return write
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pulsar_spark.sources.cursors import atomic_write_json
+from pulsar_spark.durable import read_json, write_atomic
 
 _POLICIES = "_policies.json"
 
@@ -57,13 +57,7 @@ def _path(dir_path: str) -> str:
 
 
 def get_policies(dir_path: str) -> dict:
-    import json
-
-    p = _path(dir_path)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as fh:
-        return json.load(fh)
+    return read_json(_path(dir_path), {})
 
 
 def set_policy(dir_path: str, key: str, value) -> None:
@@ -73,7 +67,7 @@ def set_policy(dir_path: str, key: str, value) -> None:
         )
     pol = get_policies(dir_path)
     pol[key] = value
-    atomic_write_json(_path(dir_path), pol)
+    write_atomic(_path(dir_path), pol)
 
 
 def remove_policy(dir_path: str, key: str) -> bool:
@@ -81,7 +75,7 @@ def remove_policy(dir_path: str, key: str) -> bool:
     if key not in pol:
         return False
     del pol[key]
-    atomic_write_json(_path(dir_path), pol)
+    write_atomic(_path(dir_path), pol)
     return True
 
 

@@ -42,11 +42,12 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from pulsar_spark.durable import read_json, write_atomic
 
 MIN_HASH = 0x0000
 MAX_HASH = 0xFFFF
@@ -67,18 +68,15 @@ def _now_ms() -> int:
 
 
 def _write_meta(topic_path: str, meta: dict) -> None:
-    os.makedirs(topic_path, exist_ok=True)
-    with open(os.path.join(topic_path, _META), "w") as fh:
-        json.dump(meta, fh, indent=1)
+    write_atomic(os.path.join(topic_path, _META), meta)
 
 
 def scalable_metadata(topic_path: str) -> dict:
     """ScalableTopics.getMetadata analog."""
-    f = os.path.join(topic_path, _META)
-    if not os.path.exists(f):
+    meta = read_json(os.path.join(topic_path, _META))
+    if meta is None:
         raise ValueError(f"not a scalable topic (no {_META}): {topic_path}")
-    with open(f) as fh:
-        return json.load(fh)
+    return meta
 
 
 def create_scalable_topic(
@@ -767,23 +765,17 @@ _SUBS = "_subscriptions.json"
 
 
 def _read_subscriptions(topic_path: str) -> dict:
-    f = os.path.join(topic_path, _SUBS)
-    if not os.path.exists(f):
-        return {}
-    with open(f) as fh:
-        return json.load(fh)
+    return read_json(os.path.join(topic_path, _SUBS), {})
 
 
 def _write_subscriptions(topic_path: str, subs: dict) -> None:
-    """Atomic registry rewrite: temp file in the topic dir +
-    ``os.replace`` so a crash mid-write can never corrupt the durable
-    ack store (this file carries every subscription's persisted
-    cursor). Single-writer assumption as in the reference's
-    metadata-store compare-and-set — concurrent admin writers are
-    last-writer-wins at file granularity, never torn JSON."""
-    from pulsar_spark.sources.cursors import atomic_write_json
-
-    atomic_write_json(os.path.join(topic_path, _SUBS), subs)
+    """Registry rewrite through ``durable.write_atomic``, so a crash
+    mid-write can never corrupt the durable ack store (this file
+    carries every subscription's persisted cursor). Single-writer
+    assumption as in the reference's metadata-store compare-and-set —
+    concurrent admin writers are last-writer-wins at file granularity,
+    never torn JSON."""
+    write_atomic(os.path.join(topic_path, _SUBS), subs)
 
 
 def create_subscription(

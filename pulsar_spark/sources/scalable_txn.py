@@ -358,11 +358,11 @@ def materialize_transactions(
     staged any produce or ack. Returns counts for observability."""
     import os
 
-    from pulsar_spark.sources.tiered import _recover_swap, copy_sidecars
+    from pulsar_spark.durable import recover_swap, rewrite_path, swap_in
+    from pulsar_spark.sources.tiered import copy_sidecars
 
-    # finish/roll back an interrupted previous swap FIRST (same
-    # two-rename invariants as the tiered offload)
-    _recover_swap(topic_path)
+    # finish/roll back an interrupted previous swap FIRST
+    recover_swap(spark, topic_path)
     state = coordinator._load()
 
     def _touches_here(rec: dict) -> bool:
@@ -423,17 +423,12 @@ def materialize_transactions(
                         F.lit(None).cast("bigint"),
                     ).otherwise(F.col("txn_id")),
                 )
-            tmp = topic_path.rstrip("/") + "__rewrite"
-            old = topic_path.rstrip("/") + "__old"
+            tmp = rewrite_path(topic_path)
             kept.repartition(part_col).write.mode("overwrite").partitionBy(
                 part_col
             ).parquet(tmp)
             copy_sidecars(topic_path, tmp)
-            import shutil
-
-            os.rename(topic_path, old)
-            os.rename(tmp, topic_path)
-            shutil.rmtree(old)
+            swap_in(spark, topic_path)
     # every finalized record ticks THIS topic off (records not touching
     # this topic tick off nothing and only drop when their list is
     # explicitly empty — acks-only txns)
@@ -519,10 +514,10 @@ def read_from_checkpoint_committed(
         read_from_checkpoint,
         segment_high_watermarks,
     )
-    from pulsar_spark.sources.tiered import _recover_swap
+    from pulsar_spark.durable import recover_swap
 
     if not os.path.isdir(topic_path):
-        _recover_swap(topic_path, cleanup=False)  # torn materialize swap
+        recover_swap(spark, topic_path, cleanup=False)  # torn materialize swap
     if not (
         os.path.isdir(topic_path)
         and any(n.startswith("segment=") for n in os.listdir(topic_path))

@@ -20,6 +20,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_spark.durable import recover_swap, rewrite_path, swap_in
+
 
 def offload_partitions(
     spark: SparkSession,
@@ -45,15 +47,15 @@ def offload_partitions(
       accumulate in cold (the reference cleans partial offloads by
       ledger UUID via OffloadUtils.cleanupOffloaded; the anti-join is
       the storage-level equivalent).
-    - The swap is two renames (hot -> hot__old, rewrite -> hot) plus a
-      cleanup rmtree, so the hot tier is readable under one of the two
-      names at every instant; ``_recover_swap`` (run on entry here and
-      by ``tiered_view``) completes or rolls back an interrupted swap.
+    - The swap is ``durable.swap_in``: the hot tier is readable under
+      one of its names at every instant, and ``durable.recover_swap``
+      (run on entry here and by ``tiered_view``) completes or rolls
+      back an interrupted swap.
 
     The ``_topic.json`` metadata sidecar is copied into the rewrite dir
     before the swap so topic identity survives.
     """
-    _recover_swap(hot_path)
+    recover_swap(spark, hot_path)
     hot = spark.read.parquet(hot_path)
     cutoff = F.lit(cutoff_ts).cast("timestamp")
     cold_rows = hot.where(F.col(time_col) < cutoff)
@@ -63,8 +65,7 @@ def offload_partitions(
     if n_cold == 0:
         return {"offloaded": 0, "hot": keep_rows.count()}
 
-    tmp = hot_path.rstrip("/") + "__rewrite"
-    old = hot_path.rstrip("/") + "__old"
+    tmp = rewrite_path(hot_path)
     keep_rows.repartition("partition").write.mode("overwrite").partitionBy("partition").parquet(tmp)
     copy_sidecars(hot_path, tmp)
     # Idempotent cold append: a prior run may have appended these rows
@@ -83,9 +84,7 @@ def offload_partitions(
     cold_rows.repartition("partition").write.mode("append").partitionBy("partition").parquet(
         cold_path
     )
-    os.rename(hot_path, old)
-    os.rename(tmp, hot_path)
-    shutil.rmtree(old)
+    swap_in(spark, hot_path)
     return {"offloaded": n_cold, "hot": spark.read.parquet(hot_path).count()}
 
 
@@ -117,40 +116,13 @@ def copy_sidecars(src_dir: str, dst_dir: str) -> None:
                 shutil.copy2(src, os.path.join(dst_dir, name))
 
 
-def _recover_swap(hot_path: str, cleanup: bool = True) -> None:
-    """Complete or roll back an interrupted offload directory swap.
-
-    Invariants after the two-rename protocol: the hot data is always
-    fully present under ``hot_path``, ``hot_path + '__old'`` or
-    ``hot_path + '__rewrite'``. Cold rows are appended BEFORE the swap
-    begins, so completing the swap forward (preferring the rewrite dir)
-    is always correct; rolling back to ``__old`` is only needed when the
-    rewrite dir is absent.
-
-    ``cleanup=False`` (the read path) skips the ``__old`` rmtree — a
-    reader only renames when the hot dir is otherwise unreadable, and
-    never deletes. Single-writer assumption as in the reference: one
-    offloader per topic at a time (concurrent offloads of the same topic
-    are the caller's responsibility to serialize).
-    """
-    tmp = hot_path.rstrip("/") + "__rewrite"
-    old = hot_path.rstrip("/") + "__old"
-    if not os.path.exists(hot_path):
-        if os.path.exists(tmp):
-            os.rename(tmp, hot_path)  # crash between the two renames
-        elif os.path.exists(old):
-            os.rename(old, hot_path)  # defensive: rewrite lost, roll back
-    if cleanup and os.path.exists(hot_path) and os.path.exists(old):
-        shutil.rmtree(old)  # swap done, cleanup didn't run
-
-
 def tiered_view(spark: SparkSession, hot_path: str, cold_path: str) -> DataFrame:
     """Read-through union of hot + cold tiers (time predicates prune
     whole tiers via partition/file statistics). Reads repair an
     interrupted swap only when the hot dir is otherwise unreadable, and
     never delete anything (no storage mutation on the happy path)."""
     if not os.path.exists(hot_path):
-        _recover_swap(hot_path, cleanup=False)
+        recover_swap(spark, hot_path, cleanup=False)
     hot = spark.read.parquet(hot_path)
     try:
         cold = spark.read.parquet(cold_path)

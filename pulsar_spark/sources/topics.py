@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_spark.durable import read_json, write_atomic
+
 
 class BacklogQuotaExceededError(RuntimeError):
     """ProducerBlockedQuotaExceededException analog: the topic's stored
@@ -47,14 +49,7 @@ def _producer_lock_path(topic_path: str) -> str:
 
 def producer_lock(topic_path: str) -> dict | None:
     """The topic's exclusive-producer registration, or None."""
-    import json
-    import os
-
-    p = _producer_lock_path(topic_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
+    return read_json(_producer_lock_path(topic_path))
 
 
 from contextlib import contextmanager
@@ -80,16 +75,7 @@ def _lock_guard(topic_path: str):
 
 
 def _write_producer_lock(topic_path: str, record: dict) -> None:
-    import json
-    import os
-
-    path = _producer_lock_path(topic_path)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(record, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)  # atomic: readers never see a torn record
+    write_atomic(_producer_lock_path(topic_path), record)
 
 
 def acquire_producer(
@@ -616,10 +602,7 @@ def produce(
                 properties=preserved_meta.get("properties"),
             )
         if preserved_lock is not None:
-            import json as _json
-
-            with open(_producer_lock_path(topic_path), "w") as fh:
-                _json.dump(preserved_lock, fh)
+            _write_producer_lock(topic_path, preserved_lock)
 
 
 def _read_topic_if_present(
@@ -767,13 +750,10 @@ def create_topic(
     ``produce`` reads the partition count from here when the caller
     doesn't pass one, so every writer routes over the same key space.
     """
-    import json
     import os
 
-    os.makedirs(topic_path, exist_ok=True)
     meta = {"num_partitions": int(num_partitions), "properties": properties or {}}
-    with open(os.path.join(topic_path, "_topic.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_atomic(os.path.join(topic_path, "_topic.json"), meta)
 
 
 def update_partitions(topic_path: str, num_partitions: int) -> None:
@@ -803,14 +783,9 @@ def update_partitions(topic_path: str, num_partitions: int) -> None:
 
 def topic_metadata(topic_path: str) -> dict | None:
     """Read the topic's metadata sidecar, or None for an ad-hoc topic."""
-    import json
     import os
 
-    f = os.path.join(topic_path, "_topic.json")
-    if not os.path.exists(f):
-        return None
-    with open(f) as fh:
-        return json.load(fh)
+    return read_json(os.path.join(topic_path, "_topic.json"))
 
 
 def truncate_topic(topic_path: str) -> None:

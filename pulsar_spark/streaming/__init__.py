@@ -5,6 +5,7 @@ from pulsar_spark.streaming.subscribe import (
     subscribe_scalable_pattern,
     subscribe_typed,
     subscribe_assigned,
+    await_drain,
     run_to_end,
 )
 from pulsar_spark.streaming.tableview import table_view_stream, table_view_merge_sink
@@ -26,6 +27,7 @@ __all__ = [
     "subscribe_scalable_pattern",
     "subscribe_typed",
     "subscribe_assigned",
+    "await_drain",
     "run_to_end",
     "table_view_stream",
     "table_view_merge_sink",

@@ -11,9 +11,10 @@ this operator (SURVEY.md §4 custom item 2).
 
 applyInPandasWithState keyed by topic partition: state holds the
 pending rows (columnar arrays, bounded by the delay horizon);
-each invocation releases everything due at processing time `now` and
-re-arms a processing-time timeout so release happens even when no new
-input arrives — exactly the reference tracker's scheduled tick.
+each invocation releases everything due at processing time `now`. On
+the wall clock it re-arms a processing-time timeout so release happens
+even when no new input arrives — exactly the reference tracker's
+scheduled tick.
 """
 
 from __future__ import annotations
@@ -41,6 +42,15 @@ def delayed_release_stream(
     """Release messages whose ``deliver_at`` has passed; hold the rest
     in state. ``now_us`` pins "now" for deterministic tests; production
     leaves it None (wall clock per micro-batch).
+
+    A pinned clock means no timeout: a held row can never come due, so
+    re-arming would only run empty batches, and an AvailableNow query
+    would never end. On the wall clock the operator keeps a
+    processing-time timeout armed while rows are held, so each held
+    row is released by a later tick: the query keeps running no-data
+    batches until the last held row comes due. Run it with a
+    processing-time trigger (``trigger(processingTime=...)``), not
+    AvailableNow.
 
     The output stream contains ONLY delayed messages (deliver_at IS NOT
     NULL) as they come due. Immediate messages never enter this operator
@@ -87,13 +97,17 @@ def delayed_release_stream(
             yield out[OUT_COLS]
 
         state.update((p_off, p_key, p_eid, p_dus))
-        if p_off:
+        if p_off and now_us is None:
             state.setTimeoutDuration(tick_ms)
 
     delayed = messages_stream.where(F.col("deliver_at").isNotNull()).select(
         "partition", "offset", "key", "event_id", "deliver_at"
     )
-    released = delayed.groupBy("partition").applyInPandasWithState(
-        fn, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.ProcessingTimeTimeout
+    timeout = (
+        GroupStateTimeout.ProcessingTimeTimeout
+        if now_us is None
+        else GroupStateTimeout.NoTimeout
     )
-    return released
+    return delayed.groupBy("partition").applyInPandasWithState(
+        fn, OUT_SCHEMA, STATE_SCHEMA, "append", timeout
+    )

@@ -66,6 +66,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pulsar_spark.durable import read_json, write_atomic
+from pulsar_spark.streaming.subscribe import await_drain
+
 #: PulsarMarkers.proto:29-32
 MARKER_SNAPSHOT_REQUEST = 10
 MARKER_SNAPSHOT_RESPONSE = 11
@@ -259,23 +262,20 @@ class ReplicatedSubscriptionsController:
         return os.path.join(self.topic_path, _STATE)
 
     def _load(self) -> dict:
-        p = self._state_path()
-        if not os.path.exists(p):
-            return {
+        return read_json(
+            self._state_path(),
+            {
                 "marker_watermarks": {},
                 "pending": {},
                 "snapshots": [],
                 "next_seq": 1,
                 "last_completed_ms": 0,
                 "last_snapshot_watermark": None,
-            }
-        with open(p) as fh:
-            return json.load(fh)
+            },
+        )
 
     def _save(self, st: dict) -> None:
-        from pulsar_spark.sources.cursors import atomic_write_json
-
-        atomic_write_json(self._state_path(), st)
+        write_atomic(self._state_path(), st)
 
     # ------------------------------------------------------- snapshotting
 
@@ -431,7 +431,7 @@ class ReplicatedSubscriptionsController:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        await_drain(q)
         return processed[0]
 
     def _received_snapshot_request(self, payload: dict) -> None:
@@ -634,11 +634,16 @@ class ReplicatedSubscriptionsController:
             for cluster, dst in sorted(self.remotes.items())
         }
         out: dict[str, int] = {}
-        for cluster, q in legs.items():
-            q.awaitTermination()
-            out[cluster] = sum(
-                int(p["numInputRows"]) for p in (q.recentProgress or [])
-            )
+        try:
+            for cluster, q in legs.items():
+                await_drain(q)
+                out[cluster] = sum(
+                    int(p["numInputRows"]) for p in (q.recentProgress or [])
+                )
+        except BaseException:
+            for q in legs.values():  # a timed-out leg must not strand the rest
+                q.stop()
+            raise
         return out
 
     def tick(self, now_ms: int | None = None) -> dict:

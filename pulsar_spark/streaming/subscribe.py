@@ -230,13 +230,24 @@ def subscribe_assigned(
     return stream
 
 
+def await_drain(q, timeout_s: float = 300):
+    """Wait for a bounded (AvailableNow) query to finish and return it.
+    On timeout the query is stopped and ``TimeoutError`` raised: a
+    caller must never read a sink that is still being written."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within {timeout_s} s"
+        )
+    return q
+
+
 def run_to_end(stream_writer, timeout_s: int = 120):
     """Run a streaming query with Trigger.AvailableNow to the current
     end of the topic and wait (the reference's ``reachedEndOfTopic``
-    bounded-consume pattern). Returns the finished query."""
-    q = stream_writer.trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    return q
+    bounded-consume pattern). Returns the finished query; raises
+    ``TimeoutError`` (query stopped) when it is not done in time."""
+    return await_drain(stream_writer.trigger(availableNow=True).start(), timeout_s)
 
 
 def subscribe_multi(

@@ -581,7 +581,7 @@ class TestCrashRecovery:
         assert subscription_checkpoint(d, "sub").offsets == {}
 
     def test_commit_flip_is_atomic_rename(self, tmp_path):
-        """The status flip goes through atomic_write_json — no torn
+        """The status flip goes through durable.write_atomic — no torn
         registry even if the writer dies mid-write."""
         coord = _coord(tmp_path)
         t = new_transaction(coord)

@@ -240,6 +240,36 @@ class TestDelayedRelease:
         assert out.where(F.col("deliver_at") > F.lit(now)).count() == 0
 
 
+class TestAwaitDrain:
+    """A bounded drain never hands back a query that is still running."""
+
+    class _Query:
+        name, id = "q", "id"
+
+        def __init__(self, finished):
+            self.finished, self.stopped = finished, False
+
+        def awaitTermination(self, timeout_s):
+            return self.finished
+
+        def stop(self):
+            self.stopped = True
+
+    def test_finished_query_is_returned(self):
+        from pulsar_spark.streaming import await_drain
+
+        q = self._Query(True)
+        assert await_drain(q, 1) is q and not q.stopped
+
+    def test_timeout_stops_and_raises(self):
+        from pulsar_spark.streaming import await_drain
+
+        q = self._Query(False)
+        with pytest.raises(TimeoutError):
+            await_drain(q, 1)
+        assert q.stopped
+
+
 class TestWatermarkCountWindows:
     def test_event_time_ordered_dense_windows(self, spark, topic_dir):
         from pulsar_spark.streaming import subscribe, watermark_count_window_stream
