@@ -15,13 +15,18 @@ summation-order differences between engines cannot flip the value hash.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_spark import fixtures
 from pulsar_spark.envelope import events_to_messages, messages_oracle_cte
-from pulsar_spark.sources import fan_out, load_table
+from pulsar_spark.sources import load_table
 
 # Fixed logical times so results are deterministic (events span Jan 2024).
 TTL_CUTOFF = "2024-01-15 00:00:00"
@@ -36,6 +41,22 @@ DLQ_MOD = 97  # event_id % 97 == 0 -> processing failure
 
 def _messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_to_messages(load_table(spark, sf_dir, "events"))
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh scratch dir for a query's topics, stores and indexes.
+
+    Builders return lazy frames over these dirs, so nothing is removed
+    before the process exits: every dir sits under one per-process
+    root, which an ``atexit`` hook deletes."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="psentry_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -205,8 +226,6 @@ def _q_scalable_split_stats(spark, sf_dir):
     # halving the range), produce the rest, and report per-segment
     # range/state/counts — the oracle re-derives the same layout and
     # routing from the HashRange spec alone.
-    import tempfile
-
     from pulsar_spark.sources import (
         create_scalable_topic,
         produce_scalable,
@@ -216,7 +235,7 @@ def _q_scalable_split_stats(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="psscal_") + "/topic"
+    d = _scratch("psscal_") + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     produce_scalable(
         payload.where(F.col("event_id") % 2 == 0), d, key_col="k", deterministic_mod=True
@@ -241,8 +260,6 @@ def _q_scalable_txn_visibility(spark, sf_dir):
     # exactly non-txn + committed rows, and the subscription cursor
     # must sit exactly at the staged vector — both halves of the atomic
     # commit in one result.
-    import tempfile
-
     from pulsar_spark.sources import (
         V5TransactionCoordinator,
         create_scalable_topic,
@@ -259,7 +276,7 @@ def _q_scalable_txn_visibility(spark, sf_dir):
         F.col("o_orderkey").alias("okey"),
         "o_totalprice",
     )
-    base = tempfile.mkdtemp(prefix="pstxn5_")
+    base = _scratch("pstxn5_")
     d = base + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     coord = V5TransactionCoordinator(base + "/coord.json")
@@ -312,8 +329,6 @@ def _q_scalable_ack_holes(spark, sf_dir):
     # EXACTLY the unacked rows — invariant to within-segment offset
     # order, hence closed-form for the oracle — and the backlog count
     # must agree (holes are delivered, not backlog).
-    import tempfile
-
     from pulsar_spark.sources import (
         acknowledge_individual,
         create_scalable_topic,
@@ -329,7 +344,7 @@ def _q_scalable_ack_holes(spark, sf_dir):
         F.col("o_orderkey").alias("okey"),
         "o_totalprice",
     )
-    base = tempfile.mkdtemp(prefix="psholes_")
+    base = _scratch("psholes_")
     d = base + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     produce_scalable(orders, d, key_col="k", deterministic_mod=True)
@@ -371,8 +386,6 @@ def _q_scalable_multi_topic_stats(spark, sf_dir):
     # taken, batch2 produced — the resumed read must deliver exactly
     # batch2 across both topics (the oracle counts only batch2 rows, so
     # any dup/loss in the combined vector is a hash mismatch).
-    import tempfile
-
     from pulsar_spark.sources import (
         MultiCheckpoint,
         create_scalable_topic,
@@ -382,7 +395,7 @@ def _q_scalable_multi_topic_stats(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    ns = tempfile.mkdtemp(prefix="psmulti_")
+    ns = _scratch("psmulti_")
     create_scalable_topic(f"{ns}/orders", num_initial_segments=2)
     create_scalable_topic(f"{ns}/clicks", num_initial_segments=4)
     b1 = payload.where(F.col("event_id") % 3 == 0)
@@ -438,8 +451,6 @@ def _q_segment_load_rates(spark, sf_dir):
     # host speed — a wall-clock 60 s window would nondeterministically
     # age rows out between produce and scan on a loaded host. 2^32 keeps
     # count/window exact in binary, so the oracle matches bit-for-bit.
-    import tempfile
-
     from pulsar_spark.sources import (
         create_scalable_topic,
         produce_scalable,
@@ -448,7 +459,7 @@ def _q_segment_load_rates(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="psload_") + "/topic"
+    d = _scratch("psload_") + "/topic"
     create_scalable_topic(d, num_initial_segments=4)
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     rates = segment_load_stats(
@@ -493,8 +504,6 @@ def _q_consumer_assignment(spark, sf_dir):
     # advanced past everything -> all 6 segments in (range, id) order.
     # msg_count ties the assignment to the stored log (closed-form from
     # the deterministic slot arithmetic, so DuckDB recomputes it).
-    import tempfile
-
     from pulsar_spark.sources import SubscriptionCoordinator, checkpoint_drain_checker
     from pulsar_spark.sources.scalable import (
         Checkpoint,
@@ -507,7 +516,7 @@ def _q_consumer_assignment(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="pscoord_") + "/topic"
+    d = _scratch("pscoord_") + "/topic"
     create_scalable_topic(d, num_initial_segments=4)
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     split_segment(d, 1)  # seals 1, children 4 + 5
@@ -565,8 +574,6 @@ def _q_segment_gc(spark, sf_dir):
     # one sidecar write, backing storage deleted. Output: the surviving
     # layout joined with stored counts; the oracle recomputes both from
     # the slot arithmetic and the verbatim post-prune layout.
-    import tempfile
-
     from pulsar_spark.sources import gc_sealed_segments, segment_high_watermarks
     from pulsar_spark.sources.scalable import (
         Checkpoint,
@@ -579,7 +586,7 @@ def _q_segment_gc(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="psgc_") + "/topic"
+    d = _scratch("psgc_") + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     split_segment(d, 0)  # seals 0 -> children 2 [0,16383], 3 [16384,32767]
@@ -638,12 +645,10 @@ def _q_consumer_assignment_steps(spark, sf_dir):
     # whole segment (exclusive); shared segments hand every owner the
     # full boundary list. The oracle is the javadoc-verbatim state
     # table (independent spec, not derived from the engine).
-    import tempfile
-
     from pulsar_spark.sources import SubscriptionCoordinator, assign_entry_buckets
     from pulsar_spark.sources.scalable import create_scalable_topic, scalable_metadata
 
-    d = tempfile.mkdtemp(prefix="psbkt_") + "/topic"
+    d = _scratch("psbkt_") + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     assign_entry_buckets(d, budget=8)  # 4 buckets per segment
     coord = SubscriptionCoordinator("sub", d, layout=scalable_metadata(d))
@@ -1353,8 +1358,12 @@ def _q_txn_pending_acks(spark, sf_dir):
     )
 
 
-_CRYPTO_KEYS = None
-_CRYPTO_KEYS2 = None
+@functools.cache
+def _crypto_keys(i: int):
+    """RSA keypair ``i`` (0: alice, 1: bob), generated once per process."""
+    from pulsar_spark.crypto import generate_rsa_keypair
+
+    return generate_rsa_keypair()
 
 
 def _q_crypto_roundtrip(spark, sf_dir):
@@ -1362,12 +1371,9 @@ def _q_crypto_roundtrip(spark, sf_dir):
     # wrapped RSA-OAEP per recipient) -> decrypt -> aggregate. The
     # oracle aggregates raw events: equality proves the crypto layer is
     # lossless and authenticated (GCM tag verifies on every row).
-    global _CRYPTO_KEYS
-    from pulsar_spark.crypto import decrypt_messages, encrypt_messages, generate_rsa_keypair
+    from pulsar_spark.crypto import decrypt_messages, encrypt_messages
 
-    if _CRYPTO_KEYS is None:
-        _CRYPTO_KEYS = generate_rsa_keypair()
-    priv, pub = _CRYPTO_KEYS
+    priv, pub = _crypto_keys(0)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.encode(F.col("props"), "utf-8").alias("payload")
     )
@@ -1395,21 +1401,10 @@ def _q_crypto_failure_actions(spark, sf_dir):
     # closed form the oracle checks); a second DISCARD-mode pass must
     # keep exactly the alice rows. FAIL stays the raising default
     # (tested in tests/test_functions.py).
-    global _CRYPTO_KEYS, _CRYPTO_KEYS2
-    from pulsar_spark.crypto import (
-        CONSUME,
-        DISCARD,
-        decrypt_messages,
-        encrypt_messages,
-        generate_rsa_keypair,
-    )
+    from pulsar_spark.crypto import CONSUME, DISCARD, decrypt_messages, encrypt_messages
 
-    if _CRYPTO_KEYS is None:
-        _CRYPTO_KEYS = generate_rsa_keypair()
-    if _CRYPTO_KEYS2 is None:
-        _CRYPTO_KEYS2 = generate_rsa_keypair()
-    a_priv, a_pub = _CRYPTO_KEYS
-    _b_priv, b_pub = _CRYPTO_KEYS2
+    a_priv, a_pub = _crypto_keys(0)
+    _b_priv, b_pub = _crypto_keys(1)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.encode(F.col("props"), "utf-8").alias("payload")
     )
@@ -1487,43 +1482,7 @@ def _q_media_decode_real(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import io
-        import wave
-
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.multimodal import _encode_bmp
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 3 == 0:
-                    n = 1000 + (d % 50) * 8  # divisible by 8: exact ms
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as wf:
-                        wf.setnchannels(1)
-                        wf.setsampwidth(2)
-                        wf.setframerate(8000)
-                        wf.writeframes(b"\x00\x00" * n)
-                    rows.append((d, "audio", "wav", buf.getvalue()))
-                else:
-                    w, h = 4 + d % 5, 3 + d % 4
-                    px = np.full(
-                        (h, w, 3), (d % 256, d * 7 % 256, d * 13 % 256), np.uint8
-                    )
-                    rows.append((d, "image", "bmp", _encode_bmp(px)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.real), strict=True)
     return out.select(
         "media_id",
         "modality",
@@ -1551,30 +1510,7 @@ def _q_media_decode_png(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.multimodal import _encode_png
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 3 + d % 6, 2 + d % 5
-                px = np.full(
-                    (h, w, 3), (d * 3 % 256, d * 5 % 256, d * 11 % 256), np.uint8
-                )
-                rows.append((d, "image", "png", _encode_png(px)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.png), strict=True)
     return out.select(
         "media_id",
         "width",
@@ -1601,60 +1537,7 @@ def _q_media_decode_jpeg(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.jpeg import FLAT_QUANT, encode_jpeg
-
-        # Per-task payload memo (r12, guide §4.2/§4.5): each branch's
-        # payload is fully determined by (branch, v, w, h) — ~512
-        # combos per branch — so repeated combos reuse the encoded
-        # bytes (immutable) instead of re-running the ~0.3-0.8 ms
-        # pure-Python JPEG encode per document.
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 3 == 0:  # grayscale + restart markers
-                    v, w, h = d * 29 % 256, 8 * (1 + d % 2), 8
-                elif d % 3 == 1:  # achromatic RGB through the 4:2:0 path
-                    v, w, h = d * 31 % 256, 16, 16 * (1 + d % 2)
-                else:  # plain grayscale 4:4:4
-                    v = d * 37 % 256
-                    w, h = 8 * (1 + d % 7 % 3), 8 * (1 + d % 5 % 2)
-                key = (d % 3, v, w, h)
-                payload = payload_cache.get(key)
-                if payload is None:
-                    if d % 3 == 0:
-                        payload = encode_jpeg(
-                            np.full((h, w), v, np.uint8),
-                            quant=FLAT_QUANT,
-                            restart_interval=2,
-                        )
-                    elif d % 3 == 1:
-                        payload = encode_jpeg(
-                            np.full((h, w, 3), v, np.uint8),
-                            quant=FLAT_QUANT,
-                            subsampling="420",
-                        )
-                    else:
-                        payload = encode_jpeg(
-                            np.full((h, w), v, np.uint8), quant=FLAT_QUANT
-                        )
-                    payload_cache[key] = payload
-                rows.append((d, "image", "jpeg", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.jpeg), strict=True)
     return out.select(
         "media_id",
         "width",
@@ -1679,239 +1562,13 @@ def _q_media_decode_progressive(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.jpeg import FLAT_QUANT, encode_jpeg_progressive
-
-        # Per-task payload memo (r12): same contract as the baseline
-        # JPEG fixture above — (branch, v, w, h) fully determines the
-        # encoded bytes, so repeated combos skip the progressive encode.
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 3 == 0:  # grayscale, deep DC successive approximation
-                    v, w, h = d * 29 % 256, 8 * (1 + d % 2), 8
-                elif d % 3 == 1:  # achromatic RGB, DC+AC refinement, 2 bands
-                    v, w, h = d * 31 % 256, 16, 8
-                else:  # grayscale, spectral selection only, 3 bands
-                    v = d * 37 % 256
-                    w, h = 8 * (1 + d % 7 % 3), 8 * (1 + d % 5 % 2)
-                key = (d % 3, v, w, h)
-                payload = payload_cache.get(key)
-                if payload is None:
-                    if d % 3 == 0:
-                        payload = encode_jpeg_progressive(
-                            np.full((h, w), v, np.uint8),
-                            quant=FLAT_QUANT, dc_al=3, ac_al=0,
-                        )
-                    elif d % 3 == 1:
-                        payload = encode_jpeg_progressive(
-                            np.full((h, w, 3), v, np.uint8),
-                            quant=FLAT_QUANT, dc_al=1, ac_al=1,
-                            bands=((1, 5), (6, 63)),
-                        )
-                    else:
-                        payload = encode_jpeg_progressive(
-                            np.full((h, w), v, np.uint8),
-                            quant=FLAT_QUANT, dc_al=0, ac_al=0,
-                            bands=((1, 2), (3, 20), (21, 63)),
-                        )
-                    payload_cache[key] = payload
-                rows.append((d, "image", "jpeg", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.progressive), strict=True)
     return out.select(
         "media_id",
         "width",
         "height",
         F.round(F.element_at("feature", 1) * 765).cast("int").alias("rgb_sum"),
         "decode_ok",
-    )
-
-
-def _phash_media_fixture(spark, sf_dir, perturb: bool, n_patterns: int = 37):
-    """Deterministic perceptual-hash fixture: every doc gets a
-    pseudo-random 32x32 RGB BMP whose CONTENT depends only on
-    ``doc_id % n_patterns`` (distinct patterns measured >= 18 bits of
-    pairwise pHash distance), so same-pattern docs are perceptual
-    duplicates. With ``perturb`` each copy is additionally
-    brightness-shifted and single-pixel-tweaked per doc_id (measured
-    pHash distance <= 2 from its pattern) — the re-encode/perturbation
-    regime the banded near-dup join must recover."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.multimodal import _encode_bmp
-
-        # Per-task base-pattern memo (r12, guide §4.2/§4.5): the base
-        # pixel block depends only on doc_id % n_patterns, so each task
-        # mints each pattern once instead of re-running the RandomState
-        # init + randint draw per document (measured 221 -> 77 µs/doc,
-        # byte-identical payloads — the perturbation below never
-        # mutates the cached base: astype/clip allocate fresh arrays).
-        # Bounded by the task's distinct patterns (3 KB each).
-        base_cache: dict = {}
-
-        def base_px(g: int):
-            px = base_cache.get(g)
-            if px is None:
-                px = np.random.RandomState(g).randint(
-                    0, 256, (32, 32, 3)
-                ).astype(np.uint8)
-                base_cache[g] = px
-            return px
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                px = base_px(d % n_patterns)
-                if perturb:
-                    px = np.clip(
-                        px.astype(np.int16) + (d // n_patterns) % 3, 0, 255
-                    ).astype(np.uint8)
-                    px[d % 32, d * 7 % 32] = np.clip(
-                        px[d % 32, d * 7 % 32].astype(np.int16) + 3, 0, 255
-                    ).astype(np.uint8)
-                rows.append((d, "image", "bmp", _encode_bmp(px)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    return fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-
-
-def _wav_media_fixture(spark, sf_dir, perturb: bool):
-    """Audio fingerprint fixture: every doc gets a two-tone + seeded-
-    noise PCM wav whose SIGNAL depends only on ``doc_id % 23`` (23
-    patterns, measured pairwise fingerprint distance >= 20). With
-    ``perturb`` each copy is amplitude-scaled per doc (the fingerprint
-    is sign-of-difference, so uniform scaling is an EXACT invariance)
-    plus small per-doc additive noise (measured distance <= 3).
-
-    (All media fixture builders route ``docs`` through ``fan_out`` —
-    r12: the fixture encode + downstream decode/hash passes are pure
-    Python per row, and the small-SF documents table is a single
-    parquet file, i.e. ONE scan partition — without the fan-out the
-    entire media pipeline ran on one core. Values depend only on
-    doc_id, so the repartition cannot change any result.)"""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import io
-        import wave
-
-        import numpy as np
-        import pandas as pd
-
-        # Per-task base-signal memo (r12, guide §4.2/§4.5): the 8000-
-        # sample two-tone + seeded-noise base depends only on d % 23 —
-        # mint each of the 23 patterns once per task (~0.6 ms/doc saved,
-        # byte-identical: every perturbation/PCM step below allocates a
-        # fresh array, the cached base is never mutated).
-        base_cache: dict = {}
-
-        def base_sig(g: int):
-            sig = base_cache.get(g)
-            if sig is None:
-                rs = np.random.RandomState(g)
-                t = np.arange(8000) / 8000.0
-                f1, f2 = 100 + g * 37 % 1700, 300 + g * 91 % 2900
-                sig = (
-                    np.sin(2 * np.pi * f1 * t)
-                    + 0.5 * np.sin(2 * np.pi * f2 * t)
-                    + 0.2 * rs.randn(8000)
-                )
-                base_cache[g] = sig
-            return sig
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sig = base_sig(d % 23)
-                if perturb:
-                    sig = sig * (0.3 + 0.1 * ((d // 23) % 5))
-                    sig = sig + 0.01 * np.random.RandomState(10000 + d).randn(8000)
-                pcm = np.clip(sig / 4.0, -1, 1)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(8000)
-                    wf.writeframes(
-                        (pcm * 32767).astype("<i2").tobytes()
-                    )
-                rows.append((d, "audio", "wav", buf.getvalue()))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    return fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-
-
-def _avi_media_fixture(spark, sf_dir):
-    """MJPEG-AVI fixture: every 7th doc gets an AVI of ``4 + doc_id%3``
-    solid 24x16 frames, frame f's gray = (37*(doc_id%5) + 29*f) % 256 —
-    frame count, dims, and sampled indexes are all formula-derived so
-    the oracle can pin them without decoding; the decoded pixel means
-    are pinned (with JPEG-DC tolerance) in pytest."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") % 7 == 0
-    )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.video import encode_avi_mjpeg
-
-        # Per-task payload memo (r12, guide §4.2/§4.5): the encoded AVI
-        # depends only on (d % 5, d % 3) — 15 distinct payloads — so
-        # each task runs the per-frame JPEG encode once per combo
-        # instead of per document (measured ~4.3 ms/doc; payloads are
-        # immutable bytes, reuse is byte-identical by construction).
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                key = (d % 5, d % 3)
-                payload = payload_cache.get(key)
-                if payload is None:
-                    frames = [
-                        np.full((16, 24, 3), (37 * (d % 5) + 29 * f) % 256, np.uint8)
-                        for f in range(4 + d % 3)
-                    ]
-                    payload = encode_avi_mjpeg(frames, fps=5)
-                    payload_cache[key] = payload
-                rows.append((d, "video", "avi", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    return fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
     )
 
 
@@ -1924,55 +1581,12 @@ def _q_media_video_frames(spark, sf_dir):
     # deterministic pixel means are tolerance-pinned in pytest.
     from pulsar_spark.functions.video import sample_video_frames
 
-    return sample_video_frames(
-        _avi_media_fixture(spark, sf_dir), every_n=2
-    ).select("media_id", "frame_idx", "n_frames", "width", "height")
-
-
-def _adpcm_media_fixture(spark, sf_dir):
-    """IMA-ADPCM WAV fixture: every 11th doc, signal pattern =
-    doc_id % 13 (two-tone int16, 4000 samples at 8 kHz) — identical
-    patterns encode to identical bytes, so decoded-PCM grouping must
-    reproduce doc_id % 13 exactly."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") % 11 == 0
+        F.col("doc_id") % 7 == 0
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.video import encode_wav_ima
-
-        # Per-task payload memo (r12, guide §4.2/§4.5): the encoded
-        # ADPCM WAV depends only on d % 13 — 13 distinct payloads — so
-        # each task pays the signal mint + IMA encode once per pattern
-        # instead of per document (measured ~7.6 ms/doc; immutable
-        # bytes, reuse is byte-identical by construction).
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                g = d % 13
-                payload = payload_cache.get(g)
-                if payload is None:
-                    t = np.arange(4000)
-                    sig = (
-                        9000 * np.sin(2 * np.pi * (120 + 53 * g) * t / 8000)
-                        + 5000 * np.sin(2 * np.pi * (350 + 97 * g) * t / 8000)
-                    ).astype(np.int64)
-                    payload = encode_wav_ima(sig, 8000)
-                    payload_cache[g] = payload
-                rows.append((d, "audio", "wav", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    return fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
+    return sample_video_frames(
+        fixtures.media_frame(docs, fixtures.avi), every_n=2
+    ).select("media_id", "frame_idx", "n_frames", "width", "height")
 
 
 def _q_media_audio_adpcm(spark, sf_dir):
@@ -1983,7 +1597,10 @@ def _q_media_audio_adpcm(spark, sf_dir):
     # fact-trim splits groups and mismatches.
     from pulsar_spark.functions.video import adpcm_exact_groups
 
-    return adpcm_exact_groups(_adpcm_media_fixture(spark, sf_dir)).select(
+    docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
+        F.col("doc_id") % 11 == 0
+    )
+    return adpcm_exact_groups(fixtures.media_frame(docs, fixtures.adpcm)).select(
         "media_id", "canonical_id", "group_size", "is_dup", "n_samples", "rate"
     )
 
@@ -2000,7 +1617,9 @@ def _q_media_audio_fingerprint(spark, sf_dir):
         phash_exact_groups,
     )
 
-    hashed = audio_fingerprint_media(_wav_media_fixture(spark, sf_dir, perturb=False))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    wav = functools.partial(fixtures.wav, perturb=False)
+    hashed = audio_fingerprint_media(fixtures.media_frame(docs, wav))
     return phash_exact_groups(hashed, hash_col="afp")
 
 
@@ -2014,7 +1633,9 @@ def _q_media_audio_near_dups(spark, sf_dir):
         phash_near_dups,
     )
 
-    hashed = audio_fingerprint_media(_wav_media_fixture(spark, sf_dir, perturb=True))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    wav = functools.partial(fixtures.wav, perturb=True)
+    hashed = audio_fingerprint_media(fixtures.media_frame(docs, wav))
     return phash_near_dups(hashed, max_hamming=6, hash_col="afp")
 
 
@@ -2033,61 +1654,7 @@ def _q_media_decode_gif(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.gif import encode_gif
-
-        # Per-task payload memo (r12, guide §4.2/§4.5): each branch's
-        # payload is fully determined by the planted parameters — most
-        # valuable for the 255-color-ramp branch, whose payload is the
-        # SAME for every third document yet cost ~5 ms of pure-Python
-        # LZW encode per row (immutable bytes, reuse byte-identical).
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 3 == 0:  # animated: 3 solid frames, GCE delays
-                    key = (0, d * 17 % 254, d % 3, d % 4, d % 10)
-                elif d % 3 == 1:  # interlaced vertical ramp (odd height)
-                    key = (1, d % 3, d % 4, d % 200)
-                else:  # 255-color ramp: LZW width growth past 9 bits
-                    key = (2,)
-                payload = payload_cache.get(key)
-                if payload is None:
-                    if d % 3 == 0:
-                        v = d * 17 % 254
-                        frames = [
-                            np.full((2 + d % 3, 3 + d % 4, 3), v + f, np.uint8)
-                            for f in range(3)
-                        ]
-                        delays = [d % 10 + 1, d % 10 + 2, d % 10 + 3]
-                        payload = encode_gif(frames, delays_cs=delays)
-                    elif d % 3 == 1:
-                        h, w = 5 + 2 * (d % 3), 3 + d % 4
-                        ramp = (d % 200 + np.arange(h, dtype=np.int32)) % 256
-                        px = np.repeat(
-                            ramp.astype(np.uint8)[:, None, None], 3, axis=2
-                        ).repeat(w, axis=1)
-                        payload = encode_gif(px, interlace=True)
-                    else:
-                        row = np.arange(255, dtype=np.uint8)
-                        px = np.stack([row] * 3, axis=-1)[None].repeat(16, axis=0)
-                        payload = encode_gif(px)
-                    payload_cache[key] = payload
-                rows.append((d, "image", "gif", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.gif), strict=True)
     return out.select(
         "media_id",
         "width",
@@ -2113,40 +1680,7 @@ def _q_media_decode_g711(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.audio import (
-            alaw_decode_table,
-            encode_wav_g711,
-            ulaw_decode_table,
-        )
-
-        ut, at = ulaw_decode_table(), alaw_decode_table()
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 400 + (d % 50) * 8  # divisible by 8: exact ms at 8 kHz
-                # 16..127 keeps the value nonzero and positive in both laws
-                c = 16 + d % 112
-                if d % 2 == 0:
-                    pcm = np.full(n, ut[(~c) & 0xFF], np.int16)
-                    payload = encode_wav_g711(pcm, 8000, "ulaw")
-                else:
-                    pcm = np.full(n, at[(0x80 | c) ^ 0x55], np.int16)
-                    payload = encode_wav_g711(pcm, 8000, "alaw")
-                rows.append((d, "audio", "wav", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.g711), strict=True)
     return out.select(
         "media_id",
         "duration_ms",
@@ -2172,47 +1706,7 @@ def _q_media_decode_flac(spark, sf_dir):
     from pulsar_spark.functions.multimodal import decode_media
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.flac import encode_flac
-
-        # Per-task payload memo (r12, guide §4.2/§4.5): the payload is
-        # fully determined by (branch, n, amp), so repeated combos skip
-        # the ~1.3 ms pure-Python rice/FIXED-prediction encode
-        # (immutable bytes, reuse byte-identical).
-        payload_cache: dict = {}
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 800 + (d % 40) * 8
-                amp = 100 + (d % 1000) * 30
-                key = (d % 3, n, amp)
-                payload = payload_cache.get(key)
-                if payload is None:
-                    if d % 3 == 0:
-                        sig = np.full(n, amp, np.int16)
-                    elif d % 3 == 1:
-                        sig = (np.arange(n) % amp).astype(np.int16)
-                    else:
-                        sig = np.where(np.arange(n) % 2 == 0, amp, -amp).astype(
-                            np.int16
-                        )
-                    payload = encode_flac(sig, 8000)
-                    payload_cache[key] = payload
-                rows.append((d, "audio", "flac", payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
-    out = decode_media(media, strict=True)
+    out = decode_media(fixtures.media_frame(docs, fixtures.flac), strict=True)
     return out.select(
         "media_id",
         "duration_ms",
@@ -2237,11 +1731,10 @@ def _q_warc_ingest(spark, sf_dir):
     # fetch_date in closed form — the extracted text value-hash-matches
     # 'Doc & é <id>\n' + documents.text exactly.
     import os
-    import tempfile
 
     from pulsar_spark.sources.warc import warc_to_documents
 
-    tmp = tempfile.mkdtemp(prefix="pswarc_")
+    tmp = _scratch("pswarc_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -2327,32 +1820,7 @@ def _q_media_y4m_frames(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 5 == 0
     )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pulsar_spark.functions.video import encode_y4m
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    np.full((6 + d % 2, 8 + d % 3), (31 * (d % 6) + 41 * f) % 256,
-                            np.uint8)
-                    for f in range(2 + d % 4)
-                ]
-                rows.append(
-                    (d, "video", "y4m", encode_y4m(frames, 10, 1, "mono"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "modality", "codec", "payload"]
-            )
-
-    media = fan_out(docs).mapInPandas(
-        enc, "media_id bigint, modality string, codec string, payload binary"
-    )
+    media = fixtures.media_frame(docs, fixtures.y4m)
     return sample_video_frames(media, every_n=2).select(
         "media_id", "frame_idx", "n_frames", "width", "height", "mean_luma_q"
     )
@@ -2369,13 +1837,11 @@ def _q_geo_replication_stream(spark, sf_dir):
     # src_offset) coordinates, and DRAINING TWICE must converge (the
     # per-source-partition watermark dedup). Output = the remote
     # topic's replicated rows keyed by source coordinates.
-    import tempfile
-
     from pulsar_spark.sources.topics import write_topic
     from pulsar_spark.streaming import await_drain
     from pulsar_spark.streaming.replication import replicate_stream
 
-    base = tempfile.mkdtemp(prefix="psgeo_")
+    base = _scratch("psgeo_")
     src, dst = base + "/east", base + "/west"
     m = _messages(spark, sf_dir).withColumn(
         "replicated_from", F.when(F.col("event_id") % 7 == 0, F.lit("west"))
@@ -2403,8 +1869,6 @@ def _q_replicated_subscription_failover(spark, sf_dir):
     # oracle pins that planted set (the cursor vector itself is
     # routing-hash-valued, like the phash oracle pins planted groups
     # rather than hash values).
-    import tempfile
-
     from pulsar_spark.envelope import watermark_lookup
     from pulsar_spark.sources import cursors
     from pulsar_spark.sources.topics import create_topic, produce, write_topic
@@ -2413,7 +1877,7 @@ def _q_replicated_subscription_failover(spark, sf_dir):
         high_watermarks,
     )
 
-    base = tempfile.mkdtemp(prefix="psrsub_")
+    base = _scratch("psrsub_")
     east, west = base + "/east", base + "/west"
     write_topic(_messages(spark, sf_dir), east, repartition=False)
 
@@ -2491,13 +1955,11 @@ def _q_policy_offload(spark, sf_dir):
     # stored cold_path, and the result pins all three views — hot tier,
     # cold tier, and the read-through union — per partition. The oracle
     # re-derives the split from publish_time alone.
-    import tempfile
-
     from pulsar_spark.sources import policies as P
     from pulsar_spark.sources.tiered import tiered_view
     from pulsar_spark.sources.topics import write_topic
 
-    base = tempfile.mkdtemp(prefix="psoff_")
+    base = _scratch("psoff_")
     t, cold = base + "/events", base + "/events_cold"
     write_topic(_messages(spark, sf_dir), t, repartition=False)
     P.set_policy(t, "offload_policies", {"cold_path": cold, "age_seconds": 432_000})
@@ -2540,12 +2002,10 @@ def _q_policy_enforcement(spark, sf_dir):
     # apply_policies re-derives every maintenance plan from the files;
     # the oracle pins equivalence with the parameterized
     # ttl_expiry / retention_budget / compaction_due operators.
-    import tempfile
-
     from pulsar_spark.sources import policies as P
     from pulsar_spark.sources.topics import write_topic
 
-    base = tempfile.mkdtemp(prefix="pspol_")
+    base = _scratch("pspol_")
     t = base + "/events"
     write_topic(_messages(spark, sf_dir), t, repartition=False)
     P.set_policy(base, "message_ttl_seconds", 432_000)  # now - 5 d == TTL_CUTOFF
@@ -2645,7 +2105,9 @@ def _q_media_phash_near_dups(spark, sf_dir):
     # nondeterminism in the decode->DCT->median pipeline is a mismatch.
     from pulsar_spark.functions.phash import perceptual_hash_media, phash_exact_groups
 
-    hashed = perceptual_hash_media(_phash_media_fixture(spark, sf_dir, perturb=False))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    bmp = functools.partial(fixtures.phash, perturb=False)
+    hashed = perceptual_hash_media(fixtures.media_frame(docs, bmp))
     return phash_exact_groups(hashed)
 
 
@@ -2657,7 +2119,9 @@ def _q_media_phash_near_dups_banded(spark, sf_dir):
     # patterns sit >= 18 apart, so max_hamming=6 separates cleanly.
     from pulsar_spark.functions.phash import perceptual_hash_media, phash_near_dups
 
-    hashed = perceptual_hash_media(_phash_media_fixture(spark, sf_dir, perturb=True))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    bmp = functools.partial(fixtures.phash, perturb=True)
+    hashed = perceptual_hash_media(fixtures.media_frame(docs, bmp))
     return phash_near_dups(hashed, max_hamming=6)
 
 
@@ -2781,13 +2245,11 @@ def _q_streaming_curation(spark, sf_dir):
     # Rows-only by design (foreachBatch has no SQL analog); the
     # cross-batch no-dup and epoch-idempotence invariants are asserted
     # in tests/test_round7.py.
-    import tempfile
-
     from pulsar_spark.sources.topics import create_topic, produce
     from pulsar_spark.streaming import await_drain
     from pulsar_spark.streaming.curation import streaming_curate
 
-    base = tempfile.mkdtemp(prefix="pscur_")
+    base = _scratch("pscur_")
     topic = base + "/topic"
     create_topic(topic, 2)
     docs = load_table(spark, sf_dir, "documents").select(
@@ -2824,14 +2286,12 @@ def _q_doc_incremental_near_dedup(spark, sf_dir):
     # by design (LSH banding + signature-agreement verify have no SQL
     # analog); recall/idempotence/two-phase invariants are asserted in
     # tests/test_incremental_near.py.
-    import tempfile
-
     from pulsar_spark.functions.dedupe import (
         commit_near_fingerprints,
         incremental_near_dedup,
     )
 
-    store = tempfile.mkdtemp(prefix="psnear_") + "/store"
+    store = _scratch("psnear_") + "/store"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -2890,8 +2350,6 @@ def _q_subscription_lifecycle(spark, sf_dir):
     # vector): produce -> subA sees everything -> clear -> zero ->
     # produce again -> subA backlogs only the new rows while a fresh
     # subB sees both batches -> delete subA leaves subB intact.
-    import tempfile
-
     from pulsar_spark.sources import (
         clear_backlog,
         create_scalable_topic,
@@ -2904,7 +2362,7 @@ def _q_subscription_lifecycle(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="pssub_") + "/topic"
+    d = _scratch("pssub_") + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     assert create_subscription(d, "subA") is True
@@ -2940,8 +2398,6 @@ def _q_segment_subscription_lifecycle(spark, sf_dir):
     # full backlog -> clear seg0 only -> delete the slot (reverts to
     # the earliest default) -> clear both -> seek seg0 to 1970
     # (created-after arm, provably scan-free: spark=None).
-    import tempfile
-
     from pulsar_spark.sources import (
         clear_segment_subscription_backlog,
         create_scalable_topic,
@@ -2954,7 +2410,7 @@ def _q_segment_subscription_lifecycle(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     payload = events.selectExpr("CAST(user_id AS STRING) AS k", "event_id")
-    d = tempfile.mkdtemp(prefix="pssegsub_") + "/topic"
+    d = _scratch("pssegsub_") + "/topic"
     create_scalable_topic(d, num_initial_segments=2)
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     assert create_segment_subscription(d, 0, "s") is True
@@ -3302,12 +2758,10 @@ def _q_embedding_ivfpq_knn(spark, sf_dir):
     # quantizer trains with unrounded numpy means (the production
     # shape), so no closed-form SQL twin exists; recall/pruning are
     # asserted in TestIVFPQ.
-    import tempfile
-
     from pulsar_spark.functions.clustering import ivfpq_topk, ivfpq_write_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfpq_idx_")
+    path = _scratch("ivfpq_idx_")
     ivfpq_write_index(emb, path, dim=64, n_centroids=8, ivf_iters=2, m=4, codes=8)
     q = emb.orderBy("vec_id").first()["embedding"]
     return ivfpq_topk(spark, path, [float(x) for x in q], k=5, n_probe=4)
@@ -3321,15 +2775,13 @@ def _q_embedding_ivfpq_rerank(spark, sf_dir):
     # design (same unrounded-kmeans reason as embedding_ivfpq_knn);
     # recall-vs-exact and the broadcast plan are asserted in
     # TestIVFPQ.
-    import tempfile
-
     from pulsar_spark.functions.clustering import (
         ivfpq_topk_rerank,
         ivfpq_write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfpq_rr_")
+    path = _scratch("ivfpq_rr_")
     ivfpq_write_index(emb, path, dim=64, n_centroids=8, ivf_iters=2, m=4, codes=8)
     q = emb.orderBy("vec_id").first()["embedding"]
     return ivfpq_topk_rerank(
@@ -3775,13 +3227,11 @@ def _q_embedding_ivf_knn_quantized(spark, sf_dir):
     # with int8-quantized lists (storage-level partition pruning picks
     # the probed lists, quantization quarters the bytes per list), probe
     # auto-detects the store flavor
-    import tempfile
-
     from pulsar_spark.functions import ivf_topk_indexed, ivf_write_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = list(emb.where(F.col("vec_id") == 0).select("embedding").head()[0])
-    path = tempfile.mkdtemp(prefix="psivfq_") + "/ivf"
+    path = _scratch("psivfq_") + "/ivf"
     ivf_write_index(emb, path, dim=64, n_centroids=8, iters=2, quantize=True)
     return ivf_topk_indexed(spark, path, qvec, k=10, n_probe=4, exclude_id=0)
 
@@ -3871,12 +3321,10 @@ def _q_tiered_storage(spark, sf_dir):
     # LedgerOffloader analog: materialize the topic, offload rows older
     # than TTL_CUTOFF to the cold tier, then roll up each tier and the
     # read-through union view (hot + cold must reconstruct the topic).
-    import tempfile
-
     from pulsar_spark.sources import write_topic
     from pulsar_spark.sources.tiered import offload_partitions, tiered_view
 
-    tmp = tempfile.mkdtemp(prefix="pstier_")
+    tmp = _scratch("pstier_")
     hot, cold = f"{tmp}/hot", f"{tmp}/cold"
     write_topic(_messages(spark, sf_dir), hot)
     offload_partitions(spark, hot, cold, TTL_CUTOFF)
@@ -3996,8 +3444,6 @@ def _q_schema_auto_consume(spark, sf_dir):
     # SchemaRegistryServiceImpl): reader projects rows to the LATEST
     # registered version — v2 adds a nullable field the data doesn't
     # have (reads as null) on top of v1's subset.
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -4008,7 +3454,7 @@ def _q_schema_auto_consume(spark, sf_dir):
 
     from pulsar_spark.schema_registry import SchemaRegistry
 
-    reg = SchemaRegistry(tempfile.mkdtemp(prefix="psreg_"))
+    reg = SchemaRegistry(_scratch("psreg_"))
     v1 = StructType(
         [
             StructField("event_id", LongType(), False),

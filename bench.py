@@ -295,17 +295,18 @@ def main() -> None:
         # 135-others fixture. Extra (added round 7), not in
         # headline_total.
         def _x8():
-            import __spark_entry__ as _e
+            import functools
 
+            from pulsar_spark import fixtures
             from pulsar_spark.functions.phash import (
                 perceptual_hash_media,
                 phash_near_dups,
             )
 
             n_docs = docs.count()
-            patterns = max(37, n_docs // 10)
-            media = _e._phash_media_fixture(spark, sf_dir, perturb=True,
-                                            n_patterns=patterns)
+            bmp = functools.partial(fixtures.phash, perturb=True,
+                                    n_patterns=max(37, n_docs // 10))
+            media = fixtures.media_frame(docs.select("doc_id"), bmp)
             return phash_near_dups(perceptual_hash_media(media)).count()
 
         # clear_cache (r12): phash_near_dups persists its (id, hash)
@@ -322,61 +323,15 @@ def main() -> None:
         # through the strict real-kernel tier in one fused Arrow pass.
         # Extra (added round 8), not in headline_total.
         def _x9():
+            from pulsar_spark import fixtures
             from pulsar_spark.functions.multimodal import decode_media
 
-            ids = docs.select("doc_id").limit(2000)
-
-            def enc(batches):
-                import numpy as np
-                import pandas as pd
-
-                from pulsar_spark.functions.audio import encode_wav_g711
-                from pulsar_spark.functions.flac import encode_flac
-                from pulsar_spark.functions.gif import encode_gif
-                from pulsar_spark.functions.video import encode_y4m
-
-                for pdf in batches:
-                    rows = []
-                    for d in pdf["doc_id"]:
-                        d = int(d)
-                        if d % 4 == 0:
-                            frames = [
-                                np.full((16, 16, 3), (d + f * 7) % 256, np.uint8)
-                                for f in range(3)
-                            ]
-                            rows.append((d, "video", "gif", encode_gif(frames)))
-                        elif d % 4 == 1:
-                            pcm = np.full(2000, (d * 37) % 8000 - 4000, np.int16)
-                            rows.append(
-                                (d, "audio", "wav",
-                                 encode_wav_g711(pcm, 8000, "ulaw"))
-                            )
-                        elif d % 4 == 2:
-                            sig = ((np.arange(2000) * (1 + d % 7)) % 4096
-                                   - 2048).astype(np.int16)
-                            rows.append(
-                                (d, "audio", "flac", encode_flac(sig, 8000))
-                            )
-                        else:
-                            frames = [
-                                np.full((16, 16), (d + f * 11) % 256, np.uint8)
-                                for f in range(4)
-                            ]
-                            rows.append(
-                                (d, "video", "y4m",
-                                 encode_y4m(frames, 10, 1, "mono"))
-                            )
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["media_id", "modality", "codec", "payload"],
-                    )
-
-            import pandas as pd  # noqa: F401  (worker import warm)
-
-            media = ids.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-                enc,
-                "media_id bigint, modality string, codec string, payload binary",
+            # fan_out is a no-op above the limit's Exchange: without the
+            # explicit repartition the mint + decode run on one core.
+            ids = docs.select("doc_id").limit(2000).repartition(
+                spark.sparkContext.defaultParallelism
             )
+            media = fixtures.media_frame(ids, fixtures.av_mix)
             return decode_media(media, strict=True).where("decode_ok").count()
 
         timed("x9_media_av_decode", _x9, remeasure=True)

@@ -183,108 +183,3 @@ class TestUnpersistPin:
         _unpersist_pin(df)  # must not raise
         assert df.count() == 10
 
-
-class TestFixtureMintMemo:
-    """The r12 per-task payload/base memos in the media fixture
-    builders must be byte-identical to the straight-line per-document
-    mint they replaced (the oracle pins the decoded values; this pins
-    the BYTES, so an accidental cache-key collision or base-array
-    mutation cannot hide behind a decode-invariant)."""
-
-    @pytest.fixture(scope="class")
-    def sf_dir(self):
-        import os
-
-        return os.environ.get(
-            "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
-        )
-
-    def _payloads(self, df):
-        return {
-            int(r["media_id"]): bytes(r["payload"]) for r in df.collect()
-        }
-
-    def test_phash_fixture_bytes(self, spark, sf_dir):
-        import numpy as np
-
-        import __spark_entry__ as e
-        from pulsar_spark.functions.multimodal import _encode_bmp
-
-        got = self._payloads(
-            e._phash_media_fixture(spark, sf_dir, perturb=True, n_patterns=7)
-        )
-        assert len(got) > 7  # patterns repeat -> the memo actually hits
-        for d, payload in got.items():
-            px = np.random.RandomState(d % 7).randint(
-                0, 256, (32, 32, 3)
-            ).astype(np.uint8)
-            px = np.clip(px.astype(np.int16) + (d // 7) % 3, 0, 255).astype(
-                np.uint8
-            )
-            px[d % 32, d * 7 % 32] = np.clip(
-                px[d % 32, d * 7 % 32].astype(np.int16) + 3, 0, 255
-            ).astype(np.uint8)
-            assert payload == _encode_bmp(px), f"doc {d}"
-
-    def test_wav_fixture_bytes(self, spark, sf_dir):
-        import io
-        import wave
-
-        import numpy as np
-
-        import __spark_entry__ as e
-
-        got = self._payloads(e._wav_media_fixture(spark, sf_dir, perturb=True))
-        assert got
-        for d, payload in got.items():
-            g = d % 23
-            rs = np.random.RandomState(g)
-            t = np.arange(8000) / 8000.0
-            f1, f2 = 100 + g * 37 % 1700, 300 + g * 91 % 2900
-            sig = (
-                np.sin(2 * np.pi * f1 * t)
-                + 0.5 * np.sin(2 * np.pi * f2 * t)
-                + 0.2 * rs.randn(8000)
-            )
-            sig = sig * (0.3 + 0.1 * ((d // 23) % 5))
-            sig = sig + 0.01 * np.random.RandomState(10000 + d).randn(8000)
-            pcm = np.clip(sig / 4.0, -1, 1)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as wf:
-                wf.setnchannels(1)
-                wf.setsampwidth(2)
-                wf.setframerate(8000)
-                wf.writeframes((pcm * 32767).astype("<i2").tobytes())
-            assert payload == buf.getvalue(), f"doc {d}"
-
-    def test_avi_fixture_bytes(self, spark, sf_dir):
-        import numpy as np
-
-        import __spark_entry__ as e
-        from pulsar_spark.functions.video import encode_avi_mjpeg
-
-        got = self._payloads(e._avi_media_fixture(spark, sf_dir))
-        assert got  # every 7th doc
-        for d, payload in got.items():
-            frames = [
-                np.full((16, 24, 3), (37 * (d % 5) + 29 * f) % 256, np.uint8)
-                for f in range(4 + d % 3)
-            ]
-            assert payload == encode_avi_mjpeg(frames, fps=5), f"doc {d}"
-
-    def test_adpcm_fixture_bytes(self, spark, sf_dir):
-        import numpy as np
-
-        import __spark_entry__ as e
-        from pulsar_spark.functions.video import encode_wav_ima
-
-        got = self._payloads(e._adpcm_media_fixture(spark, sf_dir))
-        assert got  # every 11th doc
-        for d, payload in got.items():
-            g = d % 13
-            t = np.arange(4000)
-            sig = (
-                9000 * np.sin(2 * np.pi * (120 + 53 * g) * t / 8000)
-                + 5000 * np.sin(2 * np.pi * (350 + 97 * g) * t / 8000)
-            ).astype(np.int64)
-            assert payload == encode_wav_ima(sig, 8000), f"doc {d}"

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,14 +63,14 @@ class TestAvroCodec:
         # empty array and null both encode; [] round-trips as []
         assert got == [(1, "a", [1.0, 2.5]), (2, None, None), (3, "c", [])]
 
-    def test_registry_integration(self, spark):
+    def test_registry_integration(self, spark, tmp_path):
         from pulsar_spark.schema_codecs import avro_to_struct_schema, register_avro
         from pulsar_spark.schema_registry import (
             IncompatibleSchemaError,
             SchemaRegistry,
         )
 
-        reg = SchemaRegistry(tempfile.mkdtemp(prefix="psavro_"))
+        reg = SchemaRegistry(str(tmp_path))
         v1 = {
             "type": "record",
             "name": "E",

@@ -79,7 +79,8 @@ class TestStreamingTableView:
         from pulsar_spark.operators import table_view
         from pulsar_spark.streaming import run_to_end, subscribe, table_view_merge_sink
 
-        view_dir = tempfile.mkdtemp(prefix="ps_view_") + "/view"
+        scratch = tempfile.mkdtemp(prefix="ps_view_")
+        view_dir = scratch + "/view"
         try:
             run_to_end(
                 subscribe(spark, topic_dir, max_files_per_trigger=4).writeStream.foreachBatch(
@@ -91,7 +92,7 @@ class TestStreamingTableView:
             assert got.exceptAll(want).count() == 0
             assert want.exceptAll(got).count() == 0
         finally:
-            shutil.rmtree(view_dir, ignore_errors=True)
+            shutil.rmtree(scratch, ignore_errors=True)
 
 
 class TestStreamingDedup:

@@ -182,13 +182,17 @@ def main() -> None:
         # in Arrow batches over ~10x the sf0.1 clip fixture, then the
         # Hamming-banded join (dense pattern buckets hit the star
         # guard here by design — the timing is decode+hash-bound)
-        import __spark_entry__ as _e
+        import functools
+
+        from pulsar_spark import fixtures
         from pulsar_spark.functions.phash import (
             audio_fingerprint_media,
             phash_near_dups,
         )
 
-        media = _e._wav_media_fixture(spark, "/root/testdata/sf0.1", perturb=True)
+        media = fixtures.media_frame(
+            docs.select("doc_id"), functools.partial(fixtures.wav, perturb=True)
+        )
         bigmedia = (
             media.crossJoin(spark.range(doc_rep).withColumnRenamed("id", "rep"))
             .withColumn("media_id", F.col("media_id") + F.col("rep") * 10_000_000)
@@ -226,55 +230,9 @@ def main() -> None:
         from pulsar_spark.functions.video import sample_video_frames
 
         media_ids = bigdocs.select(
-            (F.col("doc_id") % 50_000).alias("media_id")
+            (F.col("doc_id") % 50_000).alias("doc_id")
         ).distinct()
-
-        def _enc_media(batches):
-            import numpy as np
-            import pandas as pd
-
-            from pulsar_spark.functions.audio import encode_wav_g711
-            from pulsar_spark.functions.flac import encode_flac
-            from pulsar_spark.functions.gif import encode_gif
-            from pulsar_spark.functions.video import encode_y4m
-
-            for pdf in batches:
-                rows = []
-                for d in pdf["media_id"]:
-                    d = int(d)
-                    if d % 4 == 0:
-                        frames = [
-                            np.full((16, 16, 3), (d + f * 7) % 256, np.uint8)
-                            for f in range(3)
-                        ]
-                        rows.append((d, "video", "gif", encode_gif(frames)))
-                    elif d % 4 == 1:
-                        pcm = np.full(2000, (d * 37) % 8000 - 4000, np.int16)
-                        rows.append(
-                            (d, "audio", "wav", encode_wav_g711(pcm, 8000, "ulaw"))
-                        )
-                    elif d % 4 == 2:
-                        sig = ((np.arange(2000) * (1 + d % 7)) % 4096
-                               - 2048).astype(np.int16)
-                        rows.append(
-                            (d, "audio", "flac", encode_flac(sig, 8000))
-                        )
-                    else:
-                        frames = [
-                            np.full((16, 16), (d + f * 11) % 256, np.uint8)
-                            for f in range(4)
-                        ]
-                        rows.append(
-                            (d, "video", "y4m", encode_y4m(frames, 10, 1, "mono"))
-                        )
-                yield pd.DataFrame(
-                    rows, columns=["media_id", "modality", "codec", "payload"]
-                )
-
-        bigav = media_ids.mapInPandas(
-            _enc_media,
-            "media_id bigint, modality string, codec string, payload binary",
-        ).persist()
+        bigav = fixtures.media_frame(media_ids, fixtures.av_mix).persist()
         nav = bigav.count()
         out["av_items"] = nav
         t0 = time.perf_counter()
