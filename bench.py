@@ -123,16 +123,9 @@ def main() -> None:
         # floor, and C2 keeps compiling into the ~10th full run). The
         # contract quantity is long-lived-cluster steady state, so warm
         # with the real shape until the curve flattens.
-        # write_tasks keyed to data volume (targets ~6.25k rows/task,
-        # capped at one per topic partition): each task holds several
-        # WHOLE partitions, so the on-disk layout stays one file per
-        # partition per append while the sub-second job pays half the
-        # task commits + schedules — measured 0.57 -> 0.52 s at sf0.1.
-        # At sf>=0.2 this resolves to the historical 32.
-        b1_tasks = max(1, min(32, n_events // 6250))
         for wi in range(4):
             produce(events, f"{tmp}/warm_{wi}", key_col="user_id",
-                    num_partitions=32, mode="append", write_tasks=b1_tasks)
+                    num_partitions=32, mode="append")
 
         # Steady-state: three full produce runs, keep the fastest.
         # Measured decay on a fresh JVM is ~1.6 -> 1.2 -> 1.0 -> 0.95s
@@ -150,7 +143,7 @@ def main() -> None:
             b1_seq[0] += 1
             t0 = time.perf_counter()
             produce(events, f"{tmp}/topic_p{b1_seq[0]}", key_col="user_id",
-                    num_partitions=32, mode="append", write_tasks=b1_tasks)
+                    num_partitions=32, mode="append")
             return time.perf_counter() - t0
 
         # min-of-SIX for the headline contract metric: on this shared

@@ -6,7 +6,7 @@ Scale design:
   row per distinct document.
 - MinHash: each shingle gets two base Murmur3 hashes JVM-side;
   permutation i applies the splitmix64 finalizer to
-  ``(h1<<32 | h2) + i*golden`` (``_perm_mins`` — a real independent
+  ``(h1<<32 | h2) + i*golden`` (``_perm_mins_batch`` — a real independent
   permutation family, vectorized in numpy), so the signature is
   ``num_perm`` cheap row-mins over one mixed matrix, not ``num_perm``
   separate string hashes. LSH banding then turns the
@@ -91,47 +91,30 @@ def shingles(text: Column, k: int = 3) -> Column:
 _BAND_MIX = np.int64(-7046029254386353131)  # golden-ratio odd constant, wraps in int64
 
 
-def _perm_mins(h1_arr, h2_arr, num_perm: int):
-    """(num_perm,) int64 MinHash signature from a document's per-shingle
-    base hashes, using a REAL independent permutation family.
-
-    Permutation i applies the splitmix64 finalizer (Steele et al. 2014,
-    public domain) to ``base + i * golden`` where ``base`` combines the
-    two 32-bit Murmur hashes into 64 bits. The finalizer's avalanche
-    makes every permutation's argmin an independent uniform draw over
-    the shingle set — the property the naive ``h1 + i*h2`` form LACKS:
-    with 32-bit inputs and i <= 63 that sum never wraps int64, so one
-    low-``h2`` shingle dominates the min for every i >= 2 and the
-    64-position signature collapses to a single Bernoulli trial
-    (measured 3% agreement on docs with true Jaccard 0.88). Agreement
-    of THESE signatures is the textbook unbiased Jaccard estimator
-    with stderr sqrt(J(1-J)/num_perm).
-    """
-    a = np.asarray(h1_arr, dtype=np.int64).astype(np.uint64)
-    b = np.asarray(h2_arr, dtype=np.int64).astype(np.uint64)
-    base = a << np.uint64(32) | (b & np.uint64(0xFFFFFFFF))
-    ii = np.arange(num_perm, dtype=np.uint64)[:, None]
-    with np.errstate(over="ignore"):
-        x = base[None, :] + ii * np.uint64(0x9E3779B97F4A7C15)
-        x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        x ^= x >> np.uint64(31)
-    return x.min(axis=1).astype(np.int64)
-
-
 def _perm_mins_batch(h1_list, h2_list, num_perm: int,
                      chunk_shingles: int = 1024):
     """(n_docs, num_perm) int64 MinHash signatures for a whole Arrow
-    batch of per-shingle hash arrays, in a handful of numpy sweeps.
+    batch of per-shingle hash arrays, using a REAL independent
+    permutation family, in a handful of numpy sweeps.
 
-    Arithmetic-identical to calling ``_perm_mins`` per document (same
-    splitmix64 permutation family, same uint64-domain min) — the change
-    is purely mechanical (r12, guide §4.2): the per-document Python
-    loop paid one numpy dispatch per doc per batch (~µs each, dominant
-    for short documents), while this concatenates every document's
-    shingle hashes once, runs ONE ``(num_perm, total_shingles)``
-    permutation sweep, and takes per-document minima with
-    ``np.minimum.reduceat`` over the document offsets. Documents too
+    Permutation i applies the splitmix64 finalizer (Steele et al. 2014,
+    public domain) to ``base + i * golden`` where ``base`` combines the
+    two 32-bit Murmur hashes of a shingle into 64 bits. The finalizer's
+    avalanche makes every permutation's argmin an independent uniform
+    draw over the shingle set — the property the naive ``h1 + i*h2``
+    form LACKS: with 32-bit inputs and i <= 63 that sum never wraps
+    int64, so one low-``h2`` shingle dominates the min for every i >= 2
+    and the 64-position signature collapses to a single Bernoulli trial
+    (measured 3% agreement on docs with true Jaccard 0.88). Agreement
+    of THESE signatures is the textbook unbiased Jaccard estimator with
+    stderr sqrt(J(1-J)/num_perm).
+
+    The batching is purely mechanical (r12, guide §4.2): a
+    per-document loop paid one numpy dispatch per doc per batch (~µs
+    each, dominant for short documents), while this concatenates every
+    document's shingle hashes once, runs ONE ``(num_perm,
+    total_shingles)`` permutation sweep, and takes per-document minima
+    with ``np.minimum.reduceat`` over the document offsets. Documents too
     short to shingle keep the all-zeros sentinel row. ``chunk_shingles``
     keeps the sweep matrix (``num_perm x chunk x 8`` bytes — 512 KB at
     the defaults) cache-resident: measured on sf0.1-shaped batches,
@@ -190,10 +173,10 @@ def minhash_signatures(
 
     MinHash with a REAL permutation family: two base Murmur3 hashes
     per shingle (computed JVM-side) combine to one 64-bit value;
-    permutation i = splitmix64(base + i*golden) (``_perm_mins``),
+    permutation i = splitmix64(base + i*golden) (``_perm_mins_batch``),
     signature element = min over shingles. Signature agreement is the
     unbiased Jaccard estimator (the naive ``h1 + i*h2`` combo is NOT:
-    see ``_perm_mins``).
+    see ``_perm_mins_batch``).
 
     The signature itself is a vectorized Arrow-batched pandas UDF over
     the two hash arrays: one cache-chunked ``(num_perm, n_shingles)``
@@ -880,7 +863,6 @@ def dedup_keep_representatives(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Corpus-level dedup: drop every document that belongs to a
     near-dup cluster except its smallest-id representative. Documents
@@ -894,8 +876,6 @@ def dedup_keep_representatives(
     demotes to a shuffled join when a near-dup-heavy corpus makes it
     O(corpus)) — exactly what the count guarded against, without the
     job. Interleaved A/B: 2.63 s with the count+hint vs 2.39 s AQE.
-    ``broadcast_threshold`` is retained for signature compatibility
-    but no longer consulted.
     """
     clusters = near_dup_clusters(pairs, id_a, id_b)
     losers = clusters.where(F.col("id") != F.col("cluster_id")).select(

@@ -143,13 +143,10 @@ def compact_topic_storage(
     partitioned write, scheduled off the hot path exactly like the
     reference's broker-triggered compaction.
     """
-    from pulsar_spark.sources.topics import read_topic, write_topic
+    from pulsar_spark.sources.topics import read_topic, stored_high_offsets, write_topic
 
     m = read_topic(spark, topic_path)
-    horizon = {
-        r["partition"]: r["mx"]
-        for r in m.groupBy("partition").agg(F.max("offset").alias("mx")).collect()
-    }
+    horizon = stored_high_offsets(m)
     # publish-order rewrites can pick the hash-agg two_phase plan (see
     # compact_publish_order); event-time order keeps max_by (its winner
     # key is a timestamp tuple, not pack-able into one long) — an

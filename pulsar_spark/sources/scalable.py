@@ -210,6 +210,15 @@ def _null_safe_segment(df, key_col, meta, keyless, deterministic_mod):
     return df.withColumn("segment", seg).drop(tmp)
 
 
+def _keyless_segment(segs: list[dict]):
+    """Keyless messages round-robin over the active segments
+    (SegmentRouter.routeRoundRobin) as a narrow interleave over Spark's
+    per-task monotonic id."""
+    idx = F.pmod(F.monotonically_increasing_id(), F.lit(len(segs))).cast("int")
+    ids = [s["segment_id"] for s in segs]
+    return F.create_map(*[F.lit(x) for i, sid in enumerate(ids) for x in (i, sid)])[idx]
+
+
 def produce_scalable(
     payload: DataFrame,
     topic_path: str,
@@ -221,16 +230,16 @@ def produce_scalable(
 ) -> None:
     """Append to a scalable topic: route each row to its active segment
     (keyed: hash-range; keyless: round-robin over active segments),
-    mint the envelope, continue per-segment offsets. Same single
-    topic read + window shape as the classic ``produce``."""
+    then the classic ``produce``'s log append over ``segment`` lanes:
+    envelope mint, per-segment offsets in send order, one stored-topic
+    read for the rebase."""
+    from pulsar_spark.sources.topics import _append_log
+
     meta = scalable_metadata(topic_path)
     segs = active_segments(meta)
     if not segs:
         raise SegmentGoneError(f"no active segments in {topic_path}")
-    ids = [s["segment_id"] for s in segs]
-    idx = F.pmod(F.monotonically_increasing_id(), F.lit(len(ids))).cast("int")
-    mapping = F.create_map(*[F.lit(x) for i, sid in enumerate(ids) for x in (i, sid)])
-    keyless = mapping[idx]
+    keyless = _keyless_segment(segs)
     if key_col:
         # NULL keys route like keyless messages (a TypedMessageBuilder
         # without a key round-robins) — also closes the hole where a
@@ -239,39 +248,9 @@ def produce_scalable(
         df = _null_safe_segment(payload, key_col, meta, keyless, deterministic_mod)
     else:
         df = payload.withColumn("segment", keyless)
-
-    spark = payload.sparkSession
-    existing = _read_if_present(spark, topic_path)
-    # send order captured BELOW the exchange (stable per input row, not
-    # shuffle-arrival order — see topics.produce for the contract)
-    df = df.withColumn("_send_order", F.monotonically_increasing_id())
-    w = Window.partitionBy("segment").orderBy("_send_order")
-    # pin the offset-window shuffle to one task per active segment: the
-    # window reuses the explicit hash partitioning (no second exchange)
-    # and the per-segment dynamic write keeps its parallelism instead of
-    # being AQE-coalesced into one serial writer on small appends (same
-    # fix as topics.produce)
-    df = df.repartition(len(ids), "segment").withColumns(
-        {
-            "offset": (F.row_number().over(w) - 1).cast("bigint"),
-            "producer_name": F.lit(producer_name),
-            "publish_time": F.current_timestamp(),
-            "event_time": F.col(event_time_col) if event_time_col else F.current_timestamp(),
-            "key": F.col(key_col).cast("string") if key_col else F.lit(None).cast("string"),
-        }
-    ).drop("_send_order")
-    if existing is not None:
-        base = existing.groupBy("segment").agg(F.max("offset").alias("_base"))
-        df = (
-            df.join(F.broadcast(base), on="segment", how="left")
-            .withColumn("offset", F.col("offset") + F.coalesce(F.col("_base") + 1, F.lit(0)))
-            .drop("_base")
-        )
-    (
-        df.write.mode("append")
-        .option("compression", codec)
-        .partitionBy("segment")
-        .parquet(topic_path)
+    _append_log(
+        df, topic_path, "segment", len(segs), "`segment`", producer_name,
+        key_col, event_time_col, _read_if_present(df.sparkSession, topic_path), codec,
     )
 
 
@@ -564,13 +543,9 @@ def migrate_to_scalable(
     segs = active_segments(meta)
     # keyless classic messages (NULL key) spread round-robin, same as
     # produce_scalable's keyless route
-    idx = F.pmod(F.monotonically_increasing_id(), F.lit(len(segs))).cast("int")
-    mapping = F.create_map(
-        *[F.lit(x) for i, s in enumerate(segs) for x in (i, s["segment_id"])]
-    )
     w = Window.partitionBy("segment").orderBy("partition", "offset")
     (
-        _null_safe_segment(src, "key", meta, mapping[idx], deterministic_mod)
+        _null_safe_segment(src, "key", meta, _keyless_segment(segs), deterministic_mod)
         .withColumn("offset", (F.row_number().over(w) - 1).cast("bigint"))
         .drop("partition")
         .write.mode("append")
@@ -646,15 +621,14 @@ def segment_high_watermarks(
     listed hive partitions (partition-pruned — callers like
     ``seek_subscription`` that only need a few sealed segments' highs
     must not pay a DAG-wide stats pass)."""
+    from pulsar_spark.sources.topics import stored_high_offsets
+
     df = _read_if_present(spark, topic_path)
     if df is None:
         return {}
     if segments is not None:
         df = df.where(F.col("segment").isin([int(s) for s in segments]))
-    return {
-        int(r.segment): int(r.mx)
-        for r in df.groupBy("segment").agg(F.max("offset").alias("mx")).collect()
-    }
+    return stored_high_offsets(df, "segment")
 
 
 def checkpoint_start_filter(df: DataFrame, ckpt: Checkpoint) -> DataFrame:

@@ -10,8 +10,8 @@ positions — our (partition, offset).
 Spark-first layout: one directory per topic, hive-partitioned by
 ``partition=N`` so partition pruning is free on read; per-partition
 offsets are dense and monotonic. Writes repartition by the topic
-partition BEFORE ``partitionBy`` so each task writes exactly one
-partition directory (avoids the tasks x partitions small-file
+partition BEFORE ``partitionBy`` so each partition directory is written
+by exactly one task (avoids the tasks x partitions small-file
 explosion — at 1000 executors that is the difference between 8 files
 and 8000 per append).
 """
@@ -159,9 +159,25 @@ def release_producer(topic_path: str, producer_name: str) -> None:
         _write_producer_lock(topic_path, lock)
 
 
-def _keyless_route(num_partitions: int, routing_mode: str, producer_name: str):
-    """Partition expression for messages WITHOUT a key, per
-    capi/MessageRoutingMode.java:
+def _sq(s: str) -> str:
+    """SQL single-quoted string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _qi(c: str) -> str:
+    """SQL backtick-quoted identifier (backticks double to escape):
+    payload column names are caller data, not trusted SQL."""
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _route_sql(
+    key_sql: str | None, num_partitions: int, routing_mode: str, producer_name: str
+) -> str:
+    """Partition of a message as SQL text, per capi/MessageRoutingMode.java.
+    Keyed messages ALWAYS hash-route via Murmur3 (Spark's ``hash`` is
+    Murmur3 x86/32) regardless of routing mode
+    (client/impl/MessageRouterBase.java:31-34 choosePartition: a present
+    key wins over the mode); null or absent keys follow the mode:
     - ``round_robin`` (RoundRobinPartition, the default): spread across
       all partitions. The reference's per-producer counter is
       inherently sequential; the distributed analog is a narrow
@@ -173,29 +189,28 @@ def _keyless_route(num_partitions: int, routing_mode: str, producer_name: str):
       picks a random-but-sticky index; we make it the producer-name
       hash so it is deterministic and stable across appends).
     """
+    n = int(num_partitions)
     if routing_mode == "single":
-        return F.pmod(F.hash(F.lit(producer_name)), F.lit(num_partitions)).cast("int")
-    return F.pmod(F.monotonically_increasing_id(), F.lit(num_partitions)).cast("int")
+        keyless = f"pmod(hash({_sq(producer_name)}), {n})"
+    else:
+        keyless = f"pmod(monotonically_increasing_id(), {n})"
+    if key_sql is None:
+        return f"CAST({keyless} AS INT)"
+    return (
+        f"CAST(CASE WHEN {key_sql} IS NOT NULL THEN pmod(hash({key_sql}), {n}) "
+        f"ELSE {keyless} END AS INT)"
+    )
 
 
 def route_partition(
-    key,
+    key: str,
     num_partitions: int,
     routing_mode: str = "round_robin",
     producer_name: str = "producer-0",
 ):
-    """Key -> partition via Murmur3, matching the reference's key-hash
-    router (Spark's ``hash`` is Murmur3 x86/32). Keyed messages are
-    ALWAYS hash-routed regardless of routing mode
-    (client/impl/MessageRouterBase.java:31-34 choosePartition: a
-    present key wins over the mode); null keys fall back to the
-    mode-specific keyless route."""
-    key_col = F.col(key) if isinstance(key, str) else key
-    return (
-        F.when(key_col.isNotNull(), F.pmod(F.hash(key_col), F.lit(num_partitions)))
-        .otherwise(_keyless_route(num_partitions, routing_mode, producer_name))
-        .cast("int")
-    )
+    """Key column name -> partition Column, built from the routing text
+    ``produce`` uses (see ``_route_sql``)."""
+    return F.expr(_route_sql(_qi(key), num_partitions, routing_mode, producer_name))
 
 
 def _sql_over(
@@ -219,6 +234,159 @@ def _sql_over(
         spark.catalog.dropTempView(view)
 
 
+def _append_log(
+    payload: DataFrame,
+    topic_path: str,
+    lane: str,
+    lanes: int,
+    route_sql: str,
+    producer_name: str,
+    key_col: str | None,
+    event_time_col: str | None,
+    existing: DataFrame | None,
+    codec: str,
+    mode: str = "append",
+    carry: dict[str, str] | None = None,
+    stamps: dict[str, str] | None = None,
+    seal: dict[str, str] | None = None,
+    pre_step=None,
+) -> None:
+    """The log append of both topic kinds: mint the envelope, number
+    offsets per lane in send order, rebase them on the stored high
+    offsets, write. ``lane`` is the hive partition column
+    (``partition`` on classic topics, ``segment`` on scalable ones),
+    ``lanes`` its count and ``route_sql`` the SQL text that picks it.
+
+    A caller adds its own columns as ``{name: sql}``: ``carry`` in the
+    first projection, where every payload column is still in scope;
+    ``stamps`` beside the envelope, above the shuffle; ``seal`` after
+    the rebase, so it may read the final ``offset``. ``pre_step``
+    (DataFrame -> DataFrame) runs between the mint and the offset
+    window; it must keep ``_send_order``.
+
+    The whole envelope is ONE SQL statement, i.e. ONE eager analyzer
+    pass and one py4j round-trip. Classic PySpark analyzes on every
+    transformation, so the former selectExpr/withColumn chain paid 4-5
+    analyses of a growing tree: ~170 ms of pure driver time per append
+    (measured r11, warm), the dominant fixed cost of a sub-second
+    produce. The fused statement measured ~120 ms build+plan for the
+    same tree; the identical tree built Column-by-Column cost another
+    ~120 ms of driver time per append (r11, warm), so the expressions
+    are SQL text (Murmur3 ``hash`` either way).
+    """
+    spark = payload.sparkSession
+    carry, stamps, seal = carry or {}, stamps or {}, seal or {}
+    # Envelope columns REPLACE same-named payload columns. The match
+    # must follow the SESSION's resolution rule: under the default
+    # case-insensitive resolution a payload column "Partition" collides
+    # with the minted `partition` in the window's PARTITION BY
+    # (AMBIGUOUS_REFERENCE), so fold case before matching. Under
+    # spark.sql.caseSensitive=true there is no collision and
+    # "Partition" is a DISTINCT user column that must survive, so match
+    # exactly there (folding would silently drop it).
+    minted = {lane, "producer_name", "offset", "publish_time", "event_time",
+              "key", "_route", "_send_order", *carry, *stamps, *seal}
+    fold = str(spark.conf.get("spark.sql.caseSensitive", "false")).lower() != "true"
+    base = [_qi(c) for c in payload.columns if (c.lower() if fold else c) not in minted]
+    ev_sql = _qi(event_time_col) if event_time_col else "current_timestamp()"
+    key_sql = f"CAST({_qi(key_col)} AS STRING)" if key_col else "CAST(NULL AS STRING)"
+    # Send order (_send_order) must be captured BEFORE any shuffle: a
+    # monotonic id minted below the exchange is stable per input row,
+    # while one computed above it would follow shuffle-fetch arrival
+    # order — nondeterministic across runs/retries on a real cluster,
+    # which would break the offset=publish-order contract that
+    # compaction keep-latest and per-key reads rely on. (Catalyst never
+    # collapses projections across a non-deterministic expression, so
+    # the id stays below the REPARTITION node.)
+    mint_sql = "SELECT " + ", ".join(
+        base
+        + [f"{sql} AS {_qi(name)}" for name, sql in carry.items()]
+        + [
+            f"{route_sql} AS {_qi(lane)}",
+            f"{_sq(producer_name)} AS producer_name",
+            f"{key_sql} AS key",
+            f"{ev_sql} AS event_time",
+            "monotonically_increasing_id() AS _send_order",
+        ]
+    ) + " FROM "
+    if pre_step is not None:
+        # the pre-step's own shuffle sits between the mint and the
+        # window, so the mint runs alone and the statement reads its result
+        payload = pre_step(_sql_over(spark, payload, mint_sql))
+        mint_sql = "SELECT * FROM "
+    # Pin the offset-window shuffle to min(lanes, cores) tasks, each
+    # holding whole lanes. The window's ClusteredDistribution(lane) is
+    # satisfied by this explicit hash partitioning, so no second
+    # exchange, and each lane still gets one file per append. Unlike
+    # the implicit window shuffle, an explicit repartition is exempt
+    # from AQE partition coalescing, which on small appends was merging
+    # the whole batch into ONE task and serializing the write (measured
+    # ~40% of B1 wall time). More tasks than cores only add task
+    # commits and scheduling: at local[2] an 8-partition append ran
+    # 14.5 tasks in all with one task per lane, and 8.5-9 with this count.
+    n_tasks = min(int(lanes), spark.sparkContext.defaultParallelism)
+    env = ", ".join(
+        base
+        + [_qi(name) for name in carry]
+        + [_qi(lane), "`producer_name`"]
+        + [f"{sql} AS {_qi(name)}" for name, sql in stamps.items()]
+        + [
+            f"CAST(row_number() OVER (PARTITION BY {_qi(lane)} "
+            "ORDER BY _send_order) - 1 AS BIGINT) AS offset",
+            "current_timestamp() AS publish_time",
+            "`event_time`",
+            "`key`",
+        ]
+    )
+    win = (
+        f"SELECT {env} FROM (SELECT /*+ REPARTITION({n_tasks}, {_qi(lane)}) */ * "
+        f"FROM ({mint_sql}"
+    )
+    sealed = ["*"] + [f"{sql} AS {_qi(name)}" for name, sql in seal.items()]
+    # Offsets continue from each lane's stored high offset: an 8-row
+    # aggregate over parquet footer stats, joined as a broadcast.
+    if existing is None:
+        # fresh topic: no rebase, so the seal fuses into the statement
+        df = _sql_over(spark, payload, "SELECT " + ", ".join(sealed) + " FROM (" + win, ")))")
+    else:
+        high = existing.groupBy(lane).agg(F.max("offset").alias("_base"))
+        df = (
+            _sql_over(spark, payload, win, "))")
+            .join(F.broadcast(high), on=lane, how="left")
+            .withColumn("offset", F.col("offset") + F.coalesce(F.col("_base") + 1, F.lit(0)))
+            .drop("_base")
+            .selectExpr(*sealed)
+        )
+    # AQE off for THIS write action (r12): the plan is scan -> fused
+    # mint -> explicit REPARTITION(n, lane) -> offset window -> write.
+    # AQE cannot improve that shape — there is no join to
+    # re-strategize, skew handling applies only to joins, and the
+    # explicit column+count repartition is exempt from partition
+    # coalescing — but adaptive execution still materializes the
+    # shuffle map stage as its own query-stage job and re-plans at the
+    # boundary: a whole job per shuffle of a ~0.5 s append, at every
+    # data size (re-measured at local[2] on 4 cores: 5 jobs per ingest
+    # append without this scope against 3 with it, wall time within
+    # noise). The offset-rebase broadcast
+    # join carries an explicit broadcast hint, which the static planner
+    # honors identically. Session confs are process-global, so the
+    # scope is kept to the single write action and restored in
+    # ``finally``; a concurrent query on another thread of the same
+    # session during this sub-second window would plan without AQE —
+    # correct, just not adaptive.
+    # Hot-tier appends default to snappy (CompressionType.java:29-43 puts
+    # the codec choice on the producer): encode cost sits on the ingest
+    # critical path (snappy measured ~20% faster than lz4 end-to-end on
+    # the partitioned append), while compaction / tiered offload rewrite
+    # cold data to zstd where ratio matters more than speed.
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        df.write.mode(mode).option("compression", codec).partitionBy(lane).parquet(topic_path)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
 def produce(
     payload: DataFrame,
     topic_path: str,
@@ -236,20 +404,8 @@ def produce(
     quota_rows: int | None = None,
     quota_policy: str = "exception",
     access_mode: str = "shared",
-    write_tasks: int | None = None,
 ) -> None:
     """Append payload rows to a topic with full envelope minting.
-
-    ``write_tasks`` caps the offset-window/write stage's task count
-    below ``num_partitions`` for SMALL appends: each task then holds
-    several WHOLE topic partitions (the window's clustering requirement
-    still holds, the on-disk layout is still one file per partition per
-    append), but the job pays ``write_tasks`` task commits + schedules
-    instead of ``num_partitions`` — the fixed cost that dominates a
-    sub-second append. Leave ``None`` (= ``num_partitions``, the
-    historical shape) when the batch is big enough to want a writer
-    per partition; at cluster scale micro-batches pick e.g.
-    ``max(1, min(num_partitions, rows // 12_500))``.
 
     ``interceptors`` is an ordered list of ``DataFrame -> DataFrame``
     callables applied to the payload before routing/minting — the
@@ -329,224 +485,65 @@ def produce(
         # ad-hoc topics default to 8
         meta = topic_metadata(topic_path)
         num_partitions = meta["num_partitions"] if meta else 8
-    spark = payload.sparkSession
-
-    def _sq(s: str) -> str:
-        # SQL single-quoted string literal
-        return "'" + s.replace("'", "''") + "'"
-
-    def _qi(c: str) -> str:
-        # SQL backtick-quoted identifier (backticks double to escape) —
-        # payload column names are caller data, not trusted SQL
-        return "`" + c.replace("`", "``") + "`"
 
     # Routing mirrors MessageRoutingMode (capi/MessageRoutingMode.java):
     # an explicit ``message_router`` (Column, or callable DataFrame ->
     # Column) is CustomPartition; otherwise keyed rows hash-route and
     # keyless rows follow ``routing_mode`` ("round_robin" | "single").
-    #
-    # The route — and the whole envelope below — is built as SQL
-    # expression STRINGS through selectExpr (ONE py4j round-trip per
-    # select): the identical tree built Column-by-Column measured
-    # ~120 ms of pure DRIVER time per append (r11, warm), the dominant
-    # fixed cost of a sub-second produce and dead weight on a driver
-    # pushing micro-batches at cluster scale. Expressions are
-    # semantically identical to the former Column forms (hash =
-    # Murmur3 x86/32 either way). Envelope columns REPLACE same-named
-    # payload columns (as withColumn did), landing at the envelope's
-    # position in the output order.
-    if routing_mode == "single":
-        keyless_sql = f"pmod(hash({_sq(producer_name)}), {int(num_partitions)})"
-    else:
-        keyless_sql = f"pmod(monotonically_increasing_id(), {int(num_partitions)})"
     if message_router is not None:
         router = message_router(payload) if callable(message_router) else message_router
         payload = payload.withColumn("_route", router.cast("bigint"))
-        part_sql = f"CAST(pmod(_route, {int(num_partitions)}) AS INT)"
-    elif key_col:
-        part_sql = (
-            f"CAST(CASE WHEN {_qi(key_col)} IS NOT NULL THEN "
-            f"pmod(hash({_qi(key_col)}), {int(num_partitions)}) "
-            f"ELSE {keyless_sql} END AS INT)"
-        )
+        route_sql = f"CAST(pmod(_route, {int(num_partitions)}) AS INT)"
     else:
-        part_sql = f"CAST({keyless_sql} AS INT)"
-    _mint_names = {"partition", "producer_name", "topic", "offset",
-                   "publish_time", "event_time", "key", "sequence_id",
-                   "_route", "_send_order"}
-    # The exclusion must match the SESSION's resolution rule: under the
-    # default case-insensitive resolution a payload column "Partition"
-    # collides with the minted `partition` in the window's PARTITION BY
-    # (AMBIGUOUS_REFERENCE), and the former withColumn path replaced
-    # such columns case-insensitively — so fold case before matching.
-    # Under spark.sql.caseSensitive=true there is no collision and
-    # "Partition" is a DISTINCT user column that must survive, so match
-    # exactly there (folding would silently drop it).
-    case_insensitive = (
-        str(spark.conf.get("spark.sql.caseSensitive", "false")).lower() != "true"
-    )
-    base_cols = [
-        _qi(c)
-        for c in payload.columns
-        if (c.lower() if case_insensitive else c) not in _mint_names
-    ]
-    # key/event_time are computed HERE, in the first projection, while
-    # every payload column is still in scope (key_col is very often
-    # literally named "key" — the second projection below could no
-    # longer see it); the final projection only repositions them to the
-    # envelope's historical column order.
-    ev_sql = _qi(event_time_col) if event_time_col else "current_timestamp()"
-    key_sql = f"CAST({_qi(key_col)} AS STRING)" if key_col else "CAST(NULL AS STRING)"
+        route_sql = _route_sql(
+            _qi(key_col) if key_col else None, num_partitions, routing_mode, producer_name
+        )
+    # sequence_id: the dedup contract (MessageDeduplication.java:279-281)
+    # only needs strict monotonicity in send order per producer — reject
+    # sequence <= highest-seen — not dense numbering. Mint it AFTER
+    # offset rebasing as the bijection offset*num_partitions+partition
+    # (send order = round-robin interleave across partitions): unique
+    # per producer, strictly increasing along every partition's log
+    # across appends, and a narrow expression — no extra pass, no
+    # single-task global window (a window over producer_name would
+    # serialize the whole batch into one task).
+    carry = {}
+    seal = {"sequence_id": f"CAST(offset * {int(num_partitions)} + `partition` AS BIGINT)"}
+    pre_step = None
+    if sequence_col is not None:
+        carry, seal = {"sequence_id": f"CAST({_qi(sequence_col)} AS BIGINT)"}, {}
+        high = _existing_sequences(existing)
+
+        def pre_step(df: DataFrame) -> DataFrame:
+            # The high-water anti-filter only applies on append: an
+            # overwrite discards the stored log (and with it the dedup
+            # high-water map), so filtering the new batch against the
+            # data it is about to replace would drop every row.
+            if high is not None:
+                df = (
+                    df.join(F.broadcast(high), on="producer_name", how="left")
+                    .where(F.col("_hiseq").isNull() | (F.col("sequence_id") > F.col("_hiseq")))
+                    .drop("_hiseq")
+                )
+            # In-batch duplicate sequences keep the FIRST row in send
+            # order — the reference's MessageDeduplication admits the
+            # first message with a given sequence and rejects later
+            # repeats. The survivor carries its own _send_order inside
+            # the struct, so the window still numbers offsets in send
+            # order; a send order minted again above this shuffle would
+            # follow the aggregate's output order instead.
+            cols = [F.col(_qi(c)) for c in df.columns]
+            rest = [F.col(_qi(c)) for c in df.columns if c not in ("producer_name", "sequence_id")]
+            return (
+                df.groupBy("producer_name", "sequence_id")
+                .agg(F.min_by(F.struct(*rest), F.col("_send_order")).alias("_m"))
+                .select("producer_name", "sequence_id", "_m.*")
+                .select(*cols)
+            )
 
     import os
 
     topic_name = "persistent://public/default/" + os.path.basename(topic_path.rstrip("/"))
-    # Pin the offset-window shuffle to one task per topic partition
-    # (or the caller's smaller write_tasks cap — each task then holds
-    # several whole partitions). The window's
-    # ClusteredDistribution(partition) is satisfied by this explicit
-    # hash partitioning, so no second exchange — but unlike the
-    # implicit window shuffle, an explicit repartition is exempt from
-    # AQE partition coalescing, which on small appends was merging the
-    # whole batch into ONE task and serializing the 32-directory write
-    # (measured ~40% of B1 wall time). At scale this loses nothing: a
-    # row_number window over `partition` can never split a partition
-    # across tasks anyway.
-    n_tasks = num_partitions if write_tasks is None else max(1, min(
-        int(write_tasks), num_partitions))
-    # Send order (_send_order) must be captured BEFORE the shuffle: a
-    # monotonic id minted below the exchange is stable per input row,
-    # while one computed above it would follow shuffle-fetch arrival
-    # order — nondeterministic across runs/retries on a real cluster,
-    # which would break the offset=publish-order contract that
-    # compaction keep-latest and per-key reads rely on. (Catalyst never
-    # collapses projections across a non-deterministic expression, so
-    # the id stays below the REPARTITION node.)
-    env_sel = ", ".join(
-        base_cols
-        + (["`sequence_id`"] if sequence_col is not None else [])
-        + [
-            "`partition`",
-            "`producer_name`",
-            f"{_sq(topic_name)} AS topic",
-            "CAST(row_number() OVER (PARTITION BY `partition` "
-            "ORDER BY _send_order) - 1 AS BIGINT) AS offset",
-            "current_timestamp() AS publish_time",
-            "`event_time`",
-            "`key`",
-        ]
-    )
-
-    if sequence_col is not None:
-        df = payload.selectExpr(
-            *base_cols,
-            f"{part_sql} AS partition",
-            f"CAST({_qi(sequence_col)} AS BIGINT) AS sequence_id",
-            f"{_sq(producer_name)} AS producer_name",
-            f"{key_sql} AS key",
-            f"{ev_sql} AS event_time",
-        )
-        # The high-water anti-filter only applies on append: an overwrite
-        # discards the stored log (and with it the dedup high-water map),
-        # so filtering the new batch against the data it is about to
-        # replace would drop every row and write an empty topic.
-        high = _existing_sequences(existing)
-        if high is not None:
-            df = (
-                df.join(F.broadcast(high), on="producer_name", how="left")
-                .where(F.col("_hiseq").isNull() | (F.col("sequence_id") > F.col("_hiseq")))
-                .drop("_hiseq")
-            )
-        # In-batch duplicate sequences keep the FIRST row in send order —
-        # the reference's MessageDeduplication admits the first message
-        # with a given sequence and rejects later repeats, so collisions
-        # must resolve deterministically across runs, not to an arbitrary
-        # survivor. _send_order is monotonic within each input partition
-        # in arrival order, giving a stable min_by tiebreak in one
-        # aggregation (no extra shuffle beyond the dedup itself).
-        seq_cols = [c for c in df.columns]
-        df = (
-            df.withColumn("_send_order", F.monotonically_increasing_id())
-            .groupBy("producer_name", "sequence_id")
-            .agg(
-                F.min_by(
-                    F.struct(*[c for c in seq_cols if c not in ("producer_name", "sequence_id")]),
-                    F.col("_send_order"),
-                ).alias("_m")
-            )
-            .select("producer_name", "sequence_id", "_m.*")
-            .select(*seq_cols)
-        )
-        df = df.selectExpr("*", "monotonically_increasing_id() AS _send_order")
-        df = df.repartition(n_tasks, "partition")
-        df = _sql_over(spark, df, "SELECT " + env_sel + " FROM ")
-    else:
-        # Hot path: the WHOLE envelope — route, producer stamp, send
-        # order, pinned repartition, offset window, sequence mint — as
-        # ONE SQL statement, i.e. ONE eager analyzer pass. Classic
-        # PySpark analyzes on every transformation, so the former
-        # selectExpr/withColumn chain paid 4-5 analyses of a growing
-        # tree: ~170 ms of pure driver time per append (measured r11,
-        # warm), the dominant fixed cost of a sub-second produce. The
-        # fused statement measured ~120 ms build+plan for the same tree.
-        mint_sel = ", ".join(
-            base_cols
-            + [
-                f"{part_sql} AS partition",
-                f"{_sq(producer_name)} AS producer_name",
-                f"{key_sql} AS key",
-                f"{ev_sql} AS event_time",
-                "monotonically_increasing_id() AS _send_order",
-            ]
-        )
-        win_prefix = (
-            "SELECT " + env_sel + " FROM ("
-            "SELECT /*+ REPARTITION(" + str(int(n_tasks)) + ", `partition`) */ * "
-            "FROM (SELECT " + mint_sel + " FROM "
-        )
-        win_suffix = "))"
-        if existing is None:
-            # fresh topic: no offset rebase — fuse the sequence mint too
-            df = _sql_over(
-                spark,
-                payload,
-                "SELECT *, CAST(offset * " + str(int(num_partitions))
-                + " + `partition` AS BIGINT) AS sequence_id FROM (" + win_prefix,
-                win_suffix + ")",
-            )
-        else:
-            df = _sql_over(spark, payload, win_prefix, win_suffix)
-
-    base = _existing_offsets(existing)
-    if base is not None:
-        df = df.join(F.broadcast(base), on="partition", how="left").withColumn(
-            "offset", F.col("offset") + F.coalesce(F.col("_base") + 1, F.lit(0))
-        ).drop("_base")
-
-    if sequence_col is None and existing is not None:
-        # sequence_id: the dedup contract (MessageDeduplication.java:279-281)
-        # only needs strict monotonicity in send order per producer — reject
-        # sequence <= highest-seen — not dense numbering. Mint it AFTER
-        # offset rebasing as the bijection offset*num_partitions+partition
-        # (send order = round-robin interleave across partitions): unique
-        # per producer, strictly increasing along every partition's log
-        # across appends, and a narrow expression — no extra pass, no
-        # single-task global window (a window over producer_name would
-        # serialize the whole batch into one task).
-        df = df.selectExpr(
-            "*",
-            f"CAST(offset * {int(num_partitions)} + `partition` AS BIGINT) "
-            "AS sequence_id",
-        )
-
-    # No repartition here: the offset window already hash-partitioned the
-    # data by `partition`, so each task holds whole topic partitions and
-    # the dynamic-partition write emits one file per partition per append.
-    # Hot-tier appends default to snappy (CompressionType.java:29-43 puts
-    # the codec choice on the producer): encode cost sits on the ingest
-    # critical path (snappy measured ~20% faster than lz4 end-to-end on
-    # the partitioned append), while compaction / tiered offload rewrite
-    # cold data to zstd where ratio matters more than speed.
     # An overwrite clears the whole topic directory including the
     # _topic.json metadata sidecar; capture it first and restore after so
     # partition count / properties survive (truncate_topic keeps it too —
@@ -556,34 +553,16 @@ def produce(
     # directory, so restore the registration afterwards
     preserved_lock = producer_lock(topic_path) if mode != "append" else None
     wrote_ok = False
-    # AQE off for THIS write action (r12): the produce plan is scan ->
-    # fused mint -> explicit REPARTITION(n, partition) -> offset window
-    # -> write. AQE cannot improve that shape — there is no join to
-    # re-strategize, skew handling applies only to joins, and the
-    # explicit column+count repartition is exempt from partition
-    # coalescing — but adaptive execution still materializes the
-    # shuffle map stage as its own query-stage job and re-plans at the
-    # boundary: measured ~0.07-0.10 s and one whole job of a ~0.5 s
-    # append, at every data size (the boundary cost is per-stage fixed
-    # overhead). The offset-rebase broadcast join (existing topics)
-    # carries an explicit broadcast hint, which the static planner
-    # honors identically. Session confs are process-global, so the
-    # scope is kept to the single write action and restored in
-    # ``finally``; a concurrent query on another thread of the same
-    # session during this sub-second window would plan without AQE —
-    # correct, just not adaptive.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        (
-            df.write.mode("append" if mode == "append" else "overwrite")
-            .option("compression", codec)
-            .partitionBy("partition")
-            .parquet(topic_path)
+        _append_log(
+            payload, topic_path, "partition", num_partitions, route_sql,
+            producer_name, key_col, event_time_col, existing, codec,
+            mode="append" if mode == "append" else "overwrite",
+            carry=carry, stamps={"topic": _sq(topic_name)}, seal=seal,
+            pre_step=pre_step,
         )
         wrote_ok = True
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         # Restore the sidecar even if the data write failed partway —
         # topic identity (partition count, properties) must survive a
         # botched overwrite. The restored partition count must describe
@@ -623,18 +602,24 @@ def _read_topic_if_present(
     return spark.read.parquet(topic_path)
 
 
-def _existing_offsets(existing: DataFrame | None) -> DataFrame | None:
-    if existing is None:
-        return None
-    return existing.groupBy("partition").agg(F.max("offset").alias("_base"))
-
-
 def _existing_sequences(existing: DataFrame | None) -> DataFrame | None:
     """Highest stored sequence per producer — the dedup high-water map
     (MessageDeduplication.java:112 highestSequencedPushed)."""
     if existing is None:
         return None
     return existing.groupBy("producer_name").agg(F.max("sequence_id").alias("_hiseq"))
+
+
+def stored_high_offsets(stored: DataFrame, lane: str = "partition") -> dict[int, int]:
+    """Highest stored offset per lane (``partition`` on classic topics,
+    ``segment`` on scalable ones) of a topic frame, collected: one
+    bounded grouped MAX over two footer-stat columns. The one reader
+    behind high-watermark vectors, ``latest`` subscriptions, compaction
+    horizons and segment drain checks."""
+    return {
+        int(r[0]): int(r[1])
+        for r in stored.groupBy(lane).agg(F.max("offset")).collect()
+    }
 
 
 def write_topic(

@@ -114,15 +114,12 @@ def high_watermarks(spark: SparkSession, topic_path: str) -> dict[int, int]:
     rendering of ``topic.getLastPosition()``. One bounded grouped MAX
     over two footer-stat columns; empty/missing topics are the empty
     vector."""
-    from pulsar_spark.sources.topics import _read_topic_if_present
+    from pulsar_spark.sources.topics import _read_topic_if_present, stored_high_offsets
 
     df = _read_topic_if_present(spark, topic_path)
     if df is None:
         return {}
-    return {
-        int(r.partition): int(r.mx) + 1
-        for r in df.groupBy("partition").agg(F.max("offset").alias("mx")).collect()
-    }
+    return {p: hi + 1 for p, hi in stored_high_offsets(df).items()}
 
 
 def write_marker_rows(
@@ -137,12 +134,12 @@ def write_marker_rows(
     path: Topic.publishMessage with a marker payload). Offsets continue
     each lane's watermark so markers are ordinary log entries to every
     scan."""
-    from pulsar_spark.sources.topics import _read_topic_if_present
+    from pulsar_spark.sources.topics import _read_topic_if_present, stored_high_offsets
 
     existing = _read_topic_if_present(spark, topic_path)
     if existing is None:
         schema = _MIN_MARKER_SCHEMA
-        wm: dict[int, int] = {}
+        high: dict[int, int] = {}
     else:
         # extend the topic's file schema with the marker columns it may
         # not carry yet (plain produce topics have no marker rows);
@@ -157,12 +154,9 @@ def write_marker_rows(
             if name not in have:
                 fields.append(T.StructField(name, dtype))
         schema = T.StructType(fields)
-        wm = {
-            int(r.partition): int(r.mx) + 1
-            for r in existing.groupBy("partition").agg(F.max("offset").alias("mx")).collect()
-        }
+        high = stored_high_offsets(existing)
     names = [f.name for f in schema.fields]
-    out, next_off = [], dict(wm)
+    out = []
     import datetime
 
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
@@ -171,8 +165,7 @@ def write_marker_rows(
     )
     for partition, marker_type, payload in rows:
         p = int(partition)
-        off = next_off.get(p, 0)
-        next_off[p] = off + 1
+        off = high[p] = high.get(p, -1) + 1
         vals = {
             "topic": topic_name,
             "partition": p,

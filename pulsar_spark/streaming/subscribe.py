@@ -84,11 +84,9 @@ def subscribe(
 
     if initial_position == "latest":
         from pulsar_spark.envelope import watermark_lookup
+        from pulsar_spark.sources.topics import stored_high_offsets
 
-        highs = {
-            int(r.partition): int(r.hi)
-            for r in static.groupBy("partition").agg(F.max("offset").alias("hi")).collect()
-        }
+        highs = stored_high_offsets(static)
         stream = stream.where(
             F.col("offset") > watermark_lookup(F.col("partition"), highs)
         )

@@ -1,6 +1,6 @@
 """Incremental NEAR-dup dedup (functions/dedupe.py
 incremental_near_dedup) + the MinHash permutation-family fix
-(_perm_mins): signature agreement must be the unbiased Jaccard
+(_perm_mins_batch): signature agreement must be the unbiased Jaccard
 estimator, history checks must catch edited recrawls, and epoch
 replays must be idempotent."""
 

@@ -544,6 +544,94 @@ class TestEffectivelyOnceProduce:
         assert w_bad == 0, "sequence ids must stay unique across appends"
         assert df.select(F.max("sequence_id")).first()[0] > hi1
 
+    def test_sequence_path_offsets_follow_send_order(self, spark, tmp_path):
+        """A log position follows send order on the dedup path too, not
+        sequence-id order: the in-batch dedup shuffle must not re-mint
+        send order above itself. Rows are sent in ``v`` order with
+        sequence ids permuted against it; one key puts every row on one
+        partition, so its offsets must hold ``v`` in the order sent."""
+        from pulsar_spark.sources.topics import produce
+
+        d = str(tmp_path / "so")
+        payload = spark.range(0, 2000, numPartitions=8).selectExpr(
+            "'k' AS k", "id AS v", "id * 7919 % 2000 AS seq"
+        )
+        produce(payload, d, key_col="k", sequence_col="seq", mode="overwrite")
+        got = spark.read.parquet(d).orderBy("offset").select("v").collect()
+        assert [r.v for r in got] == list(range(2000))
+
+    def test_scalable_offsets_follow_send_order(self, spark, tmp_path):
+        """Same contract on a scalable topic's segment lanes."""
+        from pulsar_spark.sources import create_scalable_topic, produce_scalable, read_scalable
+
+        d = str(tmp_path / "sso")
+        create_scalable_topic(d, num_initial_segments=2)
+        payload = spark.range(0, 2000, numPartitions=8).selectExpr("'k' AS k", "id AS v")
+        produce_scalable(payload, d, key_col="k")
+        got = read_scalable(spark, d).orderBy("offset").select("v").collect()
+        assert [r.v for r in got] == list(range(2000))
+
+
+class TestAppendCounterBudget:
+    """Cost budget of one log append, in counters host CPU steal cannot
+    move: Spark jobs per call, and the write stage's task count, which
+    must be ``min(lanes, defaultParallelism)``. Counted under a job group
+    through the status tracker. Raising a budget is a deliberate edit."""
+
+    # jobs per append: (fresh topic, existing topic). An existing topic
+    # adds a one-task footer read for the stored schema and the
+    # broadcast of its stored high offsets.
+    CLASSIC_JOBS = (1, 3)
+    SCALABLE_JOBS = (1, 3)
+
+    @staticmethod
+    def _counters(spark, call):
+        import uuid
+
+        sc = spark.sparkContext
+        group = "append-budget-" + uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        # the write job is submitted last (a broadcast it joins is built
+        # before its RDD exists); its result stage has the highest id
+        write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+        return len(jobs), tracker.getStageInfo(write_stage).numTasks
+
+    def _payload(self, spark):
+        return spark.range(0, 400, numPartitions=4).selectExpr(
+            "CAST(id % 37 AS STRING) AS k", "id AS v"
+        )
+
+    def test_classic_append_budget(self, spark, tmp_path):
+        from pulsar_spark.sources.topics import produce
+
+        d = str(tmp_path / "c")
+        lanes = min(8, spark.sparkContext.defaultParallelism)
+        for jobs in self.CLASSIC_JOBS:
+            got = self._counters(
+                spark, lambda: produce(self._payload(spark), d, key_col="k", num_partitions=8)
+            )
+            assert got == (jobs, lanes)
+
+    def test_scalable_append_budget(self, spark, tmp_path):
+        from pulsar_spark.sources import create_scalable_topic, produce_scalable
+
+        d = str(tmp_path / "s")
+        create_scalable_topic(d, num_initial_segments=8)
+        lanes = min(8, spark.sparkContext.defaultParallelism)
+        for jobs in self.SCALABLE_JOBS:
+            got = self._counters(
+                spark, lambda: produce_scalable(self._payload(spark), d, key_col="k")
+            )
+            assert got == (jobs, lanes)
+
 
 class TestKeySharedAutoSplit:
     def test_ranges_cover_space_disjoint(self):

@@ -104,16 +104,13 @@ def b1():
     from pulsar_spark.sources.topics import produce
     if "tmp" not in _b1_state:
         ev = load_table(spark, sf_dir, "events")
-        n = ev.count()
-        _b1_state.update(tmp=tempfile.mkdtemp(prefix="ab_b1_"), ev=ev,
-                         wt=max(1, min(32, n // 6250)), i=0)
+        _b1_state.update(tmp=tempfile.mkdtemp(prefix="ab_b1_"), ev=ev, i=0)
         for wi in range(4):
             produce(ev, f"{_b1_state['tmp']}/warm_{wi}", key_col="user_id",
-                    num_partitions=32, mode="append", write_tasks=_b1_state["wt"])
+                    num_partitions=32, mode="append")
     _b1_state["i"] += 1
     produce(_b1_state["ev"], f"{_b1_state['tmp']}/t_{_b1_state['i']}",
-            key_col="user_id", num_partitions=32, mode="append",
-            write_tasks=_b1_state["wt"])
+            key_col="user_id", num_partitions=32, mode="append")
 
 def x4b():
     # bench.py's x4b: no-global-sort token-budget selection
