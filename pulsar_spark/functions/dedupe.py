@@ -26,8 +26,6 @@ columns before mapping over them.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -1195,41 +1193,66 @@ def remove_duplicated_chunks(
     )
 
 
-def _fingerprint_store_files(spark, store_path: str) -> list[str]:
-    """Parquet part files currently in the fingerprint store, resolved
-    through the Hadoop FileSystem API so any scheme the cluster can
-    read (file://, hdfs://, s3a://, ...) works — a driver-local
-    os.path check would silently skip the store on remote paths."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_path)
+#: Row layout of each dedup store. The engine writes these columns and
+#: no others, so every scan declares them instead of inferring them
+#: from a footer (a one-task Spark job per read).
+_EXACT_STORE = "_fp STRING"
+_SIG_STORE = "_fp BIGINT, signature ARRAY<BIGINT>"
+_BAND_STORE = "_fp BIGINT, band_idx INT, band_hash BIGINT"
+
+
+def _store_paths(spark, store_path: str, epoch: int | None) -> list[str]:
+    """The data locations of one store directory that a probe (or, with
+    ``epoch=None``, a compaction) reads.
+
+    Without ``epoch``: the loose root part files of flat appends plus
+    every ``batch_id=N`` epoch dir (compaction folds history into an
+    epoch dir, so a non-epoch probe must still see it). With ``epoch``:
+    every epoch dir except the epoch's own, so a replayed epoch never
+    probes its own commit. Listed through the Hadoop FileSystem API so
+    any scheme the cluster can read (file://, hdfs://, s3a://, ...)
+    works."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(store_path)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(path):
         return []
-    return [
-        f.getPath().toString()
-        for f in fs.listStatus(path)
-        if f.getPath().getName().startswith("part-")
-    ]
-
-
-def _epoch_store_dirs(spark, store_path: str, exclude_epoch: int) -> list[str]:
-    """Per-epoch fingerprint directories (``batch_id=N``) currently in
-    the store, excluding the given epoch's own directory."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    out = []
+    own = None if epoch is None else f"batch_id={int(epoch)}"
+    files, dirs = [], []
     for f in fs.listStatus(path):
         name = f.getPath().getName()
-        if (
-            f.isDirectory()
-            and name.startswith("batch_id=")
-            and name != f"batch_id={int(exclude_epoch)}"
-        ):
-            out.append(f.getPath().toString())
-    return out
+        if f.isDirectory():
+            if name.startswith("batch_id=") and name != own:
+                dirs.append(f.getPath().toString())
+        elif epoch is None and name.startswith("part-"):
+            files.append(f.getPath().toString())
+    return files + dirs
+
+
+def _scan_store(spark, paths: list[str], schema: str) -> DataFrame:
+    """Scan store locations (loose part files and epoch dirs) with the
+    store's declared schema. ``recursiveFileLookup`` reads every part
+    file under an epoch dir whatever its inner layout, so band epochs
+    that older engine versions hive-partitioned by band-hash prefix
+    scan (and compact) next to flat epochs and loose files; a
+    partition-discovering read of that mix raises
+    CONFLICTING_DIRECTORY_STRUCTURES. No partition column is
+    discovered, so none needs declaring."""
+    return (
+        spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(*paths)
+    )
+
+
+def _commit_store(rows: DataFrame, store_path: str, epoch: int | None) -> None:
+    """Commit rows to a store directory: without ``epoch`` an append of
+    loose part files (duplicate rows are harmless to the anti-join and
+    the band join); with it an OVERWRITE of the epoch's own
+    ``batch_id=N`` dir, so a replayed epoch replaces its commit."""
+    if epoch is None:
+        rows.write.mode("append").parquet(store_path)
+    else:
+        rows.write.mode("overwrite").parquet(f"{store_path}/batch_id={int(epoch)}")
 
 
 def incremental_exact_dedup(
@@ -1289,32 +1312,13 @@ def incremental_exact_dedup(
         .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_d"))
         .select("_fp", "_d.*")
     )
-    if epoch is None:
-        # root appends PLUS every epoch dir: history written in epoch
-        # mode — or folded there by compact_fingerprint_store — must
-        # stay visible to non-epoch probes (no self-exclusion needed:
-        # this mode commits loose root files)
-        files = _store_inputs(spark, store_path)
-    else:
-        files = _epoch_store_dirs(spark, store_path, epoch)
-    if files:
-        # explicit schema (engine-owned layout: commit writes exactly
-        # the md5-string _fp column) — skips the per-probe 1-task
-        # footer-inference job; paths are loose part files or leaf
-        # batch_id=N dirs, so no partition columns are discovered
+    paths = _store_paths(spark, store_path, epoch)
+    if paths:
         collapsed = collapsed.join(
-            spark.read.schema("_fp STRING").parquet(*files),
-            on="_fp",
-            how="left_anti",
+            _scan_store(spark, paths, _EXACT_STORE), on="_fp", how="left_anti"
         )
     if update_store:
-        commit = collapsed.select("_fp")
-        if epoch is None:
-            commit.write.mode("append").parquet(store_path)
-        else:
-            commit.write.mode("overwrite").parquet(
-                f"{store_path}/batch_id={int(epoch)}"
-            )
+        _commit_store(collapsed.select("_fp"), store_path, epoch)
     return collapsed.drop("_fp")
 
 
@@ -1341,11 +1345,9 @@ def commit_fingerprints(
     # write would recreate the root next to the __old dir and the next
     # recovery would then discard the real history
     recover_swap(survivors.sparkSession, store_path)
-    fps = survivors.select(_exact_fingerprint(text_col).alias("_fp"))
-    if epoch is None:
-        fps.write.mode("append").parquet(store_path)
-    else:
-        fps.write.mode("overwrite").parquet(f"{store_path}/batch_id={int(epoch)}")
+    _commit_store(
+        survivors.select(_exact_fingerprint(text_col).alias("_fp")), store_path, epoch
+    )
 
 
 def _near_store_sigs(
@@ -1421,20 +1423,15 @@ def incremental_near_dedup(
     Scale shape: the probe side (one micro-batch of band hashes) is
     broadcast, so the band store is SCANNED map-side but never
     shuffled; candidate verification joins the candidate ``_fp`` set
-    (micro-batch-bounded) against the sig store the same way. Epoch
-    commits partition ``bands/`` by a band-hash prefix (BAND_PFX_MOD
-    hive directories per epoch), and the probe pushes its OWN bounded
-    prefix set as a PartitionFilters prune — each probe scans
-    O(store/256) of the band rows instead of O(store), which is the
-    difference between a per-epoch full-index pass and a KV-style
-    point lookup at 100 TB. Legacy flat appends (``epoch=None``)
-    full-scan until a ``compact_near_store`` migrates them.
+    (micro-batch-bounded) against the sig store the same way. Each
+    probe scans the whole band store, flat appends and epoch dirs
+    alike; ``compact_near_store`` bounds that scan to the distinct
+    signature set.
     """
     spark = new_docs.sparkSession
     # recover a torn compaction swap before probing (see
-    # incremental_exact_dedup); drop any legacy pre-r11 probe scratch
+    # incremental_exact_dedup)
     recover_swap(spark, store_path)
-    _clean_scratch(spark, f"{store_path}/_scratch")
     # 0. materialize the batch's MinHash signatures ONCE. Three
     # consumers need them (within-batch LSH, history probe, store
     # commit); without the pin each consumer (and every caller-side
@@ -1536,19 +1533,19 @@ def incremental_near_dedup(
     sigs = _near_store_sigs(
         batch, text_col, id_col, num_perm, k, bands, sigs=sigs_all
     )
-    band_dirs = _near_store_dirs(spark, store_path, "bands", epoch)
+    band_paths = _store_paths(spark, f"{store_path}/bands", epoch)
     # a torn commit can leave bands without sigs (or vice versa): with
     # no signatures to verify against, candidates are unconfirmable —
     # keep the docs (near-dedup is best-effort-drop, never best-effort-
     # keep-losing-data) and let the next full commit repair the store
-    sig_dirs = _near_store_dirs(spark, store_path, "sigs", epoch)
-    if band_dirs and sig_dirs:
+    sig_paths = _store_paths(spark, f"{store_path}/sigs", epoch)
+    if band_paths and sig_paths:
         probe = sigs.select(
             F.col(id_col),
             F.col("signature"),
             F.posexplode("band_hashes").alias("band_idx", "band_hash"),
         )
-        stored_bands = _read_stored_bands(spark, band_dirs, probe=probe)
+        stored_bands = _scan_store(spark, band_paths, _BAND_STORE)
         # The .distinct() was A/B-tested for removal/weakening in r12
         # (one-off interleaved A/B, 5 rounds; tools/ab_bench.py runs
         # that protocol now): dropping it reads 19 -> 18 jobs and min
@@ -1566,13 +1563,7 @@ def incremental_near_dedup(
             .select(id_col, "signature", "_fp")
             .distinct()
         )
-        # explicit schema (engine-owned layout, see _read_stored_bands):
-        # skips the per-probe 1-task footer-inference job. sig paths are
-        # loose part FILES or leaf batch_id=N dirs, so no partition
-        # columns are ever discovered under them.
-        stored_sigs = spark.read.schema(
-            "_fp BIGINT, signature ARRAY<BIGINT>"
-        ).parquet(*sig_dirs)
+        stored_sigs = _scan_store(spark, sig_paths, _SIG_STORE)
         agree = F.size(
             F.filter(
                 F.zip_with("signature", "old_signature", lambda a, b: a == b),
@@ -1597,7 +1588,7 @@ def incremental_near_dedup(
             .where(agree >= threshold)
             .select(id_col)
         )
-        if any("/batch_id=" not in d for d in sig_dirs):
+        if any("/batch_id=" not in d for d in sig_paths):
             # r12 (advisor fix): on a FLAT-append store (legacy
             # epoch=None commits) every replay re-appends every _fp, so
             # the no-distinct drop set grows linearly with replay count
@@ -1653,194 +1644,6 @@ def _unpersist_pin(df: DataFrame) -> None:
         pass
 
 
-def _clean_scratch(
-    spark, scratch_root: str, grace_seconds: int = 900
-) -> None:
-    """Remove LEGACY probe-scratch entries. Probes no longer write
-    signature scratch (r11: the per-batch pin is a localCheckpoint), so
-    ``_scratch`` content left by an older engine version is dead
-    weight — but a PRE-r11 process sharing the store during a rolling
-    upgrade may still hold a live lazy result over its scratch dir
-    (r12, advisor fix): only entries whose modification time is older
-    than ``grace_seconds`` are deleted, so an in-flight legacy probe
-    (seconds-to-minutes lifetime) survives while abandoned scratch
-    still gets collected. The root itself is removed once empty.
-    Hadoop FS so remote stores clean too."""
-    import time as _time
-
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(scratch_root)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return
-    cutoff_ms = int((_time.time() - grace_seconds) * 1000)
-    kept = 0
-    for st in fs.listStatus(path):
-        if st.getModificationTime() < cutoff_ms:
-            fs.delete(st.getPath(), True)
-        else:
-            kept += 1
-    if kept == 0:
-        fs.delete(path, True)
-
-
-def _near_store_dirs(
-    spark, store_path: str, sub: str, exclude_epoch: int | None
-) -> list[str]:
-    base = f"{store_path}/{sub}"
-    if exclude_epoch is None:
-        # root appends PLUS every epoch dir (compaction folds history
-        # into an epoch dir; non-epoch probes must still see it)
-        return _store_inputs(spark, base)
-    return _epoch_store_dirs(spark, base, exclude_epoch)
-
-
-#: hive-partition fan-out of the band store: epoch commits land under
-#: ``bands/batch_id=N/band_pfx=P`` with ``P = pmod(band_hash, 256)``,
-#: so a probe's bounded band-hash set prunes store DIRECTORIES
-#: (PartitionFilters) instead of scanning every band row — O(store/256)
-#: per epoch instead of O(store), the difference the design note in
-#: ``incremental_near_dedup`` names at 100 TB.
-BAND_PFX_MOD = 256
-
-
-def _band_pfx():
-    return F.pmod(F.col("band_hash"), F.lit(BAND_PFX_MOD)).cast("int")
-
-
-def _write_bands_partitioned(band_rows: DataFrame, path: str) -> None:
-    """Overwrite ``path`` with band rows hive-partitioned by band_pfx
-    (one file per populated pfx dir). Zero-row frames write FLAT — a
-    partitioned write of nothing leaves a schema-less directory
-    (_SUCCESS only) that breaks every later ``spark.read.parquet``."""
-    if band_rows.limit(1).isEmpty():
-        band_rows.write.mode("overwrite").parquet(path)
-        return
-    (
-        band_rows.withColumn("band_pfx", _band_pfx())
-        .repartition("band_pfx")
-        .write.mode("overwrite")
-        .partitionBy("band_pfx")
-        .parquet(path)
-    )
-
-
-def _read_stored_bands(spark, band_dirs: list[str], probe: DataFrame | None = None):
-    """Read the stored band rows ``(_fp, band_idx, band_hash)`` across a
-    MIXED store: ``band_pfx=``-partitioned epoch dirs (commits and
-    compactions after the layout upgrade) are read as one partitioned
-    scan — pruned to the probe's band-hash prefixes when ``probe`` is
-    given AND the store is big enough for pruning to beat the prefix
-    collect's own driver job (estimated from the dir listing;
-    ``SPARK_GRAFT_BAND_PRUNE_MIN_BYTES``, default 256 MiB) — while
-    legacy flat dirs/files
-    full-scan exactly as before. The two groups cannot share one read:
-    Spark refuses partition discovery over roots with conflicting
-    directory structures."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(band_dirs[0]).getFileSystem(spark._jsc.hadoopConfiguration())
-    # Explicit data schema (r11): the store layout is engine-owned and
-    # fixed (`commit_near_fingerprints` always writes these three
-    # columns), so schema INFERENCE — a 1-task footer-read job per
-    # spark.read.parquet call, pure fixed cost on every probe — buys
-    # nothing. Partition columns are appended per read group below
-    # (they differ: epoch dirs carry batch_id, a directly-partitioned
-    # root does not).
-    band_schema = "_fp BIGINT, band_idx INT, band_hash BIGINT"
-    part, flat = [], []
-    est_bytes = 0
-    for d in band_dirs:
-        p = P(d)
-        pfx_dirs = []
-        if fs.isDirectory(p):
-            pfx_dirs = [
-                st
-                for st in fs.listStatus(p)
-                if st.getPath().getName().startswith("band_pfx=")
-            ]
-        if pfx_dirs:
-            part.append(d)
-            # store-size estimate from THREE spread pfx subdirs (first,
-            # middle, last in listing order) extrapolated by the
-            # pfx-dir count — O(1) extra listings per epoch dir, no
-            # recursive walk (getContentSummary on a 100 TB store would
-            # itself be a full listing). r12 (verdict fix): the former
-            # single-dir sample mis-estimated by the skew factor when
-            # the one listed dir happened to be the hot or a near-empty
-            # prefix; band hashes are uniform by construction, so three
-            # spread samples bound the estimator error enough that a
-            # multi-GB store can no longer silently fall under the
-            # 256 MiB prune threshold off one unlucky dir. The estimate
-            # is biased UP via the LARGEST sample — an overestimate
-            # only costs the O(1) prefix collect, while an
-            # underestimate silently full-scans the store.
-            n_pfx = len(pfx_dirs)
-            idxs = sorted({0, n_pfx // 2, n_pfx - 1})
-            per_dir = max(
-                sum(c.getLen() for c in fs.listStatus(pfx_dirs[i].getPath()))
-                for i in idxs
-            )
-            est_bytes += per_dir * n_pfx
-        else:
-            flat.append(d)
-    cols = ["_fp", "band_idx", "band_hash"]
-    frames = []
-    if part:
-        vals = None
-        # The prefix prune costs one driver job (distinct+collect over
-        # the probe's band hashes). Pay it only when the partitioned
-        # store is big enough that pruning can save real scan work: a
-        # store under the threshold reads in a handful of packed file
-        # partitions anyway (r11 A/B on the bench store: full probe
-        # flow 4.56 -> 4.49 s min from skipping the collect). The
-        # threshold is scale-adaptive via env, default 256 MiB ~= 2
-        # maxPartitionBytes scan partitions.
-        prune_min = int(
-            os.environ.get("SPARK_GRAFT_BAND_PRUNE_MIN_BYTES", 256 << 20)
-        )
-        if probe is not None and est_bytes >= prune_min:
-            vals = sorted(
-                int(r[0])
-                for r in probe.select(_band_pfx().alias("p")).distinct().collect()
-            )
-        # epoch dirs are themselves partition directories (batch_id=N):
-        # Spark needs the explicit basePath or multi-root discovery
-        # reports CONFLICTING_DIRECTORY_STRUCTURES
-        by_base: dict[str, list[str]] = {}
-        for d in part:
-            by_base.setdefault(d.rsplit("/batch_id=", 1)[0], []).append(d)
-        if vals is not None and len(vals) >= BAND_PFX_MOD:
-            # a big probe batch covers every prefix — the isin filter
-            # would prune nothing and only cost plan/evaluation time
-            vals = None
-        for bp, ds in by_base.items():
-            # partition columns must be DECLARED with the explicit
-            # schema: batch_id only when the group's dirs sit under
-            # one (ds[0] != bp iff "/batch_id=" was stripped); band_pfx
-            # always (this is the partitioned group). BIGINT batch_id
-            # tolerates any epoch the int(epoch) write path can mint.
-            pcols = (
-                "batch_id BIGINT, band_pfx INT"
-                if ds[0] != bp
-                else "band_pfx INT"
-            )
-            df = (
-                spark.read.schema(f"{band_schema}, {pcols}")
-                .option("basePath", bp)
-                .parquet(*ds)
-            )
-            if vals is not None:
-                df = df.where(F.col("band_pfx").isin(vals))
-            frames.append(df.select(*cols))
-    if flat:
-        frames.append(spark.read.schema(band_schema).parquet(*flat).select(*cols))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
 def commit_near_fingerprints(
     survivors: DataFrame,
     store_path: str,
@@ -1857,9 +1660,11 @@ def commit_near_fingerprints(
     the downstream sink write succeeds). Signatures are recomputed with
     the same deterministic expression the dedup pass used, so the
     two-phase split cannot drift. With ``epoch`` the commit OVERWRITES
-    the epoch's own ``batch_id=N`` subdirectories (idempotent replays);
-    without it both stores get appends (duplicate rows only widen the
-    candidate set, never change survivors).
+    the epoch's own ``sigs/batch_id=N`` and ``bands/batch_id=N`` dirs
+    with flat part files (idempotent replays); without it both stores
+    get appends (duplicate rows only widen the candidate set, never
+    change survivors). Both go through ``_commit_store``, like the
+    exact-fingerprint store.
 
     ``sigs`` optionally supplies the batch's precomputed signature
     frame (a SUPERSET of the survivors is fine — it is semi-joined onto
@@ -1881,36 +1686,10 @@ def commit_near_fingerprints(
         band_rows = sigs.select(
             "_fp", F.posexplode("band_hashes").alias("band_idx", "band_hash")
         )
-        if epoch is None:
-            # legacy flat appends: loose part files under bands/ —
-            # full-scanned by probes until a compaction folds them into
-            # the band_pfx-partitioned layout
-            sig_rows.write.mode("append").parquet(f"{store_path}/sigs")
-            band_rows.write.mode("append").parquet(f"{store_path}/bands")
-        else:
-            sig_rows.write.mode("overwrite").parquet(
-                f"{store_path}/sigs/batch_id={int(epoch)}"
-            )
-            # band_pfx fan-out (see BAND_PFX_MOD): probes prune store
-            # directories by the probe's own prefix set. repartition on
-            # the partition column bounds the file count to one per
-            # populated pfx dir instead of tasks x dirs. An EMPTY batch
-            # (all docs short/deduped) must write flat: a partitioned
-            # write of zero rows leaves a schema-less directory that
-            # poisons every later probe's read.
-            _write_bands_partitioned(
-                band_rows, f"{store_path}/bands/batch_id={int(epoch)}"
-            )
+        _commit_store(sig_rows, f"{store_path}/sigs", epoch)
+        _commit_store(band_rows, f"{store_path}/bands", epoch)
     finally:
         sigs.unpersist()
-
-
-def _store_inputs(spark, store_path: str) -> list[str]:
-    """Every data location in a store directory: loose root part files
-    (non-epoch appends) plus ALL ``batch_id=N`` epoch dirs."""
-    return _fingerprint_store_files(spark, store_path) + _epoch_store_dirs(
-        spark, store_path, exclude_epoch=-1
-    )
 
 
 def compact_fingerprint_store(spark, store_path: str, into_epoch: int = 0) -> dict:
@@ -1930,13 +1709,14 @@ def compact_fingerprint_store(spark, store_path: str, into_epoch: int = 0) -> di
     compaction of an already-compacted store is a no-op rewrite."""
     store_path = store_path.rstrip("/")
     recover_swap(spark, store_path)
-    inputs = _store_inputs(spark, store_path)
+    inputs = _store_paths(spark, store_path, None)
     if not inputs:
         return {"fingerprints": 0, "inputs": 0, "compacted": False}
-    fps = spark.read.parquet(*inputs).select("_fp").distinct()
     rewrite = rewrite_path(store_path)
-    fps.write.mode("overwrite").parquet(f"{rewrite}/batch_id={int(into_epoch)}")
-    n = spark.read.parquet(f"{rewrite}/batch_id={int(into_epoch)}").count()
+    _commit_store(
+        _scan_store(spark, inputs, _EXACT_STORE).distinct(), rewrite, into_epoch
+    )
+    n = _scan_store(spark, [f"{rewrite}/batch_id={int(into_epoch)}"], _EXACT_STORE).count()
     swap_in(spark, store_path)
     return {"fingerprints": n, "inputs": len(inputs), "compacted": True}
 
@@ -1948,26 +1728,28 @@ def compact_near_store(spark, store_path: str, into_epoch: int = 0) -> dict:
     same motivation, swap protocol, and replay-horizon contract as
     ``compact_fingerprint_store``. Store size after compaction is the
     true signature-set size, so the map-side probe scan cost stops
-    growing with epoch count."""
+    growing with epoch count. The fold reads every layout a store may
+    hold (loose appends, flat epochs, and the prefix-partitioned band
+    epochs of older engine versions) and writes flat part files, so it
+    also migrates older stores."""
     store_path = store_path.rstrip("/")
     recover_swap(spark, store_path)
-    sig_in = _store_inputs(spark, f"{store_path}/sigs")
-    band_in = _store_inputs(spark, f"{store_path}/bands")
+    sig_in = _store_paths(spark, f"{store_path}/sigs", None)
+    band_in = _store_paths(spark, f"{store_path}/bands", None)
     if not sig_in and not band_in:
         return {"signatures": 0, "band_rows": 0, "inputs": 0, "compacted": False}
     rewrite = rewrite_path(store_path)
-    sigs = spark.read.parquet(*sig_in).dropDuplicates(["_fp"])
-    sigs.write.mode("overwrite").parquet(
-        f"{rewrite}/sigs/batch_id={int(into_epoch)}"
+    base = f"batch_id={int(into_epoch)}"
+    _commit_store(
+        _scan_store(spark, sig_in, _SIG_STORE).dropDuplicates(["_fp"]),
+        f"{rewrite}/sigs",
+        into_epoch,
     )
-    # compaction also MIGRATES legacy flat band layouts into the
-    # band_pfx-partitioned one (sub-scan probes from then on)
-    bands = _read_stored_bands(spark, band_in).dropDuplicates(
-        ["_fp", "band_idx", "band_hash"]
+    _commit_store(
+        _scan_store(spark, band_in, _BAND_STORE).distinct(), f"{rewrite}/bands", into_epoch
     )
-    _write_bands_partitioned(bands, f"{rewrite}/bands/batch_id={int(into_epoch)}")
-    n_sig = spark.read.parquet(f"{rewrite}/sigs/batch_id={int(into_epoch)}").count()
-    n_band = spark.read.parquet(f"{rewrite}/bands/batch_id={int(into_epoch)}").count()
+    n_sig = _scan_store(spark, [f"{rewrite}/sigs/{base}"], _SIG_STORE).count()
+    n_band = _scan_store(spark, [f"{rewrite}/bands/{base}"], _BAND_STORE).count()
     swap_in(spark, store_path)
     return {
         "signatures": n_sig,

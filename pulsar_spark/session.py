@@ -88,21 +88,14 @@ def get_spark(
         # on a cluster carry their own integrity layers.
         .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
         # Spark falls back to a DISTRIBUTED listing job once a read
-        # resolves more than this many partition directories (default
-        # 32). The near-dup band store is hive-partitioned 256 ways
-        # (dedupe.BAND_PFX_MOD), so every history probe was paying a
-        # 256-task listing JOB — pure scheduling fixed cost, measured
-        # as the single largest job of the x10 probe flow — to list
-        # directories a driver thread walks in milliseconds on a
-        # local/HDFS-fast filesystem. 1024 keeps every engine layout
-        # (topics <=32 partition dirs, band store 256 dirs, epoch
-        # stores) on the driver thread; deployments on slow object
-        # stores with many-thousand-directory stores can lower it via
-        # the env knob to get the distributed listing back.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "1024"),
-        )
+        # names more than this many root paths or partition directories
+        # (default 32): pure scheduling fixed cost for directories a
+        # driver thread walks in milliseconds on a local/HDFS-fast
+        # filesystem. Engine reads pass 32 routinely: a dedup-store
+        # probe names every batch_id=N epoch dir of a rolling crawl, and
+        # a scalable topic gains segment= dirs with every split. 1024
+        # keeps them on the driver thread.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

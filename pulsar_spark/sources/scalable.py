@@ -233,7 +233,7 @@ def produce_scalable(
     then the classic ``produce``'s log append over ``segment`` lanes:
     envelope mint, per-segment offsets in send order, one stored-topic
     read for the rebase."""
-    from pulsar_spark.sources.topics import _append_log
+    from pulsar_spark.sources.topics import _append_log, _stored_envelope
 
     meta = scalable_metadata(topic_path)
     segs = active_segments(meta)
@@ -250,7 +250,8 @@ def produce_scalable(
         df = payload.withColumn("segment", keyless)
     _append_log(
         df, topic_path, "segment", len(segs), "`segment`", producer_name,
-        key_col, event_time_col, _read_if_present(df.sparkSession, topic_path), codec,
+        key_col, event_time_col, _stored_envelope(df.sparkSession, topic_path, "segment"),
+        codec,
     )
 
 

@@ -18,7 +18,7 @@ and 8000 per append).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pulsar_spark.durable import read_json, write_atomic
@@ -420,10 +420,12 @@ def produce(
     existing table; an 8-row broadcast join).
 
     Pass ``sequence_col`` to supply caller sequence ids and get
-    broker-side effectively-once semantics: rows whose sequence is <=
-    the topic's highest stored sequence for this producer are silently
-    dropped, and in-batch repeats keep one row
-    (MessageDeduplication.java:279-281 isDuplicate).
+    broker-side effectively-once semantics: a row is silently dropped
+    when its sequence is at or below the highest one this producer has
+    already pushed, whether stored in the topic or sent earlier in the
+    same batch (MessageDeduplication.java:279-281 isDuplicate). So
+    in-batch repeats keep the first in send order, and a sequence lower
+    than an earlier send is dropped too.
 
     Pass ``registry`` (a ``pulsar_spark.schema_registry.SchemaRegistry``)
     to enforce the topic's registered schema on the write path — the
@@ -460,7 +462,7 @@ def produce(
     # metadata check), so a real read error on existing data PROPAGATES
     # instead of being silently treated as an empty topic.
     existing = (
-        _read_topic_if_present(payload.sparkSession, topic_path)
+        _stored_envelope(payload.sparkSession, topic_path, "partition")
         if mode == "append"
         else None
     )
@@ -515,30 +517,26 @@ def produce(
         high = _existing_sequences(existing)
 
         def pre_step(df: DataFrame) -> DataFrame:
-            # The high-water anti-filter only applies on append: an
-            # overwrite discards the stored log (and with it the dedup
-            # high-water map), so filtering the new batch against the
-            # data it is about to replace would drop every row.
+            # MessageDeduplication.isDuplicate drops every sequence at or
+            # below the highest one already pushed, so a row survives only
+            # above both its producer's stored high and the running max
+            # of the batch's earlier sends. That also drops in-batch
+            # repeats, keeping the first in send order. The window keeps
+            # each survivor's own _send_order, so offsets follow send
+            # order. The stored high applies on append only: an overwrite
+            # discards the stored log and its high-water map with it.
+            prev = F.max("sequence_id").over(
+                Window.partitionBy("producer_name")
+                .orderBy("_send_order")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
             if high is not None:
-                df = (
-                    df.join(F.broadcast(high), on="producer_name", how="left")
-                    .where(F.col("_hiseq").isNull() | (F.col("sequence_id") > F.col("_hiseq")))
-                    .drop("_hiseq")
-                )
-            # In-batch duplicate sequences keep the FIRST row in send
-            # order — the reference's MessageDeduplication admits the
-            # first message with a given sequence and rejects later
-            # repeats. The survivor carries its own _send_order inside
-            # the struct, so the window still numbers offsets in send
-            # order; a send order minted again above this shuffle would
-            # follow the aggregate's output order instead.
-            cols = [F.col(_qi(c)) for c in df.columns]
-            rest = [F.col(_qi(c)) for c in df.columns if c not in ("producer_name", "sequence_id")]
+                df = df.join(F.broadcast(high), on="producer_name", how="left")
+                prev = F.greatest(prev, F.col("_hiseq"))
             return (
-                df.groupBy("producer_name", "sequence_id")
-                .agg(F.min_by(F.struct(*rest), F.col("_send_order")).alias("_m"))
-                .select("producer_name", "sequence_id", "_m.*")
-                .select(*cols)
+                df.withColumn("_prevseq", prev)
+                .where(F.col("_prevseq").isNull() | (F.col("sequence_id") > F.col("_prevseq")))
+                .drop("_prevseq", "_hiseq")
             )
 
     import os
@@ -584,22 +582,39 @@ def produce(
             _write_producer_lock(topic_path, preserved_lock)
 
 
+def _has_data(topic_path: str, prefix: str) -> bool:
+    """Presence = ``{prefix}`` subdirectories exist (cheap metadata
+    check, mirroring the hive layout the writers produce — ``partition=``
+    for classic topics, ``segment=`` for scalable ones)."""
+    import os
+
+    return os.path.isdir(topic_path) and any(
+        n.startswith(prefix) for n in os.listdir(topic_path)
+    )
+
+
 def _read_topic_if_present(
     spark: SparkSession, topic_path: str, prefix: str = "partition="
 ) -> DataFrame | None:
     """The stored topic table, or None when no data has ever been
-    written. Presence = ``{prefix}`` subdirectories exist (cheap
-    metadata check, mirroring the hive layout the writers produce —
-    ``partition=`` for classic topics, ``segment=`` for scalable ones)
-    so that an actual read error on present data raises instead of
-    masquerading as an empty topic."""
-    import os
+    written (see ``_has_data``), so that an actual read error on
+    present data raises instead of masquerading as an empty topic."""
+    return spark.read.parquet(topic_path) if _has_data(topic_path, prefix) else None
 
-    if not os.path.isdir(topic_path):
+
+def _stored_envelope(
+    spark: SparkSession, topic_path: str, lane: str
+) -> DataFrame | None:
+    """The stored columns an append reads — ``<lane>``, ``offset``,
+    ``producer_name``, ``sequence_id`` — or None for a topic with no
+    data. The schema is declared, not inferred: inference reads a footer
+    in a one-task Spark job on every append. Scalable topics store no
+    ``sequence_id``; nothing reads it on their path, so the scan prunes it."""
+    if not _has_data(topic_path, f"{lane}="):
         return None
-    if not any(n.startswith(prefix) for n in os.listdir(topic_path)):
-        return None
-    return spark.read.parquet(topic_path)
+    return spark.read.schema(
+        f"{_qi(lane)} INT, offset BIGINT, producer_name STRING, sequence_id BIGINT"
+    ).parquet(topic_path)
 
 
 def _existing_sequences(existing: DataFrame | None) -> DataFrame | None:

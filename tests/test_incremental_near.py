@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from pulsar_spark.functions.dedupe import (
     commit_near_fingerprints,
@@ -383,3 +384,131 @@ class TestStoreCompaction:
 
         assert not compact_fingerprint_store(spark, str(tmp_path / "x"))["compacted"]
         assert not compact_near_store(spark, str(tmp_path / "y"))["compacted"]
+
+
+def _files_under(d: str) -> list[str]:
+    import os
+
+    return [n for n in os.listdir(d) if not n.startswith((".", "_"))]
+
+
+class TestFlatBandStore:
+    """Every near-store commit writes flat part files, epoch commits
+    under ``bands/batch_id=N`` and ``sigs/batch_id=N``. Stores written by
+    older engine versions hold band epochs partitioned into
+    ``band_pfx=P`` subdirectories; one scan reads them next to flat
+    epochs and loose appends, and compaction folds them flat."""
+
+    def _old_layout_epoch(self, spark, store, tmp_path, epoch):
+        """Rewrite ``bands/batch_id=epoch`` into the older ``band_pfx=``
+        layout: one hive partition per ``pmod(band_hash, 256)``."""
+        import shutil
+
+        d = f"{store}/bands/batch_id={epoch}"
+        old = str(tmp_path / "old_layout")
+        (
+            spark.read.parquet(d)
+            .withColumn("band_pfx", F.expr("CAST(pmod(band_hash, 256) AS INT)"))
+            .write.partitionBy("band_pfx")
+            .parquet(old)
+        )
+        shutil.rmtree(d)
+        shutil.move(old, d)
+        assert all(n.startswith("band_pfx=") for n in _files_under(d))
+
+    def _mixed_store(self, spark, store, tmp_path):
+        # epoch 0 in the older band_pfx layout, epoch 1 flat, and loose
+        # root appends from an epoch-less commit
+        def one(i, text):
+            return spark.createDataFrame([(i, text, "w")], SCHEMA)
+
+        commit_near_fingerprints(one(1, BASE), store, epoch=0)
+        self._old_layout_epoch(spark, store, tmp_path, 0)
+        commit_near_fingerprints(one(2, _distinct_text(2)), store, epoch=1)
+        commit_near_fingerprints(one(3, _distinct_text(3)), store)
+
+    def _probe(self, spark, store):
+        docs = spark.createDataFrame(
+            [
+                (10, BASE + " edited", "w"),
+                (11, _distinct_text(2) + " x", "w"),
+                (12, _distinct_text(3) + " y", "w"),
+                (13, _distinct_text(13), "w"),
+            ],
+            SCHEMA,
+        )
+        out = incremental_near_dedup(docs, store, threshold=0.6, update_store=False)
+        return sorted(r.doc_id for r in out.collect())
+
+    def test_epoch_commit_writes_flat_band_files(self, spark, tmp_path):
+        store = str(tmp_path / "s")
+        s0 = incremental_near_dedup(
+            spark.createDataFrame([(1, BASE, "w"), (2, _distinct_text(2), "w")], SCHEMA),
+            store, threshold=0.6, epoch=0, update_store=False,
+        )
+        commit_near_fingerprints(s0, store, epoch=0)
+        for sub in ("bands", "sigs"):
+            names = _files_under(f"{store}/{sub}/batch_id=0")
+            assert names and all(n.startswith("part-") for n in names), names
+        bands = spark.read.parquet(f"{store}/bands/batch_id=0")
+        assert bands.columns == ["_fp", "band_idx", "band_hash"]
+        assert bands.count() == 2 * 16
+
+    def test_probe_over_mixed_layouts_drops_recrawls(self, spark, tmp_path):
+        store = str(tmp_path / "s")
+        self._mixed_store(spark, store, tmp_path)
+        # recrawls of all three layouts' docs drop in one epoch-less probe
+        assert self._probe(spark, store) == [13]
+
+    def test_compaction_folds_mixed_layouts(self, spark, tmp_path):
+        from pulsar_spark.functions.dedupe import compact_near_store
+
+        store = str(tmp_path / "s")
+        self._mixed_store(spark, store, tmp_path)
+        before = self._probe(spark, store)
+        stats = compact_near_store(spark, store)
+        assert stats["compacted"] and stats["band_rows"] == 3 * 16
+        for sub in ("bands", "sigs"):
+            assert _files_under(f"{store}/{sub}") == ["batch_id=0"]
+            names = _files_under(f"{store}/{sub}/batch_id=0")
+            assert names and all(n.startswith("part-") for n in names), names
+        assert self._probe(spark, store) == before == [13]
+
+
+class TestDriverSideListing:
+    def test_store_scan_over_40_epochs_lists_on_driver(self, spark, tmp_path):
+        """A rolling crawl's store passes Spark's default 32-path limit
+        for driver-side listing; past it, building the scan runs a
+        distributed listing job. The session threshold keeps a
+        40-epoch store on the driver: 0 jobs, against 1 at 32."""
+        import uuid
+
+        from pulsar_spark.functions.dedupe import _EXACT_STORE, _scan_store, _store_paths
+
+        store = str(tmp_path / "fp")
+        spark.range(40).selectExpr(
+            "id AS batch_id", "md5(CAST(id AS STRING)) AS _fp"
+        ).write.partitionBy("batch_id").parquet(store)
+        paths = _store_paths(spark, store, None)
+        assert len(paths) == 40
+        sc = spark.sparkContext
+
+        def jobs_to_build_scan():
+            group = "store-scan-" + uuid.uuid4().hex
+            sc.setJobGroup(group, group)
+            try:
+                _scan_store(spark, paths, _EXACT_STORE)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        assert jobs_to_build_scan() == 0
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "32")
+        try:
+            assert jobs_to_build_scan() == 1
+        finally:
+            spark.conf.set(key, prev)

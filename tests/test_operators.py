@@ -546,10 +546,12 @@ class TestEffectivelyOnceProduce:
 
     def test_sequence_path_offsets_follow_send_order(self, spark, tmp_path):
         """A log position follows send order on the dedup path too, not
-        sequence-id order: the in-batch dedup shuffle must not re-mint
-        send order above itself. Rows are sent in ``v`` order with
-        sequence ids permuted against it; one key puts every row on one
-        partition, so its offsets must hold ``v`` in the order sent."""
+        sequence-id order, and a sequence at or below one sent earlier
+        in the batch is a duplicate (MessageDeduplication isDuplicate).
+        Rows are sent in ``v`` order with sequence ids permuted against
+        it; one key puts every row on one partition, so the log must
+        hold exactly the running-max records, in the order sent, at
+        offsets 0..n-1."""
         from pulsar_spark.sources.topics import produce
 
         d = str(tmp_path / "so")
@@ -557,8 +559,14 @@ class TestEffectivelyOnceProduce:
             "'k' AS k", "id AS v", "id * 7919 % 2000 AS seq"
         )
         produce(payload, d, key_col="k", sequence_col="seq", mode="overwrite")
-        got = spark.read.parquet(d).orderBy("offset").select("v").collect()
-        assert [r.v for r in got] == list(range(2000))
+        want, high = [], -1
+        for v in range(2000):
+            if v * 7919 % 2000 > high:
+                want.append(v)
+                high = v * 7919 % 2000
+        got = spark.read.parquet(d).orderBy("offset").select("offset", "v").collect()
+        assert [r.v for r in got] == want
+        assert [r.offset for r in got] == list(range(len(want)))
 
     def test_scalable_offsets_follow_send_order(self, spark, tmp_path):
         """Same contract on a scalable topic's segment lanes."""
@@ -579,10 +587,10 @@ class TestAppendCounterBudget:
     through the status tracker. Raising a budget is a deliberate edit."""
 
     # jobs per append: (fresh topic, existing topic). An existing topic
-    # adds a one-task footer read for the stored schema and the
-    # broadcast of its stored high offsets.
-    CLASSIC_JOBS = (1, 3)
-    SCALABLE_JOBS = (1, 3)
+    # adds the broadcast of its stored high offsets; the stored columns
+    # are read with a declared schema, so no footer-inference job.
+    CLASSIC_JOBS = (1, 2)
+    SCALABLE_JOBS = (1, 2)
 
     @staticmethod
     def _counters(spark, call):

@@ -134,136 +134,6 @@ class TestCryptoFailureActions:
         assert "crypto_failure" in outc.columns
 
 
-class TestPartitionedBandStore:
-    BASE = (
-        "the quick brown fox jumps over the lazy dog and runs far away "
-        "into the deep woods tonight while the moon rises over the hills"
-    )
-    SCHEMA = "doc_id bigint, text string, source string"
-
-    def _docs(self, spark, rows):
-        return spark.createDataFrame(rows, self.SCHEMA)
-
-    def _tok(self, i):
-        return " ".join(f"tok{i}w{j}" for j in range(30))
-
-    def test_epoch_commit_writes_band_pfx_layout(self, spark, tmp_path):
-        import os
-
-        from pulsar_spark.functions.dedupe import (
-            commit_near_fingerprints,
-            incremental_near_dedup,
-        )
-
-        store = str(tmp_path / "s")
-        s0 = incremental_near_dedup(
-            self._docs(spark, [(1, self.BASE, "w"), (2, self._tok(2), "w")]),
-            store, threshold=0.6, epoch=0, update_store=False,
-        )
-        commit_near_fingerprints(s0, store, epoch=0)
-        names = os.listdir(f"{store}/bands/batch_id=0")
-        assert any(n.startswith("band_pfx=") for n in names)
-        # one file per populated pfx dir (repartition on the partition
-        # column), not tasks x dirs
-        for n in names:
-            if n.startswith("band_pfx="):
-                parts = [
-                    f for f in os.listdir(f"{store}/bands/batch_id=0/{n}")
-                    if f.startswith("part-")
-                ]
-                assert len(parts) == 1
-
-    def test_probe_plan_prunes_band_partitions(self, spark, tmp_path, monkeypatch):
-        from pulsar_spark.functions.dedupe import (
-            _read_stored_bands,
-            commit_near_fingerprints,
-            incremental_near_dedup,
-            minhash_signatures,
-        )
-        from pulsar_spark.plans.audit import partition_filters
-
-        # the prefix prune is size-gated (r11): force it on for this
-        # tiny store so the plan shape stays assertable
-        monkeypatch.setenv("SPARK_GRAFT_BAND_PRUNE_MIN_BYTES", "0")
-        store = str(tmp_path / "s")
-        e0 = self._docs(
-            spark, [(i, self._tok(i), "w") for i in range(40)]
-        )
-        s0 = incremental_near_dedup(e0, store, threshold=0.6, epoch=0,
-                                    update_store=False)
-        commit_near_fingerprints(s0, store, epoch=0)
-        probe = minhash_signatures(
-            self._docs(spark, [(100, self._tok(3) + " x", "w")]), bands=16,
-        ).select("doc_id", "signature", F.posexplode("band_hashes").alias(
-            "band_idx", "band_hash"))
-        dirs = [f"{store}/bands/batch_id=0"]
-        pruned = _read_stored_bands(spark, dirs, probe=probe)
-        pruned.collect()
-        pf = partition_filters(pruned)
-        assert pf and any("band_pfx" in f for f in pf)
-        # pruning is lossless for the join: every stored row whose
-        # band_hash the probe carries survives the prune
-        full = _read_stored_bands(spark, dirs)
-        probe_hashes = {r.band_hash for r in probe.collect()}
-        want = {
-            (r._fp, r.band_idx, r.band_hash)
-            for r in full.collect() if r.band_hash in probe_hashes
-        }
-        got = {(r._fp, r.band_idx, r.band_hash) for r in pruned.collect()}
-        assert want <= got
-
-    def test_mixed_flat_and_partitioned_history(self, spark, tmp_path):
-        from pulsar_spark.functions.dedupe import incremental_near_dedup
-
-        store = str(tmp_path / "s")
-        # epoch 0: partitioned commit; flat append on top (epoch=None)
-        incremental_near_dedup(
-            self._docs(spark, [(1, self.BASE, "w")]), store,
-            threshold=0.6, epoch=0,
-        ).collect()
-        incremental_near_dedup(
-            self._docs(spark, [(2, self._tok(2), "w")]), store, threshold=0.6,
-        ).collect()
-        # recrawls of BOTH layouts' docs must drop in one epoch-less
-        # probe (epoch probes deliberately see only epoch dirs)
-        out = incremental_near_dedup(
-            self._docs(
-                spark,
-                [
-                    (10, self.BASE + " edited", "w"),
-                    (11, self._tok(2) + " x", "w"),
-                    (12, self._tok(12), "w"),
-                ],
-            ),
-            store, threshold=0.6, update_store=False,
-        )
-        assert sorted(r.doc_id for r in out.collect()) == [12]
-
-    def test_compaction_migrates_flat_layout(self, spark, tmp_path):
-        import os
-
-        from pulsar_spark.functions.dedupe import (
-            compact_near_store,
-            incremental_near_dedup,
-        )
-
-        store = str(tmp_path / "s")
-        incremental_near_dedup(
-            self._docs(spark, [(1, self.BASE, "w")]), store, threshold=0.6,
-        ).collect()
-        stats = compact_near_store(spark, store)
-        assert stats["compacted"]
-        assert any(
-            n.startswith("band_pfx=")
-            for n in os.listdir(f"{store}/bands/batch_id=0")
-        )
-        out = incremental_near_dedup(
-            self._docs(spark, [(2, self.BASE + " v2", "w")]), store,
-            threshold=0.6,
-        )
-        assert out.collect() == []
-
-
 class TestTrainedLangid:
     # planted multilingual fixture: real per-language vocabulary, text
     # that mostly AVOIDS the heuristic's five marker words — the case a

@@ -86,7 +86,9 @@ class TestUnionFindLimitCollectBoundary:
 
 
 class TestIncrementalNearNoScratch:
-    def test_probe_writes_no_scratch_and_cleans_legacy(self, spark, tmp_path):
+    def test_probe_writes_no_scratch(self, spark, tmp_path):
+        # the per-batch pin is a localCheckpoint: a probe leaves nothing
+        # in the store beyond what a commit writes
         import os
 
         from pulsar_spark.functions.dedupe import (
@@ -100,30 +102,12 @@ class TestIncrementalNearNoScratch:
             ["doc_id", "text"],
         )
         commit_near_fingerprints(docs, store, epoch=1)
-        # plant TWO legacy scratch dirs: one ABANDONED (mtime past the
-        # grace window — must be collected) and one FRESH (a pre-r11
-        # process may still hold a live lazy result over it during a
-        # rolling upgrade — must survive; r12 advisor fix)
-        old = os.path.join(store, "_scratch", "probe-deadbeef")
-        fresh = os.path.join(store, "_scratch", "probe-cafebabe")
-        os.makedirs(old)
-        os.makedirs(fresh)
-        stale_t = 1_000_000_000  # 2001 — far past any grace window
-        os.utime(old, (stale_t, stale_t))
         probe = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
         out = incremental_near_dedup(
             probe, store, threshold=0.9, update_store=False, epoch=2
         )
-        out.count()
-        assert not os.path.exists(old)
-        assert os.path.exists(fresh)
-        # a second probe after the grace window would collect the rest:
-        # simulate by aging the fresh dir and probing again
-        os.utime(fresh, (stale_t, stale_t))
-        incremental_near_dedup(
-            probe, store, threshold=0.9, update_store=False, epoch=2
-        ).count()
-        assert not os.path.exists(os.path.join(store, "_scratch"))
+        assert out.count() == 0
+        assert sorted(os.listdir(store)) == ["bands", "sigs"]
 
     def test_survivors_keep_all_input_columns(self, spark, tmp_path):
         # the loser-id anti-join must return the caller's FULL rows
@@ -139,71 +123,6 @@ class TestIncrementalNearNoScratch:
         out = incremental_near_dedup(docs, store, threshold=0.9, epoch=0)
         assert sorted(out.columns) == ["doc_id", "source", "text"]
         assert out.count() == 2
-
-
-class TestBandPruneSizeGate:
-    """r11: the probe-prefix partition prune pays a driver collect job,
-    so it is gated on the estimated partitioned-store size
-    (SPARK_GRAFT_BAND_PRUNE_MIN_BYTES, default 256 MiB)."""
-
-    def _store(self, spark, tmp_path):
-        from pulsar_spark.functions.dedupe import commit_near_fingerprints
-
-        store = str(tmp_path / "store")
-        docs = spark.createDataFrame(
-            [(i, " ".join(f"t{i}w{j}" for j in range(20))) for i in range(30)],
-            ["doc_id", "text"],
-        )
-        commit_near_fingerprints(docs, store, epoch=0)
-        return store, docs
-
-    def _probe(self, docs):
-        from pulsar_spark.functions.dedupe import minhash_signatures
-
-        return minhash_signatures(docs.limit(3), bands=16).select(
-            "doc_id",
-            "signature",
-            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
-        )
-
-    def test_small_store_skips_prune(self, spark, tmp_path, monkeypatch):
-        from pulsar_spark.functions.dedupe import _read_stored_bands
-        from pulsar_spark.plans.audit import partition_filters
-
-        monkeypatch.delenv("SPARK_GRAFT_BAND_PRUNE_MIN_BYTES", raising=False)
-        store, docs = self._store(spark, tmp_path)
-        out = _read_stored_bands(
-            spark, [f"{store}/bands/batch_id=0"], probe=self._probe(docs)
-        )
-        # tiny store: no prefix filter in the plan (the collect job was
-        # skipped), and the full band set is readable
-        pf = partition_filters(out)
-        assert not any("band_pfx" in f for f in (pf or []))
-        assert out.count() == 30 * 16
-
-    def test_big_store_threshold_prunes(self, spark, tmp_path, monkeypatch):
-        from pulsar_spark.functions.dedupe import _read_stored_bands
-        from pulsar_spark.plans.audit import partition_filters
-
-        monkeypatch.setenv("SPARK_GRAFT_BAND_PRUNE_MIN_BYTES", "1")
-        store, docs = self._store(spark, tmp_path)
-        probe = self._probe(docs)
-        out = _read_stored_bands(
-            spark, [f"{store}/bands/batch_id=0"], probe=probe
-        )
-        pf = partition_filters(out)
-        assert pf and any("band_pfx" in f for f in pf)
-        # lossless for the join: every stored row whose band_hash the
-        # probe carries survives the prune
-        full = _read_stored_bands(spark, [f"{store}/bands/batch_id=0"])
-        hashes = {r.band_hash for r in probe.collect()}
-        want = {
-            (r._fp, r.band_idx, r.band_hash)
-            for r in full.collect()
-            if r.band_hash in hashes
-        }
-        got = {(r._fp, r.band_idx, r.band_hash) for r in out.collect()}
-        assert want <= got
 
 
 class TestSymmetrizeExplode:
@@ -229,21 +148,6 @@ class TestSymmetrizeExplode:
         got = self._run(spark, rows, max_edges=0)  # pin the loop path
         assert got == {1: (1, 2), 2: (1, 2), 3: (3, 2), 4: (3, 2)}
 
-
-class TestDriverSideListing:
-    def test_partition_discovery_threshold_covers_band_store(self, spark):
-        # r11: Spark's default parallelPartitionDiscovery.threshold (32)
-        # made every probe of the 256-dir band_pfx store pay a 256-task
-        # DISTRIBUTED listing job (measured: 795 -> 539 tasks per x10
-        # probe once lifted). The session default must keep every engine
-        # layout — topics (<=32 partition dirs) and the band store
-        # (BAND_PFX_MOD=256 dirs) — on the driver-thread listing path.
-        from pulsar_spark.functions.dedupe import BAND_PFX_MOD
-
-        thr = int(
-            spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
-        )
-        assert thr >= BAND_PFX_MOD
 
 class TestLoadTableSchemaCache:
     def test_second_load_pays_no_job_and_same_schema(self, spark, tmp_path):

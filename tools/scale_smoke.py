@@ -316,41 +316,6 @@ def main() -> None:
             np_ / (time.perf_counter() - t0)
         )
 
-        # (a2) the band_pfx-partitioned store at 50x: a TRICKLE probe
-        # (one doc — the fine-grained rolling-crawl steady state) must
-        # touch only its own band-hash prefix dirs. Report the probe
-        # latency AND the fraction of stored band bytes its
-        # PartitionFilters prune actually reads — the O(store/256)
-        # claim, measured, against the same 50x store.
-        from pulsar_spark.functions.dedupe import (
-            BAND_PFX_MOD,
-            minhash_signatures,
-        )
-
-        one = probe.limit(1)
-        t0 = time.perf_counter()
-        incremental_near_dedup(one, store, update_store=False, epoch=2).count()
-        out["incr_near_1doc_probe_sec"] = round(time.perf_counter() - t0, 3)
-        pfx = {
-            int(r[0])
-            for r in minhash_signatures(one, bands=16)
-            .select(F.explode("band_hashes").alias("h"))
-            .select(F.pmod("h", F.lit(BAND_PFX_MOD)))
-            .collect()
-        }
-        band_root = f"{store}/bands/batch_id=1"
-        def _dir_bytes(d):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(d) for f in fs
-            )
-        total_b = _dir_bytes(band_root)
-        probed_b = sum(
-            _dir_bytes(os.path.join(band_root, f"band_pfx={p}"))
-            for p in pfx
-            if os.path.isdir(os.path.join(band_root, f"band_pfx={p}"))
-        )
-        out["incr_near_1doc_scan_frac"] = round(probed_b / max(1, total_b), 4)
         shutil.rmtree(os.path.dirname(store), ignore_errors=True)
 
         # (b) replicated subscriptions at 50x topic size: the full
