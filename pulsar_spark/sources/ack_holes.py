@@ -109,13 +109,9 @@ def subscription_ack_holes(topic_path: str, subscription: str) -> dict[int, list
     """The persisted hole set for ``subscription``:
     ``{segment_id: [[lo, hi], ...]}`` (sorted, disjoint, all at/after
     the segment's cursor). Empty dict when no holes are stored."""
-    from pulsar_spark.sources.scalable import _read_subscriptions
+    from pulsar_spark.sources.scalable import _cursor
 
-    subs = _read_subscriptions(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    holes = subs[subscription].get("ack_holes", {})
-    return {int(k): [list(map(int, r)) for r in v] for k, v in holes.items()}
+    return _cursor(topic_path, subscription)[1]
 
 
 def acknowledge_individual(
@@ -129,69 +125,37 @@ def acknowledge_individual(
     a persisted subscription — the non-transactional
     ``QueueConsumer.acknowledge(MessageId)`` path. Per segment the
     offsets fold into ``(cursor, holes)`` via :func:`add_acks`; the
-    updated vector + hole set persist atomically in one registry write.
-    Returns the advanced :class:`Checkpoint`.
+    updated vector + hole set persist atomically in one registry write
+    (``scalable._edit_cursors``). Returns the advanced
+    :class:`Checkpoint`.
 
     A subscription still at the LATEST sentinel is RESOLVED to its
     concrete high-watermark vector first (the floating-latest contract
-    every other verb follows — seek/create resolve the same way): acks
-    folded under an unresolved sentinel would be inert, because
-    ``subscription_visible`` / ``checkpoint_start_filter`` ignore the
-    offsets map while ``latest`` is set. Resolution needs a
-    ``SparkSession`` (the ``spark`` argument, or the active session);
-    with neither available the ack raises rather than silently
-    recording dead state."""
-    from pulsar_spark.sources.scalable import (
-        Checkpoint,
-        _read_subscriptions,
-        _write_subscriptions,
-    )
+    every slot edit follows): acks folded under an unresolved sentinel
+    would be inert, because ``subscription_visible`` /
+    ``checkpoint_start_filter`` ignore the offsets map while ``latest``
+    is set. Resolution needs a ``SparkSession`` (the ``spark`` argument,
+    or the active session); with neither available the ack raises
+    rather than silently recording dead state."""
+    from pyspark.sql import SparkSession
 
-    subs = _read_subscriptions(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    entry = subs[subscription]
-    ck = entry["checkpoint"]
-    if ck.get("latest"):
-        from pyspark.sql import SparkSession
+    from pulsar_spark.sources.scalable import Checkpoint, _edit_cursors
 
-        from pulsar_spark.sources.scalable import _resolve_latest_offsets
+    def fold(ck, holes):
+        offsets = dict(ck.offsets)
+        for seg, offs in acks.items():
+            seg = int(seg)
+            offsets[seg], rs = add_acks(offsets.get(seg, 0), holes.get(seg, []), offs)
+            holes[seg] = cap_ranges(rs, max_ranges_per_segment)
+        return Checkpoint(offsets), holes
 
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise ValueError(
-                "subscription cursor is a LATEST sentinel: acks folded under "
-                "it would be inert — pass spark= (or ack inside an active "
-                "session) so it can resolve to the high-watermark vector first"
-            )
-        ck = {
-            "latest": False,
-            "offsets": {
-                str(k): v
-                for k, v in _resolve_latest_offsets(
-                    spark, topic_path, Checkpoint(ck.get("offsets", {}), latest=True)
-                ).items()
-            },
-        }
-    offsets = {int(k): int(v) for k, v in ck.get("offsets", {}).items()}
-    holes = {
-        int(k): [list(map(int, r)) for r in v]
-        for k, v in entry.get("ack_holes", {}).items()
-    }
-    for seg, offs in acks.items():
-        seg = int(seg)
-        cur, rs = add_acks(offsets.get(seg, 0), holes.get(seg, []), offs)
-        offsets[seg] = cur
-        holes[seg] = cap_ranges(rs, max_ranges_per_segment)
-    entry["checkpoint"] = {
-        "latest": bool(ck.get("latest")),
-        "offsets": {str(k): v for k, v in offsets.items()},
-    }
-    entry["ack_holes"] = {
-        str(k): v for k, v in holes.items() if v
-    }
-    _write_subscriptions(topic_path, subs)
-    return Checkpoint(offsets)
+    return _edit_cursors(
+        topic_path,
+        fold,
+        [subscription],
+        spark or SparkSession.getActiveSession(),
+        resolve_latest=True,
+    )[subscription]
 
 
 def reconcile_holes_with_cursor(
@@ -277,13 +241,13 @@ def subscription_visible(
     produce first (nothing can have been acked on an empty topic)."""
     from pulsar_spark.operators.transactions import committed_view
     from pulsar_spark.sources.scalable import (
+        _cursor,
         _read_if_present,
         checkpoint_start_filter,
-        subscription_checkpoint,
     )
 
     df = _read_if_present(spark, topic_path)
-    ckpt = subscription_checkpoint(topic_path, subscription)
+    ckpt, holes = _cursor(topic_path, subscription)
     if df is None:
         return spark.createDataFrame([], "segment int, offset bigint")
     if ckpt.latest:
@@ -291,8 +255,7 @@ def subscription_visible(
         # delivered" (same reading as subscription_backlog's zeros) —
         # full-schema empty frame, not a checkpoint_start_filter error
         return df.limit(0)
-    df = checkpoint_start_filter(df, ckpt)
-    df = ack_hole_filter(df, subscription_ack_holes(topic_path, subscription))
+    df = ack_hole_filter(checkpoint_start_filter(df, ckpt), holes)
     if coordinator is not None and "txn_id" in df.columns:
         df = committed_view(df, coordinator.state_df(spark))
     return df

@@ -464,18 +464,10 @@ def checkpoint_drain_checker(
     immediately (SegmentDrainChecker.java:33-35). Pass ``highs`` (from
     ``segment_high_watermarks``) to reuse an already-computed watermark
     map; otherwise one bounded grouped aggregate runs at construction.
-    The returned callable is pure."""
-    from pulsar_spark.sources.scalable import segment_high_watermarks
+    The returned callable is pure (``scalable._drained``, the one drain
+    rule sealed-segment GC and ``delete_segment`` also apply)."""
+    from pulsar_spark.sources.scalable import _drained, segment_high_watermarks
 
     if highs is None:
         highs = segment_high_watermarks(spark, topic_path)
-
-    def is_drained(segment: dict) -> bool:
-        if getattr(checkpoint, "latest", False):
-            return True  # latest cursor: zero backlog by definition
-        sid = int(segment["segment_id"])
-        if sid not in highs:
-            return True  # no stored data: trivially drained
-        return int(checkpoint.offsets.get(sid, 0)) > highs[sid]
-
-    return is_drained
+    return lambda segment: _drained(checkpoint, int(segment["segment_id"]), highs)

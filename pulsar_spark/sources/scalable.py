@@ -439,21 +439,12 @@ def gc_sealed_segments(
             _write_meta(topic_path, meta)
         return []
     highs = segment_high_watermarks(spark, topic_path)
-
-    def drained_for_all(seg: dict) -> bool:
-        sid = int(seg["segment_id"])
-        if sid not in highs:
-            return True  # no stored data: nothing to drain
-        for ckpt in (subscriptions or {}).values():
-            if ckpt is None:
-                return False  # opaque checkpoint subscription: in use
-            if getattr(ckpt, "latest", False):
-                continue  # latest cursor: zero backlog by definition
-            if int(ckpt.offsets.get(sid, 0)) <= highs[sid]:
-                return False
-        return True
-
-    pruned = [int(s["segment_id"]) for s in candidates if drained_for_all(s)]
+    cursors = list((subscriptions or {}).values())
+    pruned = [
+        sid
+        for sid in (int(s["segment_id"]) for s in candidates)
+        if all(_drained(ck, sid, highs) for ck in cursors)
+    ]
     if not pruned:
         if backfilled:
             _write_meta(topic_path, meta)
@@ -598,17 +589,22 @@ class Checkpoint:
     def latest(cls) -> "Checkpoint":
         return cls({}, latest=True)
 
+    # the one JSON shape of a position vector: Checkpoint bytes, the
+    # subscription registry's "checkpoint" value, MultiCheckpoint slices
+    def to_dict(self) -> dict:
+        return {"latest": self.latest, "offsets": {str(k): v for k, v in self.offsets.items()}}
+
+    @classmethod
+    def from_dict(cls, d: dict) -> "Checkpoint":
+        return cls(d.get("offsets", {}), latest=bool(d.get("latest")))
+
     # Checkpoint.toByteArray() / fromByteArray()
     def to_bytes(self) -> bytes:
-        return json.dumps(
-            {"latest": self.latest, "offsets": {str(k): v for k, v in self.offsets.items()}},
-            sort_keys=True,
-        ).encode("utf-8")
+        return json.dumps(self.to_dict(), sort_keys=True).encode("utf-8")
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "Checkpoint":
-        d = json.loads(data.decode("utf-8"))
-        return cls(d.get("offsets", {}), latest=bool(d.get("latest")))
+        return cls.from_dict(json.loads(data.decode("utf-8")))
 
 
 def segment_high_watermarks(
@@ -632,23 +628,63 @@ def segment_high_watermarks(
     return stored_high_offsets(df, "segment")
 
 
+def _past_end(spark, topic_path: str, segments: list[int] | None = None) -> dict[int, int]:
+    """The past-the-end cursor vector ``{segment: high + 1}`` — the ONE
+    home of that closed form (read advance, LATEST resolution, clear,
+    the seek skip-all arm). Covers every stored segment, or exactly the
+    listed ``segments`` (one partition-pruned aggregate; a listed
+    segment with no stored rows gets 0)."""
+    highs = segment_high_watermarks(spark, topic_path, segments)
+    if segments is None:
+        return {sid: hi + 1 for sid, hi in highs.items()}
+    return {int(s): highs.get(int(s), -1) + 1 for s in segments}
+
+
+def _resolve_latest(spark, topic_path: str, ck: Checkpoint) -> Checkpoint:
+    """A LATEST sentinel resolved into its concrete "nothing stored is
+    delivered" vector, so an edit or a streaming start cannot silently
+    drop the flag and flip every OTHER segment back to earliest.
+    Resolution needs a SparkSession for the one watermark aggregate;
+    other vectors pass through unchanged."""
+    if not ck.latest:
+        return ck
+    if spark is None:
+        raise ValueError(
+            "subscription cursor is a LATEST sentinel: resolving it into a "
+            "concrete vector needs a SparkSession"
+        )
+    return Checkpoint(_past_end(spark, topic_path))
+
+
+def _drained(ckpt: Checkpoint | None, segment_id: int, highs: dict[int, int]) -> bool:
+    """The ONE drain rule (SegmentDrainChecker.java:30-35) shared by the
+    coordinator's drain gate, sealed-segment GC and ``delete_segment``:
+    a segment with no stored data is drained; an opaque (None) cursor
+    is not; a LATEST cursor is; otherwise the cursor must be past the
+    segment's stored high watermark."""
+    if segment_id not in highs:
+        return True
+    if ckpt is None:
+        return False
+    return ckpt.latest or int(ckpt.offsets.get(segment_id, 0)) > highs[segment_id]
+
+
 def checkpoint_start_filter(df: DataFrame, ckpt: Checkpoint) -> DataFrame:
     """Apply a Checkpoint's per-segment start offsets as a literal-map
     predicate (``offset >= start[segment]``, unseen segments start
-    at 0). The ONE place the cursor-filter expression lives — the
-    checkpoint reader, the subscription backlog view and the streaming
-    assigned consumer all share it so cursor semantics cannot drift.
-    Explicit casts on both map sides: raw int literals >2^31 would
-    infer LongType while small ones infer IntegerType, and a
-    mixed-width ``create_map`` is an AnalysisException — exactly the
-    offsets this module sees at scale.
+    at 0, the map from ``envelope.watermark_lookup``). The ONE place
+    the cursor-filter expression lives — the checkpoint reader, the
+    subscription visibility view and the streaming assigned consumer
+    all share it so cursor semantics cannot drift.
 
     A LATEST-sentinel checkpoint is rejected here rather than treated
     as earliest (empty offsets would otherwise return the FULL frame —
     the exact inverse of latest semantics): callers must first resolve
     latest into a concrete high-watermark vector, as
-    ``read_from_checkpoint`` / ``subscription_backlog`` /
+    ``read_from_checkpoint`` / ``subscription_visible`` /
     ``subscribe_assigned`` all do."""
+    from pulsar_spark.envelope import watermark_lookup
+
     if ckpt.latest:
         raise ValueError(
             "checkpoint_start_filter got a LATEST sentinel: resolve it to a "
@@ -656,14 +692,9 @@ def checkpoint_start_filter(df: DataFrame, ckpt: Checkpoint) -> DataFrame:
         )
     if not ckpt.offsets:
         return df
-    start = F.create_map(
-        *[
-            x
-            for sid, off in sorted(ckpt.offsets.items())
-            for x in (F.lit(int(sid)).cast("int"), F.lit(int(off)).cast("bigint"))
-        ]
+    return df.where(
+        F.col("offset") >= watermark_lookup(F.col("segment"), ckpt.offsets, default=0)
     )
-    return df.where(F.col("offset") >= F.coalesce(start[F.col("segment")], F.lit(0)))
 
 
 def read_from_checkpoint(
@@ -682,15 +713,10 @@ def read_from_checkpoint(
     if df is None:
         empty = spark.createDataFrame([], "segment int, offset bigint")
         return empty, Checkpoint(dict(ckpt.offsets), latest=False)
-    highs = {
-        sid: mx + 1 for sid, mx in segment_high_watermarks(spark, topic_path).items()
-    }
+    ends = _past_end(spark, topic_path)
     if ckpt.latest:
-        return df.limit(0), Checkpoint(highs)
-    out = checkpoint_start_filter(df, ckpt)
-    merged = dict(ckpt.offsets)
-    merged.update(highs)
-    return out, Checkpoint(merged)
+        return df.limit(0), Checkpoint(ends)
+    return checkpoint_start_filter(df, ckpt), Checkpoint({**ckpt.offsets, **ends})
 
 
 def _first_offsets_at_timestamp(
@@ -749,8 +775,129 @@ def _write_subscriptions(topic_path: str, subs: dict) -> None:
     carries every subscription's persisted cursor). Single-writer
     assumption as in the reference's metadata-store compare-and-set —
     concurrent admin writers are last-writer-wins at file granularity,
-    never torn JSON."""
+    never torn JSON. Called only by ``_edit_registry``."""
     write_atomic(os.path.join(topic_path, _SUBS), subs)
+
+
+def _edit_registry(topic_path: str, edit):
+    """The ONE read-modify-write of the subscription registry.
+    ``edit(subs)`` mutates the loaded registry and returns a result
+    whose truth says whether it changed; the registry is rewritten
+    (once, atomically) only then. Returns that result."""
+    subs = _read_subscriptions(topic_path)
+    result = edit(subs)
+    if result:
+        _write_subscriptions(topic_path, subs)
+    return result
+
+
+def _entry_cursor(entry: dict) -> tuple[Checkpoint, dict[int, list[list[int]]]]:
+    """A registry entry's cursor: the markDelete vector and the
+    individual-ack hole set beside it (``individualDeletedMessages``,
+    sources/ack_holes.py — ManagedCursorImpl.java:202)."""
+    holes = {
+        int(k): [list(map(int, r)) for r in v]
+        for k, v in entry.get("ack_holes", {}).items()
+    }
+    return Checkpoint.from_dict(entry.get("checkpoint", {})), holes
+
+
+def _cursor(topic_path: str, subscription: str):
+    """The persisted ``(Checkpoint, holes)`` of ``subscription``."""
+    subs = _read_subscriptions(topic_path)
+    if subscription not in subs:
+        raise ValueError(f"no such subscription: {subscription}")
+    return _entry_cursor(subs[subscription])
+
+
+def _edit_cursors(
+    topic_path: str, edit, names=None, spark=None, resolve_latest: bool = False
+) -> dict[str, Checkpoint]:
+    """The ONE cursor edit. ``edit(ck, holes)`` gets each named entry's
+    cursor (every entry when ``names`` is None) and returns its new
+    ``(Checkpoint, holes)``, or None to leave it as is; all changed
+    entries persist in ONE atomic registry write, so a cursor and its
+    holes can never disagree. ``resolve_latest`` (every slot edit)
+    first resolves a LATEST sentinel into its past-end vector
+    (``_resolve_latest``: needs ``spark``, raises without one) — a slot
+    set under the flag would be inert, and a slot set that dropped it
+    would flip every OTHER segment back to earliest. Returns the new
+    checkpoint per changed entry."""
+
+    def apply(subs: dict) -> dict[str, Checkpoint]:
+        for name in names or ():
+            if name not in subs:
+                raise ValueError(f"no such subscription: {name}")
+        out = {}
+        for name in subs if names is None else names:
+            entry = subs[name]
+            ck, holes = _entry_cursor(entry)
+            if resolve_latest:
+                ck = _resolve_latest(spark, topic_path, ck)
+            new = edit(ck, holes)
+            if new is None:
+                continue
+            ck, holes = new
+            entry["checkpoint"] = ck.to_dict()
+            entry.pop("ack_holes", None)
+            if any(holes.values()):
+                entry["ack_holes"] = {str(k): v for k, v in holes.items() if v}
+            out[name] = ck
+        return out
+
+    return _edit_registry(topic_path, apply)
+
+
+def _moved(old: Checkpoint, new: Checkpoint, holes: dict):
+    """A cursor moved from ``old`` to ``new`` with its holes reconciled
+    in the same edit: a forward advance consumes holes below the new
+    cursor AND sweeps the cursor through any hole that became
+    contiguous with it (the ManagedCursorImpl markDelete-advance
+    merge); a rewind clears the segment's holes entirely (resetCursor
+    semantics — everything past the reset point redelivers)."""
+    from pulsar_spark.sources.ack_holes import fold_cursor, reconcile_holes_with_cursor
+
+    offsets = dict(new.offsets)
+    kept: dict[int, list[list[int]]] = {}
+    for seg, rs in reconcile_holes_with_cursor(old.offsets, offsets, holes).items():
+        offsets[seg], rest = fold_cursor(offsets.get(seg, 0), rs)
+        if rest:
+            kept[seg] = rest
+    return Checkpoint(offsets, latest=new.latest), kept
+
+
+def _set_slots(spark, topic_path: str, subscription: str, slots: dict[int, int]) -> None:
+    """The per-segment verbs' one write: set cursor slots on the
+    LATEST-resolved vector, holes reconciled (a slot verb is the
+    topic-wide move restricted to its segments)."""
+    _edit_cursors(
+        topic_path,
+        lambda ck, holes: _moved(ck, Checkpoint({**ck.offsets, **slots}), holes),
+        [subscription],
+        spark,
+        resolve_latest=True,
+    )
+
+
+def _drop_slot(topic_path: str, segment_id: int, names=None) -> bool:
+    """Drop ONE segment's cursor slot and its ack holes from the named
+    entries (all when None). resetCursor semantics: a slot back at the
+    EARLIEST default clears the segment's individualDeletedMessages
+    with it — a surviving hole entry would permanently suppress
+    redelivery of those offsets. Never needs Spark (no LATEST
+    resolution: the other slots are untouched). True if any entry
+    changed."""
+    sid = int(segment_id)
+
+    def drop(ck: Checkpoint, holes: dict):
+        if sid not in ck.offsets and sid not in holes:
+            return None
+        offsets = {k: v for k, v in ck.offsets.items() if k != sid}
+        return Checkpoint(offsets, latest=ck.latest), {
+            k: v for k, v in holes.items() if k != sid
+        }
+
+    return bool(_edit_cursors(topic_path, drop, names))
 
 
 def create_subscription(
@@ -768,16 +915,18 @@ def create_subscription(
     LATER splits, exactly like the reference's lazily-propagated
     per-segment cursors."""
     scalable_metadata(topic_path)  # raises if not a scalable topic
-    subs = _read_subscriptions(topic_path)
-    if subscription in subs:
-        return False
-    subs[subscription] = {
-        "type": sub_type,
-        "created_at_ms": _now_ms(),
-        "checkpoint": json.loads(Checkpoint.earliest().to_bytes()),
-    }
-    _write_subscriptions(topic_path, subs)
-    return True
+
+    def add(subs: dict) -> bool:
+        if subscription in subs:
+            return False
+        subs[subscription] = {
+            "type": sub_type,
+            "created_at_ms": _now_ms(),
+            "checkpoint": Checkpoint.earliest().to_dict(),
+        }
+        return True
+
+    return _edit_registry(topic_path, add)
 
 
 def delete_subscription(
@@ -788,17 +937,19 @@ def delete_subscription(
     mid-teardown), then delete the persisted metadata — which removes
     the per-segment cursors (they live inside the entry's checkpoint
     vector). Returns False if the subscription didn't exist."""
-    subs = _read_subscriptions(topic_path)
-    if subscription not in subs:
-        # a no-op delete must NOT disconnect live consumers — check
-        # existence before any teardown
-        return False
-    if coordinator is not None:
-        for name in sorted(coordinator.sessions):
-            coordinator.unregister_consumer(name)
-    del subs[subscription]
-    _write_subscriptions(topic_path, subs)
-    return True
+
+    def drop(subs: dict) -> bool:
+        if subscription not in subs:
+            # a no-op delete must NOT disconnect live consumers — check
+            # existence before any teardown
+            return False
+        if coordinator is not None:
+            for name in sorted(coordinator.sessions):
+                coordinator.unregister_consumer(name)
+        del subs[subscription]
+        return True
+
+    return _edit_registry(topic_path, drop)
 
 
 def list_subscriptions(topic_path: str) -> list[str]:
@@ -808,11 +959,7 @@ def list_subscriptions(topic_path: str) -> list[str]:
 
 def subscription_checkpoint(topic_path: str, subscription: str) -> Checkpoint:
     """The persisted position vector for ``subscription``."""
-    subs = _read_subscriptions(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    d = subs[subscription]["checkpoint"]
-    return Checkpoint(d.get("offsets", {}), latest=bool(d.get("latest")))
+    return _cursor(topic_path, subscription)[0]
 
 
 def save_subscription_checkpoint(
@@ -821,45 +968,10 @@ def save_subscription_checkpoint(
     """Persist an advanced position vector (the ack path for a
     persisted subscription). Individual-ack holes stored beside the
     vector (sources/ack_holes.py) are reconciled against the move in
-    the SAME atomic registry write so cursor and holes can never
-    disagree: a forward advance consumes holes below the new cursor
-    AND sweeps the cursor through any hole that became contiguous with
-    it (the ManagedCursorImpl markDelete-advance merge); a rewind
-    clears the segment's holes entirely (resetCursor semantics —
-    everything past the reset point redelivers)."""
-    from pulsar_spark.sources.ack_holes import (
-        fold_cursor,
-        reconcile_holes_with_cursor,
+    the SAME atomic registry write (``_moved``)."""
+    _edit_cursors(
+        topic_path, lambda ck, holes: _moved(ck, ckpt, holes), [subscription]
     )
-
-    subs = _read_subscriptions(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    entry = subs[subscription]
-    old = {
-        int(k): int(v)
-        for k, v in entry["checkpoint"].get("offsets", {}).items()
-    }
-    offsets = dict(ckpt.offsets)
-    holes = entry.get("ack_holes")
-    if holes:
-        kept = reconcile_holes_with_cursor(
-            old, offsets, {int(k): v for k, v in holes.items()}
-        )
-        out_holes: dict[int, list[list[int]]] = {}
-        for seg, rs in kept.items():
-            cur, rest = fold_cursor(offsets.get(seg, 0), rs)
-            offsets[seg] = cur
-            if rest:
-                out_holes[seg] = rest
-        if out_holes:
-            entry["ack_holes"] = {str(k): v for k, v in out_holes.items()}
-        else:
-            entry.pop("ack_holes", None)
-    entry["checkpoint"] = json.loads(
-        Checkpoint(offsets, latest=ckpt.latest).to_bytes()
-    )
-    _write_subscriptions(topic_path, subs)
 
 
 def clear_backlog(spark: SparkSession, topic_path: str, subscription: str) -> Checkpoint:
@@ -868,7 +980,7 @@ def clear_backlog(spark: SparkSession, topic_path: str, subscription: str) -> Ch
     sealed segments included — to past-the-end. Closed form over the
     checkpoint vector: ``{segment_id: high_watermark + 1}`` for every
     layout segment (0 for never-produced segments), one bounded grouped
-    aggregate (``segment_high_watermarks``).
+    aggregate (``_past_end``, shared with the per-segment clear).
 
     Coordinator composition: after a clear, this subscription's cursor
     is past the end of every sealed segment, so a
@@ -877,12 +989,8 @@ def clear_backlog(spark: SparkSession, topic_path: str, subscription: str) -> Ch
     immediately (the backlog the drain gate was protecting no longer
     exists for this subscription)."""
     meta = scalable_metadata(topic_path)
-    highs = segment_high_watermarks(spark, topic_path)
     vector = Checkpoint(
-        {
-            int(s["segment_id"]): highs.get(int(s["segment_id"]), -1) + 1
-            for s in meta["segments"].values()
-        }
+        _past_end(spark, topic_path, [int(s["segment_id"]) for s in meta["segments"].values()])
     )
     save_subscription_checkpoint(topic_path, subscription, vector)
     return vector
@@ -895,21 +1003,19 @@ def subscription_backlog(spark: SparkSession, topic_path: str, subscription: str
     DataFrame ``(segment int, backlog bigint)`` with an explicit 0 for
     every layout segment so a cleared subscription is visibly empty.
 
-    Scale shape: one grouped count over the cursor filter + hole filter
-    (both literal map lookups riding the scan), left-joined onto the
-    bounded layout segment list."""
-    from pulsar_spark.sources.ack_holes import ack_hole_filter, subscription_ack_holes
+    Scale shape: one grouped count over ``subscription_visible`` (the
+    redelivery view: cursor + hole filters riding the scan),
+    left-joined onto the bounded layout segment list."""
+    from pulsar_spark.sources.ack_holes import subscription_visible
 
     meta = scalable_metadata(topic_path)
-    ckpt = subscription_checkpoint(topic_path, subscription)
     seg_rows = [(int(s["segment_id"]),) for s in meta["segments"].values()]
     segs = spark.createDataFrame(seg_rows, "segment int")
-    df = _read_if_present(spark, topic_path)
-    if df is None or ckpt.latest:
-        return segs.select("segment", F.lit(0).cast("bigint").alias("backlog"))
-    df = checkpoint_start_filter(df, ckpt)
-    df = ack_hole_filter(df, subscription_ack_holes(topic_path, subscription))
-    counts = df.groupBy("segment").agg(F.count("*").alias("_c"))
+    counts = (
+        subscription_visible(spark, topic_path, subscription)
+        .groupBy("segment")
+        .agg(F.count("*").alias("_c"))
+    )
     return (
         segs.join(counts, "segment", "left")
         .select("segment", F.coalesce("_c", F.lit(0)).cast("bigint").alias("backlog"))
@@ -928,25 +1034,43 @@ def _parse_ts_ms(timestamp: str) -> int:
     return int(dt.timestamp() * 1000)
 
 
-def _classify_segment_for_seek(s: dict, ts_ms: int) -> str:
+def _seek_offsets(spark, topic_path: str, segs: list[dict], timestamp: str) -> dict[int, int]:
     """ScalableTopicController.seekSubscriptionOnSegment (java:950)
-    window dispatch for ONE segment: its ``[created_at_ms,
+    over a list of layout segments: each segment's ``[created_at_ms,
     sealed_at_ms)`` lifetime against the target picks the cheapest op —
-    ``skip_all`` (sealed strictly before: cursor past-the-end, no
-    scan), ``earliest`` (created strictly after: offset 0, no scan), or
-    ``scan`` (alive at the timestamp: one pruned min-aggregate).
-    STRICT inequalities because stamps are ms-floored while
-    publish_time carries microseconds — a segment sealed or created in
-    the target's own millisecond falls through to the full-precision
-    scan arm. The ONE place this classification lives; shared by the
-    topic-wide and per-segment seek verbs."""
-    sealed_at = s.get("sealed_at_ms")
-    created_at = s.get("created_at_ms")
-    if s["state"] != "ACTIVE" and sealed_at and int(sealed_at) < ts_ms:
-        return "skip_all"
-    if created_at and int(created_at) > ts_ms:
-        return "earliest"
-    return "scan"
+    ``skip_all`` (sealed strictly before: cursor past-the-end, one
+    partition-pruned watermark aggregate over just those segments),
+    ``earliest`` (created strictly after: offset 0, no scan), or
+    ``scan`` (alive at the timestamp: one pruned min-aggregate over its
+    ``publish_time`` stats). STRICT inequalities because stamps are
+    ms-floored while publish_time carries microseconds — a segment
+    sealed or created in the target's own millisecond falls through to
+    the full-precision scan arm. The ONE home of the seek offsets,
+    shared by the topic-wide and per-segment seek verbs; ``spark`` may
+    be None when every segment classifies earliest."""
+    ts_ms = _parse_ts_ms(timestamp)
+    arms: dict[str, list[int]] = {"skip_all": [], "earliest": [], "scan": []}
+    for s in segs:
+        sealed_at, created_at = s.get("sealed_at_ms"), s.get("created_at_ms")
+        if s["state"] != "ACTIVE" and sealed_at and int(sealed_at) < ts_ms:
+            arm = "skip_all"
+        elif created_at and int(created_at) > ts_ms:
+            arm = "earliest"
+        else:
+            arm = "scan"
+        arms[arm].append(int(s["segment_id"]))
+    offsets = dict.fromkeys(arms["earliest"], 0)
+    if arms["skip_all"]:
+        offsets.update(_past_end(spark, topic_path, arms["skip_all"]))
+    if arms["scan"]:
+        df = _read_if_present(spark, topic_path)
+        got = (
+            _first_offsets_at_timestamp(df, timestamp, segments=arms["scan"])
+            if df is not None
+            else {}
+        )
+        offsets.update({sid: got.get(sid, 0) for sid in arms["scan"]})
+    return offsets
 
 
 def seek_subscription(
@@ -957,7 +1081,7 @@ def seek_subscription(
     subscription's cursor across every DAG segment to a wall-clock
     timestamp, using each segment's recorded
     ``[created_at_ms, sealed_at_ms)`` lifetime to pick the cheapest
-    per-segment op —
+    per-segment op (``_seek_offsets``) —
 
     - segment sealed at-or-before the timestamp: ALL its data predates
       it -> cursor past-the-end (the clearBacklog closed form, no scan);
@@ -974,41 +1098,14 @@ def seek_subscription(
     runs entirely driver-side — ``spark`` may even be None there; the
     test asserts that.
 
-    Millisecond-boundary safety: segment stamps are ms-floored while
-    ``publish_time`` carries microseconds, so both classifications use
-    STRICT inequalities — a segment sealed or created in the seek
-    timestamp's own millisecond falls through to the (full-precision)
-    scan arm rather than risking a wrong closed form.
-
     Persists the vector on the subscription and returns it."""
-    if subscription not in _read_subscriptions(topic_path):
-        # validate BEFORE classifying/scanning — a typo'd subscription
-        # must not pay (and then discard) the stats passes
-        raise ValueError(f"no such subscription: {subscription}")
+    # validate BEFORE classifying/scanning — a typo'd subscription must
+    # not pay (and then discard) the stats passes
+    subscription_checkpoint(topic_path, subscription)
     meta = scalable_metadata(topic_path)
-    ts_ms = _parse_ts_ms(timestamp)
-    skip_all: list[int] = []
-    earliest: list[int] = []
-    to_scan: list[int] = []
-    for s in meta["segments"].values():
-        arm = _classify_segment_for_seek(s, ts_ms)
-        (skip_all if arm == "skip_all" else earliest if arm == "earliest" else to_scan
-         ).append(int(s["segment_id"]))
-    offsets: dict[int, int] = {sid: 0 for sid in earliest}
-    if skip_all:
-        highs = segment_high_watermarks(spark, topic_path, segments=skip_all)
-        for sid in skip_all:
-            offsets[sid] = highs.get(sid, -1) + 1
-    if to_scan:
-        df = _read_if_present(spark, topic_path)
-        got = (
-            _first_offsets_at_timestamp(df, timestamp, segments=to_scan)
-            if df is not None
-            else {}
-        )
-        for sid in to_scan:
-            offsets[sid] = got.get(sid, 0)
-    vector = Checkpoint(offsets)
+    vector = Checkpoint(
+        _seek_offsets(spark, topic_path, list(meta["segments"].values()), timestamp)
+    )
     save_subscription_checkpoint(topic_path, subscription, vector)
     return vector
 
@@ -1119,39 +1216,18 @@ def delete_segment(
         if spark is None:
             raise ValueError("delete_segment(force=False) needs a SparkSession "
                              "to check subscription backlogs")
-        high = segment_high_watermarks(spark, topic_path, segments=[sid]).get(sid, -1)
-        if high >= 0:
-            for name in list_subscriptions(topic_path):
-                ck = subscription_checkpoint(topic_path, name)
-                if ck.latest:
-                    continue
-                if ck.offsets.get(sid, 0) <= high:
-                    raise ValueError(
-                        f"subscription {name!r} has backlog on segment {sid}; "
-                        f"use force=True to delete anyway"
-                    )
+        highs = segment_high_watermarks(spark, topic_path, segments=[sid])
+        subs = _read_subscriptions(topic_path)
+        for name in sorted(subs):
+            if not _drained(_entry_cursor(subs[name])[0], sid, highs):
+                raise ValueError(
+                    f"subscription {name!r} has backlog on segment {sid}; "
+                    f"use force=True to delete anyway"
+                )
     prune_segment(meta, sid)
     _write_meta(topic_path, meta)
     shutil.rmtree(os.path.join(topic_path, f"segment={sid}"), ignore_errors=True)
-    subs = _read_subscriptions(topic_path)
-    changed = False
-    for entry in subs.values():
-        offsets = entry.get("checkpoint", {}).get("offsets", {})
-        if str(sid) in offsets:
-            del offsets[str(sid)]
-            changed = True
-        # the segment's ack holes go with its cursor slot: a surviving
-        # hole entry would permanently exclude those offsets from a
-        # cursor that now claims earliest (resetCursor clears
-        # individualDeletedMessages — so must slot deletion)
-        holes = entry.get("ack_holes", {})
-        if str(sid) in holes:
-            del holes[str(sid)]
-            if not holes:
-                entry.pop("ack_holes", None)
-            changed = True
-    if changed:
-        _write_subscriptions(topic_path, subs)
+    _drop_slot(topic_path, sid)
     return True
 
 
@@ -1193,26 +1269,6 @@ def delete_scalable_topic(
     return True
 
 
-def _resolve_latest_offsets(spark, topic_path: str, ck: Checkpoint) -> dict[int, int]:
-    """A LATEST-sentinel vector resolved into its concrete
-    "nothing stored is delivered" form (``{segment: high + 1}`` over
-    every stored segment) so a per-SLOT edit cannot silently drop the
-    flag and flip every OTHER segment's cursor back to earliest —
-    clearing one segment's backlog must never CREATE backlog elsewhere.
-    Resolution needs a SparkSession for the one bounded watermark
-    aggregate; non-latest vectors pass through as a plain copy."""
-    if not ck.latest:
-        return dict(ck.offsets)
-    if spark is None:
-        raise ValueError(
-            "subscription cursor is a LATEST sentinel: resolving it into a "
-            "concrete vector needs a SparkSession"
-        )
-    return {
-        sid: hi + 1 for sid, hi in segment_high_watermarks(spark, topic_path).items()
-    }
-
-
 def create_segment_subscription(
     topic_path: str, segment_id: int, subscription: str, spark=None
 ) -> bool:
@@ -1232,15 +1288,13 @@ def create_segment_subscription(
     true would be inert — the read paths would still skip everything —
     silently violating the "future consumer doesn't drop the backlog"
     guarantee this verb exists for."""
-    meta = scalable_metadata(topic_path)
-    _segment_entry(meta, segment_id)
+    sid = int(segment_id)
+    _segment_entry(scalable_metadata(topic_path), sid)
     create_subscription(topic_path, subscription)  # no-op if present
     ck = subscription_checkpoint(topic_path, subscription)
-    offsets = _resolve_latest_offsets(spark, topic_path, ck)
-    if int(segment_id) in offsets and not ck.latest:
+    if sid in ck.offsets and not ck.latest:
         return False
-    offsets[int(segment_id)] = 0
-    save_subscription_checkpoint(topic_path, subscription, Checkpoint(offsets))
+    _set_slots(spark, topic_path, subscription, {sid: 0})
     return True
 
 
@@ -1254,24 +1308,9 @@ def delete_segment_subscription(
     reverts the segment to the EARLIEST default on next attach, exactly
     like the reference where a segment with no cursor re-delivers from
     the beginning. Returns False if no slot existed."""
-    if subscription not in _read_subscriptions(topic_path):
-        raise ValueError(f"no such subscription: {subscription}")
-    meta = scalable_metadata(topic_path)
-    _segment_entry(meta, segment_id)
-    subs = _read_subscriptions(topic_path)
-    entry = subs[subscription]
-    offsets = entry["checkpoint"].get("offsets", {})
-    if str(int(segment_id)) not in offsets:
-        return False
-    del offsets[str(int(segment_id))]
-    # resetCursor semantics: a slot deleted back to EARLIEST clears the
-    # segment's individualDeletedMessages with it — a surviving hole
-    # entry would permanently suppress redelivery of those offsets
-    holes = entry.get("ack_holes", {})
-    if holes.pop(str(int(segment_id)), None) is not None and not holes:
-        entry.pop("ack_holes", None)
-    _write_subscriptions(topic_path, subs)
-    return True
+    subscription_checkpoint(topic_path, subscription)  # raises if unknown
+    _segment_entry(scalable_metadata(topic_path), segment_id)
+    return _drop_slot(topic_path, segment_id, [subscription])
 
 
 def get_segment_subscription_backlog(
@@ -1281,34 +1320,18 @@ def get_segment_subscription_backlog(
     (ScalableTopics.java:427): unconsumed entries on ONE segment's
     cursor — the probe the SubscriptionCoordinator uses to detect a
     drained sealed parent (ScalableTopicController.java:610). One
-    COUNT whose ``segment=N`` predicate prunes the hive partition
-    listing and whose offset bound rides the scan as a row-group-stat
-    predicate; at 100 TB the query touches one segment's files, never
-    the DAG."""
-    meta = scalable_metadata(topic_path)
-    sid = int(segment_id)
-    _segment_entry(meta, sid)
-    ck = subscription_checkpoint(topic_path, subscription)
-    if ck.latest:
-        return 0
-    df = _read_if_present(spark, topic_path)
-    if df is None:
-        return 0
-    start = ck.offsets.get(sid, 0)
-    df = df.where(
-        (F.col("segment") == sid) & (F.col("offset") >= F.lit(int(start)))
-    )
-    # individually-acked holes past the cursor are delivered, not
-    # backlog — the drain probe must agree with subscription_backlog
-    from pulsar_spark.sources.ack_holes import (
-        ack_hole_filter,
-        subscription_ack_holes,
-    )
+    COUNT over ``subscription_visible`` (so individually-acked holes
+    are excluded exactly as in ``subscription_backlog``) whose
+    ``segment=N`` predicate prunes the hive partition listing; the
+    optimizer folds the cursor-map lookup on that constant segment into
+    a pushed ``offset >= start`` row-group-stat filter. At 100 TB the
+    query touches one segment's files, never the DAG."""
+    from pulsar_spark.sources.ack_holes import subscription_visible
 
-    holes = subscription_ack_holes(topic_path, subscription)
-    if sid in holes:
-        df = ack_hole_filter(df, {sid: holes[sid]})
-    return df.count()
+    sid = int(segment_id)
+    _segment_entry(scalable_metadata(topic_path), sid)
+    visible = subscription_visible(spark, topic_path, subscription)
+    return visible.where(F.col("segment") == sid).count()
 
 
 def seek_segment_subscription(
@@ -1318,36 +1341,19 @@ def seek_segment_subscription(
     (ScalableTopics.java:444): reset ONE segment's cursor slot to a
     wall-clock timestamp — the per-segment dispatch target of
     topic-wide seekSubscription (ScalableTopicController.java:950).
-    Shares ``_classify_segment_for_seek`` with the topic-wide verb, so
-    the lifetime-window rules (strict ms-boundary inequalities, sealed
+    Shares ``_seek_offsets`` with the topic-wide verb, so the
+    lifetime-window rules (strict ms-boundary inequalities, sealed
     -> past-the-end closed form, created-after -> earliest, straddler
     -> one pruned min-aggregate) cannot drift between the two.
-    ``spark`` may be None when the segment classifies scan-free.
-    Persists the slot and returns the new offset."""
-    if subscription not in _read_subscriptions(topic_path):
-        raise ValueError(f"no such subscription: {subscription}")
-    meta = scalable_metadata(topic_path)
+    ``spark`` may be None when the segment classifies scan-free and the
+    subscription is not at the LATEST sentinel. Persists the slot and
+    returns the new offset."""
+    subscription_checkpoint(topic_path, subscription)  # raises if unknown
     sid = int(segment_id)
-    s = _segment_entry(meta, sid)
-    arm = _classify_segment_for_seek(s, _parse_ts_ms(timestamp))
-    if arm == "earliest":
-        new_off = 0
-    elif arm == "skip_all":
-        new_off = segment_high_watermarks(spark, topic_path, segments=[sid]).get(sid, -1) + 1
-    else:
-        df = _read_if_present(spark, topic_path)
-        new_off = (
-            _first_offsets_at_timestamp(df, timestamp, segments=[sid]).get(sid, 0)
-            if df is not None
-            else 0
-        )
-    ck = subscription_checkpoint(topic_path, subscription)
-    # a LATEST sentinel resolves into its concrete vector first, so
-    # editing this slot can't flip the other segments to earliest
-    offsets = _resolve_latest_offsets(spark, topic_path, ck)
-    offsets[sid] = int(new_off)
-    save_subscription_checkpoint(topic_path, subscription, Checkpoint(offsets))
-    return int(new_off)
+    s = _segment_entry(scalable_metadata(topic_path), sid)
+    new_off = _seek_offsets(spark, topic_path, [s], timestamp)[sid]
+    _set_slots(spark, topic_path, subscription, {sid: new_off})
+    return new_off
 
 
 def clear_segment_subscription_backlog(
@@ -1357,22 +1363,14 @@ def clear_segment_subscription_backlog(
     (ScalableTopics.java:454): skip every undelivered message on ONE
     segment — the per-segment closed form of topic-wide clearBacklog
     (ScalableTopicController.java:996): ``offsets[segment] = high + 1``
-    from one partition-pruned watermark aggregate. Persists the slot
-    and returns the new offset."""
-    if subscription not in _read_subscriptions(topic_path):
-        raise ValueError(f"no such subscription: {subscription}")
-    meta = scalable_metadata(topic_path)
+    from one partition-pruned watermark aggregate (``_past_end``).
+    Persists the slot and returns the new offset."""
+    subscription_checkpoint(topic_path, subscription)  # raises if unknown
     sid = int(segment_id)
-    _segment_entry(meta, sid)
-    high = segment_high_watermarks(spark, topic_path, segments=[sid]).get(sid, -1)
-    ck = subscription_checkpoint(topic_path, subscription)
-    # a LATEST sentinel resolves into its concrete vector first —
-    # clearing ONE segment's backlog must never create backlog on the
-    # others by silently dropping the flag
-    offsets = _resolve_latest_offsets(spark, topic_path, ck)
-    offsets[sid] = high + 1
-    save_subscription_checkpoint(topic_path, subscription, Checkpoint(offsets))
-    return high + 1
+    _segment_entry(scalable_metadata(topic_path), sid)
+    end = _past_end(spark, topic_path, [sid])[sid]
+    _set_slots(spark, topic_path, subscription, {sid: end})
+    return end
 
 
 # ------------------------------------------- multi-topic checkpoint consumer
@@ -1397,12 +1395,7 @@ class MultiCheckpoint:
 
     def to_bytes(self) -> bytes:
         return json.dumps(
-            {
-                "topics": {
-                    name: json.loads(ck.to_bytes().decode("utf-8"))
-                    for name, ck in sorted(self.topics.items())
-                }
-            },
+            {"topics": {name: ck.to_dict() for name, ck in sorted(self.topics.items())}},
             sort_keys=True,
         ).encode("utf-8")
 
@@ -1410,10 +1403,7 @@ class MultiCheckpoint:
     def from_bytes(cls, data: bytes) -> "MultiCheckpoint":
         d = json.loads(data.decode("utf-8"))
         return cls(
-            {
-                name: Checkpoint(s.get("offsets", {}), latest=bool(s.get("latest")))
-                for name, s in d.get("topics", {}).items()
-            }
+            {name: Checkpoint.from_dict(s) for name, s in d.get("topics", {}).items()}
         )
 
 

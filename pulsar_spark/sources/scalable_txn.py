@@ -28,7 +28,7 @@ per-(topic, subscription) offset vector INSIDE the coordinator's
 record; ``commit()`` first flips the status (one atomic JSON rename —
 the durable commit point) and then applies the staged vectors to the
 persisted subscription registry (sources/scalable.py
-``save_subscription_checkpoint``) as max-forward merges, marking the
+``_edit_cursors``, the one cursor edit) as max-forward merges, marking the
 record applied. A crash between the two halves is recovered by
 ``recover()``: any COMMITTED-but-unapplied record is re-applied —
 idempotent because cursor advances are monotone merges — and aborted
@@ -51,8 +51,6 @@ txn-state table and rides the segment scan.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,21 +63,33 @@ from pulsar_spark.operators.transactions import (
 )
 from pulsar_spark.sources.scalable import (
     Checkpoint,
+    _edit_cursors,
+    _moved,
     produce_scalable,
-    save_subscription_checkpoint,
-    subscription_checkpoint,
 )
 
 
 def _advance_vector(topic_path: str, subscription: str, offsets: dict) -> None:
     """Max-forward merge of a staged vector into the persisted
-    subscription checkpoint — monotone, hence safely re-appliable by
-    crash recovery."""
-    ck = subscription_checkpoint(topic_path, subscription)
-    merged = dict(ck.offsets)
-    for seg, off in offsets.items():
-        merged[int(seg)] = max(int(merged.get(int(seg), 0)), int(off))
-    save_subscription_checkpoint(topic_path, subscription, Checkpoint(merged))
+    subscription cursor — monotone, hence safely re-appliable by crash
+    recovery. A slot edit like any other: a LATEST sentinel resolves
+    (with the active session) before the merge, so the segments the ack
+    does not name keep their past-the-end position."""
+
+    def merge(ck, holes):
+        ahead = {
+            int(seg): max(int(ck.offsets.get(int(seg), 0)), int(off))
+            for seg, off in offsets.items()
+        }
+        return _moved(ck, Checkpoint({**ck.offsets, **ahead}), holes)
+
+    _edit_cursors(
+        topic_path,
+        merge,
+        [subscription],
+        SparkSession.getActiveSession(),
+        resolve_latest=True,
+    )
 
 
 class V5TransactionCoordinator(TransactionCoordinator):
@@ -510,9 +520,9 @@ def read_from_checkpoint_committed(
 
     from pulsar_spark.envelope import watermark_lookup
     from pulsar_spark.sources.scalable import (
+        _past_end,
         checkpoint_start_filter,
         read_from_checkpoint,
-        segment_high_watermarks,
     )
     from pulsar_spark.durable import recover_swap
 
@@ -524,9 +534,7 @@ def read_from_checkpoint_committed(
     ):
         return read_from_checkpoint(spark, topic_path, ckpt)  # empty stub
     df = spark.read.option("mergeSchema", "true").parquet(topic_path)
-    highs = {
-        sid: mx + 1 for sid, mx in segment_high_watermarks(spark, topic_path).items()
-    }
+    highs = _past_end(spark, topic_path)
     caps: dict[int, int] = {}
     if "txn_id" in df.columns:
         open_ids = [

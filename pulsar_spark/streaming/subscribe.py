@@ -72,15 +72,7 @@ def subscribe(
         raise ValueError(
             f"initial_position must be earliest|latest, got {initial_position}"
         )
-    # schema discovery only — mergeSchema, because a topic legitimately
-    # mixes file schemas (replicated-in files add src_* columns,
-    # protocol marker files add marker_type/props) and sampling one
-    # footer would silently drop those columns from the whole stream
-    static = spark.read.option("mergeSchema", "true").parquet(topic_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(topic_path)
+    static, stream = _open_stream(spark, topic_path, max_files_per_trigger)
 
     if initial_position == "latest":
         from pulsar_spark.envelope import watermark_lookup
@@ -96,8 +88,28 @@ def subscribe(
         stream = stream.where(
             F.col("publish_time") >= F.lit(start_time).cast("timestamp")
         )
+    return _dispatch(stream, subscription_type, num_consumers, interceptors)
+
+
+def _open_stream(spark: SparkSession, topic_path: str, max_files_per_trigger):
+    """The one topic stream opener: ``(static, stream)``, where the
+    static frame is for schema discovery only — mergeSchema, because a
+    topic legitimately mixes file schemas (replicated-in files add
+    src_* columns, protocol marker files add marker_type/props) and
+    sampling one footer would silently drop those columns from the
+    whole stream."""
+    static = spark.read.option("mergeSchema", "true").parquet(topic_path)
+    reader = spark.readStream.schema(static.schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return static, reader.parquet(topic_path)
+
+
+def _dispatch(stream: DataFrame, subscription_type: str, num_consumers: int, interceptors):
+    """The one dispatch tail: Key_Shared repartitioning (each
+    "consumer" = one shuffle partition owning a hash range), then the
+    interceptor chain."""
     if subscription_type == "key_shared":
-        # each "consumer" = one shuffle partition owning a hash range
         stream = stream.repartition(num_consumers, sticky_key_hash(F.col("key")))
     for icept in interceptors or []:
         stream = icept(stream)
@@ -168,31 +180,15 @@ def subscribe_assigned(
     listing PRUNES to the assigned segments — a consumer holding 2 of
     64 segments streams 1/32 of the arriving files. The offset filter
     rides the scan as a row-group-stat predicate."""
-    from pulsar_spark.sources.scalable import (
-        Checkpoint,
-        checkpoint_start_filter,
-        segment_high_watermarks,
-    )
+    from pulsar_spark.sources.scalable import _cursor, _resolve_latest, checkpoint_start_filter
 
     if subscription is not None:
-        from pulsar_spark.sources.ack_holes import subscription_ack_holes
-        from pulsar_spark.sources.scalable import subscription_checkpoint
-
-        if start_checkpoint is None:
-            start_checkpoint = subscription_checkpoint(topic_path, subscription)
-        if ack_holes is None:
-            ack_holes = subscription_ack_holes(topic_path, subscription)
+        ck, holes = _cursor(topic_path, subscription)
+        start_checkpoint = ck if start_checkpoint is None else start_checkpoint
+        ack_holes = holes if ack_holes is None else ack_holes
 
     seg_ids = [int(s.segment_id) for s in assignment.segments]
-    # schema discovery only — mergeSchema, because a topic legitimately
-    # mixes file schemas (replicated-in files add src_* columns,
-    # protocol marker files add marker_type/props) and sampling one
-    # footer would silently drop those columns from the whole stream
-    static = spark.read.option("mergeSchema", "true").parquet(topic_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(topic_path)
+    _, stream = _open_stream(spark, topic_path, max_files_per_trigger)
     # empty assignment = a predicate that matches nothing, NOT
     # stream.limit(0): global limits on streaming frames are only
     # supported by append/complete-mode sinks, while a false filter
@@ -203,18 +199,12 @@ def subscribe_assigned(
         else stream.where(F.lit(False))
     )
     if start_checkpoint is not None:
-        if start_checkpoint.latest:
-            # the LATEST sentinel means "nothing stored is delivered":
-            # snapshot the per-segment high watermarks at subscribe time
-            # and start past them (same semantics as read_from_checkpoint
-            # and subscription_backlog — NOT 'read from earliest')
-            start_checkpoint = Checkpoint(
-                {
-                    sid: hi + 1
-                    for sid, hi in segment_high_watermarks(spark, topic_path).items()
-                }
-            )
-        stream = checkpoint_start_filter(stream, start_checkpoint)
+        # the LATEST sentinel means "nothing stored is delivered": start
+        # past the high watermarks snapshotted at subscribe time (same
+        # semantics as read_from_checkpoint — NOT 'read from earliest')
+        stream = checkpoint_start_filter(
+            stream, _resolve_latest(spark, topic_path, start_checkpoint)
+        )
     if ack_holes:
         # individualDeletedMessages consult on the streaming dispatch
         # path: pass the subscription's persisted hole set
@@ -281,11 +271,7 @@ def subscribe_multi(
     out = streams[0]
     for s in streams[1:]:
         out = out.unionByName(s)
-    if subscription_type == "key_shared":
-        out = out.repartition(num_consumers, sticky_key_hash(F.col("key")))
-    for icept in interceptors or []:
-        out = icept(out)
-    return out
+    return _dispatch(out, subscription_type, num_consumers, interceptors)
 
 
 def _glob_stream(
@@ -313,11 +299,7 @@ def _glob_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(pattern).withColumns(path_cols)
-    if subscription_type == "key_shared":
-        stream = stream.repartition(num_consumers, sticky_key_hash(F.col("key")))
-    for icept in interceptors or []:
-        stream = icept(stream)
-    return stream
+    return _dispatch(stream, subscription_type, num_consumers, interceptors)
 
 
 def subscribe_pattern(

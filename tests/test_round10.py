@@ -5,6 +5,13 @@ partitioned near-dup band store."""
 import pytest
 from pyspark.sql import functions as F
 
+# The scalable-subscription cursor classes live in tests/test_scalable_subscriptions.py;
+# importing them here keeps their ids under this module too.
+from tests.test_scalable_subscriptions import (  # noqa: F401
+    TestHoleCleanupOnSlotOps,
+    TestStreamingAckHoles,
+)
+
 
 @pytest.fixture(scope="module")
 def keys():
@@ -227,137 +234,6 @@ class TestTrainedLangid:
         )
         out = langid_fit_predict(df).collect()
         assert all(r.lang_pred == "bb" for r in out)
-
-
-class TestStreamingAckHoles:
-    def test_assigned_stream_skips_holed_offsets(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            create_scalable_topic,
-            create_subscription,
-            produce_scalable,
-            subscription_ack_holes,
-            subscription_checkpoint,
-        )
-        from pulsar_spark.sources.coordinator import SubscriptionCoordinator
-        from pulsar_spark.streaming import run_to_end, subscribe_assigned
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=2)
-        payload = spark.range(40).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        create_subscription(d, "sub")
-        # acks: contiguous prefix on segment 0 + scattered holes
-        acknowledge_individual(d, "sub", {0: [0, 1, 4, 6]})
-        holes = subscription_ack_holes(d, "sub")
-        assert holes == {0: [[4, 4], [6, 6]]}
-        coord = SubscriptionCoordinator("sub", d)
-        a = coord.register_consumer("c1", 1)["c1"]
-        got = []
-
-        def sink(batch, _bid):
-            got.extend((int(r.segment), int(r.offset)) for r in
-                       batch.select("segment", "offset").collect())
-
-        stream = subscribe_assigned(
-            spark, d, a,
-            start_checkpoint=subscription_checkpoint(d, "sub"),
-            ack_holes=holes,
-        )
-        run_to_end(stream.writeStream.foreachBatch(sink))
-        seg0 = sorted(off for seg, off in got if seg == 0)
-        # cursor at 2 (prefix folded), holes 4 and 6 never redeliver
-        assert 0 not in seg0 and 1 not in seg0
-        assert 4 not in seg0 and 6 not in seg0
-        assert 2 in seg0 and 3 in seg0 and 5 in seg0
-
-
-class TestHoleCleanupOnSlotOps:
-    def _setup(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            create_scalable_topic,
-            create_subscription,
-            produce_scalable,
-        )
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=2)
-        payload = spark.range(20).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        create_subscription(d, "sub")
-        acknowledge_individual(d, "sub", {0: [3, 5], 1: [2]})
-        return d
-
-    def test_delete_segment_subscription_clears_its_holes(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            delete_segment_subscription,
-            subscription_ack_holes,
-        )
-
-        d = self._setup(spark, tmp_path)
-        assert subscription_ack_holes(d, "sub") == {0: [[3, 3], [5, 5]], 1: [[2, 2]]}
-        # a deleted slot reverts to EARLIEST: its holes must go with it
-        # (resetCursor clears individualDeletedMessages) — but only ITS
-        # holes, segment 1 keeps state. The slot itself may be absent
-        # (cursor never advanced) — deletion of a missing slot is a
-        # no-op that must still not touch holes.
-        from pulsar_spark.sources import acknowledge_individual
-
-        acknowledge_individual(d, "sub", {0: [0]})  # creates slot 0 cursor=1
-        deleted = delete_segment_subscription(d, 0, "sub")
-        assert deleted
-        assert subscription_ack_holes(d, "sub") == {1: [[2, 2]]}
-
-    def test_delete_segment_clears_orphan_holes(self, spark, tmp_path):
-        from pulsar_spark.sources import subscription_ack_holes
-        from pulsar_spark.sources.scalable import (
-            delete_segment,
-            split_segment,
-        )
-
-        d = self._setup(spark, tmp_path)
-        # seal segment 0 via split, then force-delete it: every
-        # subscription's cursor slot AND hole entry for it must go
-        split_segment(d, 0)
-        delete_segment(d, 0, force=True)
-        assert 0 not in subscription_ack_holes(d, "sub")
-        assert subscription_ack_holes(d, "sub") == {1: [[2, 2]]}
-
-    def test_cli_ack_errors_are_json(self, spark, tmp_path):
-        import json as _json
-        import subprocess
-        import sys
-
-        d = self._setup(spark, tmp_path)
-        r = subprocess.run(
-            [sys.executable, "-m", "pulsar_spark", "subscription", d,
-             "ack", "--name", "sub", "--ids", "0:5;1:3"],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        assert r.returncode == 2
-        assert "error" in _json.loads(r.stdout.strip().splitlines()[-1])
-        r2 = subprocess.run(
-            [sys.executable, "-m", "pulsar_spark", "subscription", d,
-             "holes", "--name", "nosuch"],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        assert r2.returncode == 2
-        assert "error" in _json.loads(r2.stdout.strip().splitlines()[-1])
-
-    def test_segment_backlog_excludes_holes(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            get_segment_subscription_backlog,
-            subscription_ack_holes,
-        )
-
-        d = self._setup(spark, tmp_path)  # holes {0:[3,5], 1:[2]}
-        assert subscription_ack_holes(d, "sub") == {0: [[3, 3], [5, 5]], 1: [[2, 2]]}
-        seg0_total = (
-            spark.read.parquet(d).where(F.col("segment") == 0).count()
-        )
-        # cursor at 0, two acked holes excluded from the drain probe
-        assert get_segment_subscription_backlog(spark, d, 0, "sub") == seg0_total - 2
 
 
 class TestConsumeRecovery:

@@ -9,6 +9,13 @@ from pyspark.sql import functions as F
 
 from tests.test_round10 import TestTrainedLangid
 
+# The scalable-subscription cursor classes live in tests/test_scalable_subscriptions.py;
+# importing them here keeps their ids under this module too.
+from tests.test_scalable_subscriptions import (  # noqa: F401
+    TestLatestSentinelAcks,
+    TestSubscribeAssignedAutoHoles,
+)
+
 
 class TestLangidVocabBound:
     VOCAB = TestTrainedLangid.VOCAB
@@ -181,166 +188,6 @@ class TestProducerKeyContext:
         dec = decrypt_messages(enc, "app", priv)
         assert dec.repartition(4).count() == 0
         assert "payload" in dec.columns
-
-
-class TestLatestSentinelAcks:
-    def _topic(self, spark, tmp_path, n=10):
-        from pulsar_spark.sources import (
-            create_scalable_topic,
-            create_subscription,
-            produce_scalable,
-        )
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=2)
-        payload = spark.range(n).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        create_subscription(d, "sub")
-        return d
-
-    def test_ack_on_latest_sentinel_resolves_first(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            produce_scalable,
-            subscription_checkpoint,
-            subscription_visible,
-        )
-        from pulsar_spark.sources.scalable import (
-            Checkpoint,
-            save_subscription_checkpoint,
-        )
-
-        d = self._topic(spark, tmp_path)
-        save_subscription_checkpoint(d, "sub", Checkpoint.latest())
-        # the first ack RESOLVES the floating sentinel to the current
-        # high-watermark vector (the same floating-latest contract the
-        # segment verbs follow) instead of silently preserving
-        # latest=True and recording inert state
-        acknowledge_individual(d, "sub", {0: [0]}, spark=spark)
-        ck = subscription_checkpoint(d, "sub")
-        assert not ck.latest
-        assert ck.offsets  # concrete vector, past everything stored
-        # rows arriving AFTER resolution deliver; a subsequent
-        # individual ack on them is LIVE — it lands as a hole the
-        # redelivery view excludes
-        late = spark.range(100, 106).selectExpr(
-            "CAST(id AS STRING) AS k", "id AS v"
-        )
-        produce_scalable(late, d, key_col="k", deterministic_mod=True)
-        before = {
-            (int(r.segment), int(r.offset))
-            for r in subscription_visible(spark, d, "sub")
-            .select("segment", "offset").collect()
-        }
-        assert before  # the post-resolution rows are deliverable
-        seg, off = max(before)  # non-contiguous with the cursor: a hole
-        acknowledge_individual(d, "sub", {seg: [off]}, spark=spark)
-        after = {
-            (int(r.segment), int(r.offset))
-            for r in subscription_visible(spark, d, "sub")
-            .select("segment", "offset").collect()
-        }
-        assert after == before - {(seg, off)}
-
-    def test_ack_on_latest_sentinel_without_session_raises(
-        self, tmp_path, spark, monkeypatch
-    ):
-        # the spark fixture keeps an active session; simulate "no
-        # session" by patching the lookup the guard falls back to
-        from pyspark.sql import SparkSession
-
-        from pulsar_spark.sources import acknowledge_individual
-        from pulsar_spark.sources.scalable import (
-            Checkpoint,
-            save_subscription_checkpoint,
-        )
-
-        d = self._topic(spark, tmp_path)
-        save_subscription_checkpoint(d, "sub", Checkpoint.latest())
-        monkeypatch.setattr(
-            SparkSession, "getActiveSession", classmethod(lambda cls: None)
-        )
-        with pytest.raises(ValueError, match="LATEST sentinel"):
-            acknowledge_individual(d, "sub", {0: [0]})
-
-    def test_non_sentinel_acks_unaffected(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            subscription_ack_holes,
-        )
-
-        d = self._topic(spark, tmp_path)
-        acknowledge_individual(d, "sub", {0: [0, 2]})
-        assert subscription_ack_holes(d, "sub") == {0: [[2, 2]]}
-
-
-class TestSubscribeAssignedAutoHoles:
-    def test_registry_holes_applied_without_caller_dict(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            create_scalable_topic,
-            create_subscription,
-            produce_scalable,
-        )
-        from pulsar_spark.sources.coordinator import SubscriptionCoordinator
-        from pulsar_spark.streaming import run_to_end, subscribe_assigned
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=2)
-        payload = spark.range(40).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        create_subscription(d, "sub")
-        acknowledge_individual(d, "sub", {0: [0, 1, 4, 6]})
-        coord = SubscriptionCoordinator("sub", d)
-        a = coord.register_consumer("c1", 1)["c1"]
-        got = []
-
-        def sink(batch, _bid):
-            got.extend(
-                (int(r.segment), int(r.offset))
-                for r in batch.select("segment", "offset").collect()
-            )
-
-        # the SAFE path: name the subscription, pass NO dicts — cursor
-        # and hole set load from the registry itself
-        stream = subscribe_assigned(spark, d, a, subscription="sub")
-        run_to_end(stream.writeStream.foreachBatch(sink))
-        seg0 = sorted(off for seg, off in got if seg == 0)
-        assert 0 not in seg0 and 1 not in seg0  # cursor prefix
-        assert 4 not in seg0 and 6 not in seg0  # registry holes
-        assert 2 in seg0 and 3 in seg0 and 5 in seg0
-
-    def test_explicit_arguments_override_registry(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            acknowledge_individual,
-            create_scalable_topic,
-            create_subscription,
-            produce_scalable,
-        )
-        from pulsar_spark.sources.coordinator import SubscriptionCoordinator
-        from pulsar_spark.sources.scalable import Checkpoint
-        from pulsar_spark.streaming import run_to_end, subscribe_assigned
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=1)
-        payload = spark.range(10).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        create_subscription(d, "sub")
-        acknowledge_individual(d, "sub", {0: [0, 1, 2]})  # cursor -> 3
-        coord = SubscriptionCoordinator("sub", d)
-        a = coord.register_consumer("c1", 1)["c1"]
-        got = []
-
-        def sink(batch, _bid):
-            got.extend(int(r.offset) for r in batch.select("offset").collect())
-
-        # caller-held cursor wins over the registry's (coordinator flow)
-        stream = subscribe_assigned(
-            spark, d, a, subscription="sub",
-            start_checkpoint=Checkpoint({0: 8}), ack_holes={},
-        )
-        run_to_end(stream.writeStream.foreachBatch(sink))
-        assert sorted(got) == [8, 9]
 
 
 # --------------------------------------------------------------------------

@@ -2,291 +2,14 @@
 delete, ScalableTopicController.java:851/:870/:941), the classifier
 PR-curve sweep, and the corpus_report dataset card."""
 
-import pytest
 from pyspark.sql import functions as F
 
-
-class TestSubscriptionLifecycle:
-    def _topic(self, spark, tmp_path, n=200, segments=2):
-        from pulsar_spark.sources import create_scalable_topic, produce_scalable
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=segments)
-        payload = spark.range(n).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        return d, payload
-
-    def test_create_is_idempotent(self, spark, tmp_path):
-        from pulsar_spark.sources import create_subscription, list_subscriptions
-
-        d, _ = self._topic(spark, tmp_path)
-        assert create_subscription(d, "s") is True
-        assert create_subscription(d, "s") is False  # AlreadyExists no-op
-        assert list_subscriptions(d) == ["s"]
-
-    def test_create_requires_scalable_topic(self, tmp_path):
-        from pulsar_spark.sources import create_subscription
-
-        with pytest.raises(ValueError):
-            create_subscription(str(tmp_path / "nope"), "s")
-
-    def test_backlog_and_clear(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            clear_backlog,
-            create_subscription,
-            produce_scalable,
-            subscription_backlog,
-        )
-
-        d, payload = self._topic(spark, tmp_path, n=200)
-        create_subscription(d, "s")
-        total = sum(r.backlog for r in subscription_backlog(spark, d, "s").collect())
-        assert total == 200
-        clear_backlog(spark, d, "s")
-        rows = subscription_backlog(spark, d, "s").collect()
-        # explicit zero rows for every layout segment
-        assert len(rows) == 2 and all(r.backlog == 0 for r in rows)
-        # only NEW rows backlog after a further produce
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        total2 = sum(r.backlog for r in subscription_backlog(spark, d, "s").collect())
-        assert total2 == 200
-
-    def test_delete_drops_entry_and_consumers(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            SubscriptionCoordinator,
-            create_subscription,
-            delete_subscription,
-            list_subscriptions,
-            subscription_checkpoint,
-        )
-
-        d, _ = self._topic(spark, tmp_path)
-        create_subscription(d, "a")
-        create_subscription(d, "b")
-        coord = SubscriptionCoordinator("a", d)
-        coord.register_consumer("c1", 1)
-        coord.register_consumer("c2", 2)
-        assert delete_subscription(d, "a", coordinator=coord) is True
-        assert coord.sessions == {}  # dropAllConsumers ran first
-        assert list_subscriptions(d) == ["b"]
-        assert delete_subscription(d, "a") is False
-        with pytest.raises(ValueError):
-            subscription_checkpoint(d, "a")
-        # subscription "b" untouched
-        assert subscription_checkpoint(d, "b").offsets == {}
-
-    def test_clear_mid_split_regates_children(self, spark, tmp_path):
-        """The VERDICT ordering case: a sealed parent with backlog gates
-        its children; clearBacklog computed AFTER the split covers the
-        children too and lifts the drain gate for this subscription."""
-        from pulsar_spark.sources import (
-            SubscriptionCoordinator,
-            checkpoint_drain_checker,
-            clear_backlog,
-            create_subscription,
-            split_segment,
-            subscription_backlog,
-            subscription_checkpoint,
-        )
-
-        d, _ = self._topic(spark, tmp_path, n=200)
-        create_subscription(d, "s")
-        split_segment(d, 0)  # seals 0 -> children; subscription has backlog on 0
-
-        def seg_ids(coord):
-            coord.poll_drain_status()
-            a = coord.compute_assignment()["c1"]
-            return {s.segment_id for s in a.segments}
-
-        before = SubscriptionCoordinator(
-            "s", d,
-            drain_checker=checkpoint_drain_checker(
-                spark, d, subscription_checkpoint(d, "s")
-            ),
-        )
-        before.register_consumer("c1", 1)
-        got = seg_ids(before)
-        assert 0 in got and not {2, 3} <= got  # children gated
-
-        vec = clear_backlog(spark, d, "s")
-        # the post-split vector covers the children as well
-        assert set(vec.offsets) == {0, 1, 2, 3}
-        rows = subscription_backlog(spark, d, "s").collect()
-        assert len(rows) == 4 and all(r.backlog == 0 for r in rows)
-
-        after = SubscriptionCoordinator(
-            "s", d, drain_checker=checkpoint_drain_checker(spark, d, vec)
-        )
-        after.register_consumer("c1", 1)
-        assert {0, 1, 2, 3} <= seg_ids(after)  # gate lifted
-
-    def test_noop_delete_keeps_consumers_connected(self, spark, tmp_path):
-        # a delete of a nonexistent subscription must not tear down the
-        # live coordinator sessions (review finding)
-        from pulsar_spark.sources import (
-            SubscriptionCoordinator,
-            create_subscription,
-            delete_subscription,
-        )
-
-        d, _ = self._topic(spark, tmp_path)
-        create_subscription(d, "real")
-        coord = SubscriptionCoordinator("real", d)
-        coord.register_consumer("c1", 1)
-        assert delete_subscription(d, "typo", coordinator=coord) is False
-        assert set(coord.sessions) == {"c1"}  # untouched
-
-    def test_subscribe_assigned_latest_sentinel(self, spark, tmp_path):
-        # Checkpoint.latest() must mean "nothing stored delivered",
-        # matching read_from_checkpoint — not "read from earliest"
-        from pulsar_spark.sources import Checkpoint, SubscriptionCoordinator, produce_scalable
-        from pulsar_spark.streaming import run_to_end, subscribe_assigned
-
-        d, payload = self._topic(spark, tmp_path, n=50)
-        coord = SubscriptionCoordinator("s", d)
-        a = coord.register_consumer("c1", 1)["c1"]
-        got = []
-
-        def sink(batch, _bid):
-            got.extend(batch.select("offset", "segment").collect())
-
-        from pulsar_spark.sources import segment_high_watermarks
-
-        stream = subscribe_assigned(spark, d, a, start_checkpoint=Checkpoint.latest())
-        run_to_end(stream.writeStream.foreachBatch(sink))
-        assert got == []  # backlog skipped
-        # positive leg: rows appended AFTER the snapshot ARE delivered
-        # when resuming from the snapshot's vector (so the filter was
-        # the high watermark, not a deliver-nothing limit(0))
-        snap = Checkpoint(
-            {sid: hi + 1 for sid, hi in segment_high_watermarks(spark, d).items()}
-        )
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-        got2 = []
-
-        def sink2(batch, _bid):
-            got2.extend(batch.collect())
-
-        run_to_end(
-            subscribe_assigned(spark, d, a, start_checkpoint=snap)
-            .writeStream.foreachBatch(sink2)
-        )
-        assert len(got2) == 50  # exactly the post-snapshot batch
-        # and a FRESH latest snapshot skips them again
-        got3 = []
-
-        def sink3(batch, _bid):
-            got3.extend(batch.collect())
-
-        run_to_end(
-            subscribe_assigned(spark, d, a, start_checkpoint=Checkpoint.latest())
-            .writeStream.foreachBatch(sink3)
-        )
-        assert got3 == []
-
-    def test_seek_subscription_window_dispatch(self, spark, tmp_path):
-        """seekSubscription's per-segment lifetime dispatch
-        (ScalableTopicController.seekSubscriptionOnSegment): sealed-
-        before-ts segments skip-all with NO scan, created-after-ts go to
-        earliest with NO scan, only straddling segments pay a
-        publish_time aggregate — and the resume delivers exactly the
-        rows published after the seek point."""
-        import time as _time
-
-        from pulsar_spark.sources import (
-            create_subscription,
-            produce_scalable,
-            read_from_checkpoint,
-            seek_subscription,
-            split_segment,
-        )
-
-        d, payload = self._topic(spark, tmp_path, n=100)
-        create_subscription(d, "s")
-        _time.sleep(0.05)
-        split_segment(d, 0)  # seals 0 with a sealed_at_ms stamp
-        _time.sleep(0.05)
-        from datetime import datetime, timezone
-
-        ts = datetime.now(timezone.utc).replace(tzinfo=None)
-        seek_at = ts.strftime("%Y-%m-%d %H:%M:%S.%f")
-        _time.sleep(0.05)
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-
-        vec = seek_subscription(spark, d, "s", seek_at)
-        # sealed parent 0: skip-all (cursor past its high watermark > 0);
-        # children/active: first post-ts offset
-        assert vec.offsets[0] > 0
-        batch, _ = read_from_checkpoint(spark, d, vec)
-        # delivers exactly the second produce (first batch predates ts)
-        assert batch.count() == 100
-        assert batch.where("segment = 0").count() == 0  # sealed pre-ts
-
-    def test_seek_subscription_before_creation_is_scan_free(self, tmp_path):
-        """A seek to a timestamp before the topic existed classifies
-        EVERY segment as created-after -> earliest; prove no Spark job
-        runs by passing spark=None."""
-        from pulsar_spark.sources import (
-            create_scalable_topic,
-            create_subscription,
-            seek_subscription,
-            subscription_checkpoint,
-        )
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=3)
-        create_subscription(d, "s")
-        vec = seek_subscription(None, d, "s", "2000-01-01 00:00:00")
-        assert vec.offsets == {0: 0, 1: 0, 2: 0}
-        assert subscription_checkpoint(d, "s").offsets == vec.offsets
-
-    def test_saved_checkpoint_resumes_reads(self, spark, tmp_path):
-        from pulsar_spark.sources import (
-            create_subscription,
-            read_from_checkpoint,
-            save_subscription_checkpoint,
-            subscription_checkpoint,
-        )
-
-        d, payload = self._topic(spark, tmp_path, n=100)
-        create_subscription(d, "s")
-        batch, nxt = read_from_checkpoint(spark, d, subscription_checkpoint(d, "s"))
-        assert batch.count() == 100
-        save_subscription_checkpoint(d, "s", nxt)
-        batch2, _ = read_from_checkpoint(spark, d, subscription_checkpoint(d, "s"))
-        assert batch2.count() == 0  # acked position persisted
-
-
-class TestSubscriptionCLI:
-    def test_full_lifecycle_through_cli(self, spark, tmp_path, capsys):
-        import json
-
-        from pulsar_spark.__main__ import main
-        from pulsar_spark.sources import create_scalable_topic, produce_scalable
-
-        d = str(tmp_path / "t")
-        create_scalable_topic(d, num_initial_segments=2)
-        payload = spark.range(60).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-        produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-
-        def run(*argv):
-            main(list(argv))
-            return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
-        assert run("subscription", d, "create", "--name", "s")["created"] is True
-        assert run("subscription", d, "create", "--name", "s")["created"] is False
-        assert run("subscription", d, "list")["subscriptions"] == ["s"]
-        bl = run("subscription", d, "backlog", "--name", "s")["backlog"]
-        assert sum(bl.values()) == 60
-        out = run("subscription", d, "clear-backlog", "--name", "s")
-        assert out["cleared"] is True
-        bl2 = run("subscription", d, "backlog", "--name", "s")["backlog"]
-        assert sum(bl2.values()) == 0
-        seek = run("subscription", d, "seek", "--name", "s",
-                   "--timestamp", "2000-01-01 00:00:00")
-        assert all(v == 0 for v in seek["cursor"].values())  # pre-creation -> earliest
-        assert run("subscription", d, "delete", "--name", "s")["deleted"] is True
-        assert run("subscription", d, "list")["subscriptions"] == []
+# The scalable-subscription cursor classes live in tests/test_scalable_subscriptions.py;
+# importing them here keeps their ids under this module too.
+from tests.test_scalable_subscriptions import (  # noqa: F401
+    TestSubscriptionCLI,
+    TestSubscriptionLifecycle,
+)
 
 
 class TestStreamingCoordinator:

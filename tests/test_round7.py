@@ -3,76 +3,25 @@ sentinel guard, PR-curve NULL scores), per-segment admin verbs,
 perceptual image hashing, and the other round-7 operators."""
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+# The scalable-subscription cursor classes live in tests/test_scalable_subscriptions.py;
+# importing them here keeps their ids under this module too.
+from tests.test_scalable_subscriptions import (  # noqa: F401
+    TestAtomicSubscriptionRegistry,
+    TestCheckpointStartFilterLatestGuard,
+    TestLatestSentinelSlotEdits,
+    TestPerSegmentAdminVerbs,
+    TestSegmentCLI,
+    TestSubscribeAssignedEmptyAssignment,
+    seg_topic,
+)
+
 
 # ------------------------------------------------------- ADVICE fixes
-
-
-class TestAtomicSubscriptionRegistry:
-    def _mk_topic(self, spark, tmp_path):
-        from pulsar_spark.sources.scalable import create_scalable_topic
-
-        topic = str(tmp_path / "topic")
-        create_scalable_topic(topic, num_initial_segments=2)
-        return topic
-
-    def test_write_is_atomic_no_temp_leftovers(self, spark, tmp_path):
-        from pulsar_spark.sources.scalable import (
-            _read_subscriptions,
-            _write_subscriptions,
-        )
-
-        topic = self._mk_topic(spark, tmp_path)
-        _write_subscriptions(topic, {"a": {"type": "Stream"}})
-        assert _read_subscriptions(topic) == {"a": {"type": "Stream"}}
-        leftovers = [f for f in os.listdir(topic) if f.startswith("_subs_")]
-        assert leftovers == []
-
-    def test_failed_write_keeps_previous_registry(self, spark, tmp_path):
-        from pulsar_spark.sources.scalable import (
-            _read_subscriptions,
-            _write_subscriptions,
-        )
-
-        topic = self._mk_topic(spark, tmp_path)
-        _write_subscriptions(topic, {"a": {"type": "Stream"}})
-
-        class Boom:  # not JSON-serializable -> json.dump raises mid-write
-            pass
-
-        with pytest.raises(TypeError):
-            _write_subscriptions(topic, {"b": Boom()})
-        # the durable store is untouched and no temp files leak
-        assert _read_subscriptions(topic) == {"a": {"type": "Stream"}}
-        leftovers = [f for f in os.listdir(topic) if f.startswith("_subs_")]
-        assert leftovers == []
-        # and the registry file is still valid JSON
-        with open(os.path.join(topic, "_subscriptions.json")) as fh:
-            json.load(fh)
-
-
-class TestCheckpointStartFilterLatestGuard:
-    def test_latest_sentinel_raises(self, spark):
-        from pulsar_spark.sources.scalable import Checkpoint, checkpoint_start_filter
-
-        df = spark.range(3).select(
-            F.col("id").cast("int").alias("segment"), F.col("id").alias("offset")
-        )
-        with pytest.raises(ValueError, match="LATEST sentinel"):
-            checkpoint_start_filter(df, Checkpoint.latest())
-
-    def test_empty_earliest_still_full(self, spark):
-        from pulsar_spark.sources.scalable import Checkpoint, checkpoint_start_filter
-
-        df = spark.range(3).select(
-            F.col("id").cast("int").alias("segment"), F.col("id").alias("offset")
-        )
-        assert checkpoint_start_filter(df, Checkpoint.earliest()).count() == 3
 
 
 class TestPrCurveNullScores:
@@ -94,248 +43,6 @@ class TestPrCurveNullScores:
         assert row["fp"] == 1
         assert row["fn"] == 1
         assert row["recall"] == 0.5
-
-
-class TestSubscribeAssignedEmptyAssignment:
-    def test_empty_assignment_is_false_predicate(self, spark, tmp_path):
-        """An empty assignment must be a false filter (works in any
-        output mode), not a streaming global limit(0)."""
-        from pulsar_spark.sources.coordinator import ConsumerAssignment
-        from pulsar_spark.sources.scalable import (
-            create_scalable_topic,
-            produce_scalable,
-        )
-        from pulsar_spark.streaming.subscribe import subscribe_assigned
-
-        topic = str(tmp_path / "topic")
-        create_scalable_topic(topic, num_initial_segments=2)
-        rows = spark.createDataFrame(
-            [(str(i), f"v{i}") for i in range(8)], "key string, value string"
-        )
-        produce_scalable(rows, topic)
-        stream = subscribe_assigned(
-            spark, topic, ConsumerAssignment(layout_epoch=1, segments=())
-        )
-        assert stream.isStreaming
-        # limit(0) would appear as GlobalLimit in the logical plan
-        plan = stream._jdf.queryExecution().logical().toString()
-        assert "GlobalLimit" not in plan
-
-    def test_calibration_bins_exported(self):
-        import pulsar_spark.functions as pf
-
-        assert hasattr(pf, "calibration_bins")
-        assert "calibration_bins" in pf.__all__
-
-
-# --------------------------------------- per-segment admin verbs (v5)
-
-
-@pytest.fixture()
-def seg_topic(spark, tmp_path):
-    """2-segment scalable topic with 12 keyed rows produced."""
-    from pulsar_spark.sources.scalable import (
-        create_scalable_topic,
-        produce_scalable,
-    )
-
-    topic = str(tmp_path / "topic")
-    create_scalable_topic(topic, num_initial_segments=2)
-    rows = spark.createDataFrame(
-        [(str(i), f"v{i}") for i in range(12)], "key string, value string"
-    )
-    produce_scalable(rows, topic, key_col="key", deterministic_mod=True)
-    return topic
-
-
-class TestPerSegmentAdminVerbs:
-    def test_create_segment_idempotent_and_fans_subscriptions(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            create_segment,
-            list_subscriptions,
-            subscription_checkpoint,
-        )
-
-        # existing dir (produce wrote it) -> idempotent no-op
-        assert create_segment(seg_topic, 0) is False
-        # fan a new subscription's cursor to earliest on segment 0
-        assert create_segment(seg_topic, 0, subscriptions=["s1"]) is False
-        assert list_subscriptions(seg_topic) == ["s1"]
-        assert subscription_checkpoint(seg_topic, "s1").offsets == {0: 0}
-
-    def test_create_segment_unknown_raises(self, seg_topic):
-        from pulsar_spark.sources.scalable import SegmentGoneError, create_segment
-
-        with pytest.raises(SegmentGoneError):
-            create_segment(seg_topic, 99)
-
-    def test_terminate_blocks_keyed_produce(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            SegmentGoneError,
-            produce_scalable,
-            scalable_metadata,
-            terminate_segment,
-        )
-
-        assert terminate_segment(seg_topic, 0) is True
-        assert terminate_segment(seg_topic, 0) is False  # idempotent
-        meta = scalable_metadata(seg_topic)
-        s = meta["segments"]["0"]
-        assert s["state"] == "SEALED" and s["sealed_at_ms"] is not None
-        rows = spark.createDataFrame([("1", "x")], "key string, value string")
-        with pytest.raises(SegmentGoneError, match="does not cover"):
-            produce_scalable(rows, seg_topic, key_col="key", deterministic_mod=True)
-        # keyless round-robin still works: remaining active segments absorb
-        produce_scalable(rows.drop("key"), seg_topic)
-
-    def test_terminated_segment_drains_then_deletes(self, spark, seg_topic):
-        """Composition: terminate seals -> drain gate lifts once the
-        cursor passes the high watermark -> delete removes data,
-        layout entry, and orphan cursor slots."""
-        from pulsar_spark.sources.coordinator import checkpoint_drain_checker
-        from pulsar_spark.sources.scalable import (
-            clear_segment_subscription_backlog,
-            create_subscription,
-            delete_segment,
-            read_scalable,
-            scalable_metadata,
-            subscription_checkpoint,
-            terminate_segment,
-        )
-
-        create_subscription(seg_topic, "s")
-        terminate_segment(seg_topic, 0)
-        meta = scalable_metadata(seg_topic)
-        seg0 = meta["segments"]["0"]
-        ck = subscription_checkpoint(seg_topic, "s")
-        assert checkpoint_drain_checker(spark, seg_topic, ck)(seg0) is False
-        # force=False refuses while backlog remains
-        with pytest.raises(ValueError, match="backlog"):
-            delete_segment(seg_topic, 0, force=False, spark=spark)
-        clear_segment_subscription_backlog(spark, seg_topic, 0, "s")
-        ck = subscription_checkpoint(seg_topic, "s")
-        assert checkpoint_drain_checker(spark, seg_topic, ck)(seg0) is True
-        assert delete_segment(seg_topic, 0, force=False, spark=spark) is True
-        meta = scalable_metadata(seg_topic)
-        assert "0" not in meta["segments"]
-        # orphan cursor slot dropped with the segment
-        assert 0 not in subscription_checkpoint(seg_topic, "s").offsets
-        # stored rows for segment 0 are gone
-        remaining = read_scalable(spark, seg_topic)
-        assert remaining.where("segment = 0").count() == 0
-        assert remaining.count() > 0
-
-    def test_delete_active_segment_refused(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import delete_segment
-
-        with pytest.raises(ValueError, match="ACTIVE"):
-            delete_segment(seg_topic, 0, force=True)
-
-    def test_segment_subscription_cursor_family(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            clear_segment_subscription_backlog,
-            create_segment_subscription,
-            delete_segment_subscription,
-            get_segment_subscription_backlog,
-            read_scalable,
-            subscription_checkpoint,
-        )
-
-        n0 = read_scalable(spark, seg_topic).where("segment = 0").count()
-        n1 = read_scalable(spark, seg_topic).where("segment = 1").count()
-        assert n0 > 0 and n1 > 0
-        # create: explicit earliest slot, idempotent
-        assert create_segment_subscription(seg_topic, 0, "s") is True
-        assert create_segment_subscription(seg_topic, 0, "s") is False
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == n0
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == n1
-        # clear one segment: the other is untouched
-        off = clear_segment_subscription_backlog(spark, seg_topic, 0, "s")
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == 0
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == n1
-        assert subscription_checkpoint(seg_topic, "s").offsets[0] == off
-        # delete the slot: back to earliest default
-        assert delete_segment_subscription(seg_topic, 0, "s") is True
-        assert delete_segment_subscription(seg_topic, 0, "s") is False
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == n0
-
-    def test_seek_segment_subscription_arms(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            create_subscription,
-            get_segment_subscription_backlog,
-            seek_segment_subscription,
-            split_segment,
-        )
-
-        create_subscription(seg_topic, "s")
-        n0 = get_segment_subscription_backlog(spark, seg_topic, 0, "s")
-        # earliest arm: created long after 1970 -> offset 0, scan-free
-        # (spark=None proves no scan happens)
-        assert (
-            seek_segment_subscription(None, seg_topic, 0, "s", "1970-01-01T00:00:00")
-            == 0
-        )
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == n0
-        # skip-all arm: seal segment 0 by splitting it, then seek far
-        # in the future -> past-the-end
-        split_segment(seg_topic, 0)
-        off = seek_segment_subscription(
-            spark, seg_topic, 0, "s", "2100-01-01T00:00:00"
-        )
-        assert off == n0  # offsets are 0-based contiguous: high+1 == count
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == 0
-
-    def test_seek_unknown_subscription_raises(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import seek_segment_subscription
-
-        with pytest.raises(ValueError, match="no such subscription"):
-            seek_segment_subscription(spark, seg_topic, 0, "nope", "1970-01-01")
-
-
-class TestSegmentCLI:
-    def test_segment_verbs_through_cli(self, spark, seg_topic, capsys):
-        from pulsar_spark.__main__ import main
-
-        def run(*argv):
-            main(list(argv))
-            return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
-        d = seg_topic
-        assert run("segment", d, "create", "--segment", "0")["created"] is False
-        assert (
-            run("segment", d, "sub-create", "--segment", "0", "--name", "s")["created"]
-            is True
-        )
-        n0 = run("segment", d, "sub-backlog", "--segment", "0", "--name", "s")[
-            "backlog"
-        ]
-        assert n0 > 0
-        out = run("segment", d, "sub-clear", "--segment", "0", "--name", "s")
-        assert out["cursor"] == n0  # 0-based contiguous offsets: high+1 == count
-        assert (
-            run("segment", d, "sub-backlog", "--segment", "0", "--name", "s")["backlog"]
-            == 0
-        )
-        seek = run(
-            "segment", d, "sub-seek", "--segment", "0", "--name", "s",
-            "--timestamp", "2000-01-01 00:00:00",
-        )
-        assert seek["cursor"] == 0
-        assert (
-            run("segment", d, "sub-delete", "--segment", "0", "--name", "s")["deleted"]
-            is True
-        )
-        assert run("segment", d, "terminate", "--segment", "0")["terminated"] is True
-        assert (
-            run("segment", d, "delete", "--segment", "0", "--force")["deleted"] is True
-        )
-
-    def test_sub_verb_without_name_is_usage_error(self, capsys, seg_topic):
-        from pulsar_spark.__main__ import main
-
-        rc = main(["segment", seg_topic, "sub-backlog", "--segment", "0"])
-        assert rc == 2
-        assert "required" in capsys.readouterr().out
 
 
 # --------------------------------------------- perceptual image hashing
@@ -797,79 +504,6 @@ class TestAudioFingerprint:
         )
         with pytest.raises(Exception, match="no real kernel"):
             audio_fingerprint_media(media).collect()
-
-
-class TestLatestSentinelSlotEdits:
-    """Review findings: per-slot cursor edits must resolve a persisted
-    LATEST sentinel instead of silently dropping the flag (which would
-    flip every OTHER segment's cursor back to earliest)."""
-
-    def test_clear_one_segment_keeps_others_drained(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            Checkpoint,
-            clear_segment_subscription_backlog,
-            create_subscription,
-            get_segment_subscription_backlog,
-            save_subscription_checkpoint,
-        )
-
-        create_subscription(seg_topic, "s")
-        save_subscription_checkpoint(seg_topic, "s", Checkpoint.latest())
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == 0
-        clear_segment_subscription_backlog(spark, seg_topic, 0, "s")
-        # segment 1 must STAY drained — clearing 0 cannot create backlog
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == 0
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") == 0
-
-    def test_seek_one_segment_keeps_others_drained(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            Checkpoint,
-            create_subscription,
-            get_segment_subscription_backlog,
-            save_subscription_checkpoint,
-            seek_segment_subscription,
-        )
-
-        create_subscription(seg_topic, "s")
-        save_subscription_checkpoint(seg_topic, "s", Checkpoint.latest())
-        seek_segment_subscription(spark, seg_topic, 0, "s", "1970-01-01")
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") > 0
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == 0
-
-    def test_create_slot_on_latest_sub_resolves_or_raises(self, spark, seg_topic):
-        from pulsar_spark.sources.scalable import (
-            Checkpoint,
-            create_segment_subscription,
-            create_subscription,
-            get_segment_subscription_backlog,
-            save_subscription_checkpoint,
-        )
-
-        create_subscription(seg_topic, "s")
-        save_subscription_checkpoint(seg_topic, "s", Checkpoint.latest())
-        # without a session the latest sentinel can't be resolved: loud
-        with pytest.raises(ValueError, match="LATEST sentinel"):
-            create_segment_subscription(seg_topic, 0, "s")
-        # with one, the earliest slot is REAL (backlog delivered) and
-        # the other segment keeps its latest (drained) position
-        assert create_segment_subscription(seg_topic, 0, "s", spark=spark) is True
-        assert get_segment_subscription_backlog(spark, seg_topic, 0, "s") > 0
-        assert get_segment_subscription_backlog(spark, seg_topic, 1, "s") == 0
-
-    def test_registry_file_mode_preserved(self, spark, seg_topic):
-        import os
-
-        from pulsar_spark.sources.scalable import create_subscription
-
-        create_subscription(seg_topic, "a")
-        f = os.path.join(seg_topic, "_subscriptions.json")
-        # first write: the fixed 0644 default, not mkstemp's 0600
-        # (umask-independent by design — see _write_subscriptions)
-        assert (os.stat(f).st_mode & 0o777) == 0o644
-        # later rewrites preserve whatever the operator set
-        os.chmod(f, 0o640)
-        create_subscription(seg_topic, "b")
-        assert (os.stat(f).st_mode & 0o777) == 0o640
 
 
 # ----------------------------------------------------- URL canonicalization

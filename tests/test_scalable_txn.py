@@ -197,6 +197,28 @@ class TestAtomicAcks:
         save_subscription_checkpoint(d, "sub", Checkpoint({0: 0}))
         assert subscription_ack_holes(d, "sub") == {}
 
+    def test_cumulative_ack_on_latest_keeps_other_segments_drained(
+        self, spark, tmp_path
+    ):
+        """A txn cumulative ack is a slot edit: on a subscription at the
+        LATEST sentinel it resolves the flag first, so the segment the
+        ack does not name stays past the end instead of dropping back
+        to earliest and redelivering its stored backlog."""
+        from pulsar_spark.sources import (
+            get_segment_subscription_backlog,
+            save_subscription_checkpoint,
+        )
+
+        d, coord = self._setup(spark, tmp_path)
+        assert get_segment_subscription_backlog(spark, d, 1, "sub") > 0
+        save_subscription_checkpoint(d, "sub", Checkpoint.latest())
+        t = new_transaction(coord)
+        coord.acknowledge_cumulative(t, d, "sub", {0: 1})
+        coord.commit(t)
+        assert get_segment_subscription_backlog(spark, d, 1, "sub") == 0
+        assert get_segment_subscription_backlog(spark, d, 0, "sub") == 0
+        assert not subscription_checkpoint(d, "sub").latest
+
     def test_stage_requires_open(self, spark, tmp_path):
         d, coord = self._setup(spark, tmp_path)
         t = new_transaction(coord)
