@@ -284,11 +284,11 @@ def _q_scalable_txn_visibility(spark, sf_dir):
         orders.where(F.col("okey") % 4 == 0), d, key_col="k", deterministic_mod=True
     )
     create_subscription(d, "sub")
-    # the non-txn batch's per-segment counts = its high watermarks + 1
+    # the non-txn batch's per-segment counts = its past-the-end vector
     # (it was produced first, offsets 0..n-1) — the staged ack vector
-    from pulsar_spark.sources import segment_high_watermarks
+    from pulsar_spark.sources.scalable import _past_end
 
-    vector = {s: hi + 1 for s, hi in segment_high_watermarks(spark, d).items()}
+    vector = _past_end(spark, d)
     t_commit = new_transaction(coord)
     t_open = new_transaction(coord)
     t_abort = new_transaction(coord)
@@ -574,9 +574,10 @@ def _q_segment_gc(spark, sf_dir):
     # one sidecar write, backing storage deleted. Output: the surviving
     # layout joined with stored counts; the oracle recomputes both from
     # the slot arithmetic and the verbatim post-prune layout.
-    from pulsar_spark.sources import gc_sealed_segments, segment_high_watermarks
+    from pulsar_spark.sources import gc_sealed_segments
     from pulsar_spark.sources.scalable import (
         Checkpoint,
+        _past_end,
         _read_if_present,
         create_scalable_topic,
         produce_scalable,
@@ -591,9 +592,7 @@ def _q_segment_gc(spark, sf_dir):
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
     split_segment(d, 0)  # seals 0 -> children 2 [0,16383], 3 [16384,32767]
     produce_scalable(payload, d, key_col="k", deterministic_mod=True)
-    consumed = Checkpoint(
-        {sid: hi + 1 for sid, hi in segment_high_watermarks(spark, d).items()}
-    )
+    consumed = Checkpoint(_past_end(spark, d))
     pruned = gc_sealed_segments(spark, d, retention_ms=0, subscriptions={"s": consumed})
     assert pruned == [0], pruned
     meta = scalable_metadata(d)
@@ -1869,8 +1868,8 @@ def _q_replicated_subscription_failover(spark, sf_dir):
     # oracle pins that planted set (the cursor vector itself is
     # routing-hash-valued, like the phash oracle pins planted groups
     # rather than hash values).
-    from pulsar_spark.envelope import watermark_lookup
     from pulsar_spark.sources import cursors
+    from pulsar_spark.sources.scalable import Checkpoint, checkpoint_start_filter
     from pulsar_spark.sources.topics import create_topic, produce, write_topic
     from pulsar_spark.streaming.replicated_subscriptions import (
         ReplicatedSubscriptionsController,
@@ -1911,13 +1910,11 @@ def _q_replicated_subscription_failover(spark, sf_dir):
     cw.process_markers(now_ms=4_000)
     # failover: the consumer reattaches at west; its backlog is the
     # post-snapshot rows only
-    pos = cursors.subscription_positions(west, "training-reader")
+    pos = Checkpoint(cursors.subscription_positions(west, "training-reader"))
     df = spark.read.option("mergeSchema", "true").parquet(west)
-    return (
-        df.where(F.col("marker_type").isNull())
-        .where(F.col("offset") >= watermark_lookup(F.col("partition"), pos, default=0))
-        .select("event_id", "replicated_from")
-    )
+    return checkpoint_start_filter(
+        df.where(F.col("marker_type").isNull()), pos, lane="partition"
+    ).select("event_id", "replicated_from")
 
 
 def _q_corpus_report_sketch(spark, sf_dir):

@@ -432,7 +432,7 @@ def main() -> None:
                 "ingest_rows_per_sec_best": round(n_events / queries_min["b1_ingest"]),
                 "steady_second_run": steady,
                 "runs_detail": runs_detail,
-                "methodology": "per-query median of 3 runs (run 1 cold, 2-3 plan/cache-warm; b1b_fixture_envelope is single-run — its output IS the cached fixture for b2-b6); as of r11, b2-b6 analyze their DataFrame once and the runs time execution only (the plan-warm contract made literal — a rebuilt frame was re-paying ~10-70 ms of Catalyst analysis per run, pure driver fixed cost; execution re-runs fully, Spark caches no count() results); x-queries still rebuild per run; queries_min/headline_total_min are per-query minima — the steady-state estimator under host CPU steal (steal only adds time); b1_ingest = min of SIX full produce runs, each appending a fresh topic path (steady-state contract, BASELINE.md); as of r12, x8 clears the cache between runs like x2 always has (phash_near_dups persists its hash core; runs 2-3 previously read run 1's cache instead of re-executing the Arrow pass — r12 x8 numbers are the first honest cross-run band and are NOT comparable to r9-r11 records); raw runs in runs_detail; steal_sentinel_ms times a fixed pure-Python loop before/after the run — compare across rounds to detect a contaminated record",
+                "methodology": "see BASELINE.md, section 'bench.py methodology'",
                 "extras_not_in_total": extras,
                 "steal_sentinel_ms": {"before": spin_before, "after": spin_after},
                 "loadavg": loadavg,

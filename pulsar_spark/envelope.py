@@ -180,8 +180,8 @@ def messages_oracle_cte(events_view: str = "events") -> str:
 
 def watermark_lookup(key_col, highs: dict, default: int = -1):
     """High-watermark literal-map lookup — the ONE shared builder for
-    "offset past stored watermark" predicates (streaming subscribe's
-    initial_position='latest' snapshot, the streaming replicator's
+    "offset past stored watermark" predicates (the cursor start filter
+    ``scalable.checkpoint_start_filter``, the streaming replicator's
     per-source dedup). Explicit casts on both map sides: mixed
     int/long literals in one ``create_map`` is an AnalysisException
     once offsets pass 2^31, and string keys must not coerce. Returns

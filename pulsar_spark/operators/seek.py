@@ -190,8 +190,8 @@ def last_message_ids(messages: DataFrame) -> DataFrame:
     ``hasMessageAvailable`` (capi/Reader.java:116).
 
     One map-side-combined groupBy over (topic, partition); on a
-    parquet-backed topic the per-partition max comes from footer stats
-    after partition pruning, so this stays metadata-cheap at any scale.
+    parquet-backed topic it scans only the ``offset`` column (plus the
+    grouping columns), after partition pruning.
     """
     return messages.groupBy("topic", "partition").agg(
         F.max("offset").alias("last_offset")

@@ -19,9 +19,9 @@ is the v5 queue-discipline producer of exactly this state.
 
 Spark-first: the hole set is BOUNDED METADATA (sorted disjoint closed
 ranges per segment) stored beside the checkpoint vector in the topic's
-``_subscriptions.json`` registry; the visibility filter is a literal
-map-of-range-arrays expression riding the segment scan — no join, no
-shuffle, no data pass to ack. The range algebra below is pure Python
+subscription registry (sources/scalable.py); the visibility filter is
+a literal map-of-range-arrays expression riding the segment scan — no
+join, no shuffle, no data pass to ack. The range algebra below is pure Python
 over the bounded metadata (property-tested); nothing here scans data.
 
 This module closes the divergence note that ``sources/scalable_txn.py``

@@ -1,38 +1,20 @@
 """Durable subscription cursors for classic (partitioned) topics.
 
-The scalable-topic surface already persists per-segment checkpoint
-vectors in ``_subscriptions.json`` (sources/scalable.py); classic
-topics get the same treatment here with a per-partition NEXT-OFFSET
-vector — the mark-delete position of
+A classic subscription is an entry of the topic's subscription
+registry under the same cursor rules as scalable topics
+(sources/scalable.py); each function here is a thin call on them. Its
+cursor is a NEXT-OFFSET vector over the ``partition`` lane — the
+mark-delete position of
 ``pulsar-broker/.../persistent/PersistentSubscription.java`` rendered
 as ``{partition: first_unconsumed_offset}``. Replicated subscriptions
 (streaming/replicated_subscriptions.py) advance these vectors from
 SUBSCRIPTION_UPDATE markers; ordinary consumers advance them by
-acknowledging.
-
-Same durability contract as the scalable registry: every write goes
-through ``durable.write_atomic``, so a crash mid-write never tears the
-JSON; single admin-writer assumption at file granularity.
+acknowledging. A classic cursor is never a LATEST sentinel, so no call
+here needs a SparkSession or runs a Spark job.
 """
 from __future__ import annotations
 
-import os
-
-from pulsar_spark.durable import read_json, write_atomic
-
-_CURSORS = "_cursors.json"
-
-
-def _path(topic_path: str) -> str:
-    return os.path.join(topic_path, _CURSORS)
-
-
-def _read(topic_path: str) -> dict:
-    return read_json(_path(topic_path), {})
-
-
-def _write(topic_path: str, subs: dict) -> None:
-    write_atomic(_path(topic_path), subs)
+from pulsar_spark.sources import scalable
 
 
 def create_subscription(
@@ -47,24 +29,13 @@ def create_subscription(
     ``replicated=True`` is the ``replicateSubscriptionState`` flag of
     CommandSubscribe (ReplicatedSubscriptionsController.java:224
     creates remote subscriptions with it set)."""
-    subs = _read(topic_path)
-    if subscription in subs:
-        return False
-    subs[subscription] = {
-        "replicated": bool(replicated),
-        "positions": {str(k): int(v) for k, v in (positions or {}).items()},
-    }
-    _write(topic_path, subs)
-    return True
+    return scalable._add_subscription(
+        topic_path, subscription, scalable._classic_entry(replicated, positions)
+    )
 
 
 def delete_subscription(topic_path: str, subscription: str) -> bool:
-    subs = _read(topic_path)
-    if subscription not in subs:
-        return False
-    del subs[subscription]
-    _write(topic_path, subs)
-    return True
+    return scalable.delete_subscription(topic_path, subscription)
 
 
 def list_subscriptions(topic_path: str) -> dict[str, dict]:
@@ -72,24 +43,18 @@ def list_subscriptions(topic_path: str) -> dict[str, dict]:
     return {
         name: {
             "replicated": bool(e.get("replicated")),
-            "positions": {int(k): int(v) for k, v in e.get("positions", {}).items()},
+            "positions": scalable._entry_cursor(e)[0].offsets,
         }
-        for name, e in _read(topic_path).items()
+        for name, e in scalable._read_subscriptions(topic_path).items()
     }
 
 
 def subscription_positions(topic_path: str, subscription: str) -> dict[int, int]:
-    subs = _read(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    return {int(k): int(v) for k, v in subs[subscription].get("positions", {}).items()}
+    return scalable.subscription_checkpoint(topic_path, subscription).offsets
 
 
 def is_replicated(topic_path: str, subscription: str) -> bool:
-    subs = _read(topic_path)
-    if subscription not in subs:
-        raise ValueError(f"no such subscription: {subscription}")
-    return bool(subs[subscription].get("replicated"))
+    return bool(scalable._entry(topic_path, subscription).get("replicated"))
 
 
 def ack_cumulative(
@@ -99,21 +64,18 @@ def ack_cumulative(
     create_replicated: bool = False,
 ) -> dict[int, int]:
     """Cumulative acknowledgment: per-partition MAX-merge of the new
-    next-offset vector into the stored one (a cumulative ack can only
-    move a cursor forward — PersistentSubscription.acknowledgeMessage's
-    AckType.Cumulative). With ``create_replicated`` a missing
-    subscription is created first, like the reference does when a
+    next-offset vector into the stored one (``_acked``: a cumulative
+    ack can only move a cursor forward — PersistentSubscription
+    .acknowledgeMessage's AckType.Cumulative). With
+    ``create_replicated`` a missing subscription is created first, in
+    the same atomic write, like the reference does when a
     SUBSCRIPTION_UPDATE arrives for a subscription that does not exist
     yet (ReplicatedSubscriptionsController.java:219-230). Returns the
     merged vector."""
-    subs = _read(topic_path)
-    if subscription not in subs:
-        if not create_replicated:
-            raise ValueError(f"no such subscription: {subscription}")
-        subs[subscription] = {"replicated": True, "positions": {}}
-    cur = subs[subscription].setdefault("positions", {})
-    for p, off in positions.items():
-        k = str(int(p))
-        cur[k] = max(int(cur.get(k, 0)), int(off))
-    _write(topic_path, subs)
-    return {int(k): int(v) for k, v in cur.items()}
+    moved = scalable._edit_cursors(
+        topic_path,
+        lambda ck, holes: scalable._acked(ck, positions, holes),
+        [subscription],
+        create=scalable._classic_entry(True) if create_replicated else None,
+    )
+    return moved[subscription].offsets

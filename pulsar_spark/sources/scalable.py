@@ -567,13 +567,15 @@ def list_scalable_topics(
 
 class Checkpoint:
     """The capi-v5 Checkpoint analog: an opaque, serializable position
-    vector over segments, stored by the CALLER (Flink state, S3, a
-    Spark checkpoint dir) — the topic keeps no cursor for it.
+    vector over lanes, stored by the CALLER (Flink state, S3, a Spark
+    checkpoint dir) or as a subscription's registry cursor. A lane is
+    the column an offset counts within: ``segment`` on scalable
+    topics, ``partition`` on classic ones.
 
-    ``offsets`` maps segment_id -> next offset to read (exclusive high
-    water). Missing segments read from their beginning, so a
-    checkpoint taken before a split remains valid afterwards: the
-    sealed parent's position is retained and new children start at 0.
+    ``offsets`` maps lane id -> next offset to read (exclusive high
+    water). Missing lanes read from their beginning, so a checkpoint
+    taken before a split remains valid afterwards: the sealed parent's
+    position is retained and new children start at 0.
     """
 
     def __init__(self, offsets: dict[int, int] | None = None, latest: bool = False):
@@ -610,34 +612,30 @@ class Checkpoint:
 def segment_high_watermarks(
     spark: SparkSession, topic_path: str, segments: list[int] | None = None
 ) -> dict[int, int]:
-    """Per-segment max stored offset, as one bounded grouped aggregate
-    (parquet footer-stat scale). Shared by the checkpoint reader (the
-    advanced vector is high+1) and the drain checker (drained = cursor
-    past high) so the two definitions cannot drift. Empty dict for a
-    never-produced topic. ``segments`` restricts the aggregate to the
-    listed hive partitions (partition-pruned — callers like
-    ``seek_subscription`` that only need a few sealed segments' highs
-    must not pay a DAG-wide stats pass)."""
-    from pulsar_spark.sources.topics import stored_high_offsets
-
-    df = _read_if_present(spark, topic_path)
-    if df is None:
-        return {}
-    if segments is not None:
-        df = df.where(F.col("segment").isin([int(s) for s in segments]))
-    return stored_high_offsets(df, "segment")
+    """Per-segment max stored offset: ``_past_end`` minus one, over the
+    stored segments (all, or those of ``segments`` that hold data)."""
+    return {k: e - 1 for k, e in _past_end(spark, topic_path, segments).items() if e}
 
 
-def _past_end(spark, topic_path: str, segments: list[int] | None = None) -> dict[int, int]:
-    """The past-the-end cursor vector ``{segment: high + 1}`` — the ONE
-    home of that closed form (read advance, LATEST resolution, clear,
-    the seek skip-all arm). Covers every stored segment, or exactly the
-    listed ``segments`` (one partition-pruned aggregate; a listed
-    segment with no stored rows gets 0)."""
-    highs = segment_high_watermarks(spark, topic_path, segments)
-    if segments is None:
-        return {sid: hi + 1 for sid, hi in highs.items()}
-    return {int(s): highs.get(int(s), -1) + 1 for s in segments}
+def _past_end(
+    spark, topic_path: str, ids: list[int] | None = None, lane: str = "segment"
+) -> dict[int, int]:
+    """The past-the-end cursor vector ``{lane: high + 1}`` and the ONE
+    reader of stored highs per lane (``segment``, or ``partition`` on
+    classic topics): the append's declared-schema envelope read
+    (``topics._stored_envelope``, no footer-inference job), then one
+    grouped MAX scan of the ``offset`` column. Covers every stored
+    lane, or exactly the listed ``ids`` (partition-pruned; a listed
+    lane with no stored rows gets 0). Empty for a never-produced topic."""
+    from pulsar_spark.sources.topics import _stored_envelope, stored_high_offsets
+
+    df = _stored_envelope(spark, topic_path, lane)
+    if df is not None and ids is not None:
+        df = df.where(F.col(lane).isin([int(i) for i in ids]))
+    highs = {} if df is None else stored_high_offsets(df, lane)
+    if ids is None:
+        return {k: hi + 1 for k, hi in highs.items()}
+    return {int(i): highs.get(int(i), -1) + 1 for i in ids}
 
 
 def _resolve_latest(spark, topic_path: str, ck: Checkpoint) -> Checkpoint:
@@ -669,13 +667,15 @@ def _drained(ckpt: Checkpoint | None, segment_id: int, highs: dict[int, int]) ->
     return ckpt.latest or int(ckpt.offsets.get(segment_id, 0)) > highs[segment_id]
 
 
-def checkpoint_start_filter(df: DataFrame, ckpt: Checkpoint) -> DataFrame:
-    """Apply a Checkpoint's per-segment start offsets as a literal-map
-    predicate (``offset >= start[segment]``, unseen segments start
-    at 0, the map from ``envelope.watermark_lookup``). The ONE place
-    the cursor-filter expression lives — the checkpoint reader, the
-    subscription visibility view and the streaming assigned consumer
-    all share it so cursor semantics cannot drift.
+def checkpoint_start_filter(
+    df: DataFrame, ckpt: Checkpoint, lane: str = "segment"
+) -> DataFrame:
+    """Apply a Checkpoint's per-lane start offsets as a literal-map
+    predicate (``offset >= start[lane]``, unseen lanes start at 0, the
+    map from ``envelope.watermark_lookup``). ``lane`` is ``segment``
+    on scalable topics, ``partition`` on classic ones. The ONE place
+    the cursor-filter expression lives: every cursor reader of both
+    topic kinds shares it so cursor semantics cannot drift.
 
     A LATEST-sentinel checkpoint is rejected here rather than treated
     as earliest (empty offsets would otherwise return the FULL frame —
@@ -693,7 +693,7 @@ def checkpoint_start_filter(df: DataFrame, ckpt: Checkpoint) -> DataFrame:
     if not ckpt.offsets:
         return df
     return df.where(
-        F.col("offset") >= watermark_lookup(F.col("segment"), ckpt.offsets, default=0)
+        F.col("offset") >= watermark_lookup(F.col(lane), ckpt.offsets, default=0)
     )
 
 
@@ -761,12 +761,30 @@ def checkpoint_at_timestamp(
 # ------------------------------------------- subscription lifecycle (admin)
 
 #: persisted subscription registry file inside the topic directory —
-#: the SubscriptionMetadata store of ScalableTopicController.java
+#: the SubscriptionMetadata store of ScalableTopicController.java. One
+#: format for both topic kinds: a scalable entry carries its ``type``
+#: and ``created_at_ms``, a classic one its ``replicated`` flag.
 _SUBS = "_subscriptions.json"
+#: the classic registry of earlier releases, ``{name: {replicated,
+#: positions}}``: read only while ``_SUBS`` does not exist, so the first
+#: registry write supersedes it; nothing deletes it
+_LEGACY_SUBS = "_cursors.json"
 
 
 def _read_subscriptions(topic_path: str) -> dict:
-    return read_json(os.path.join(topic_path, _SUBS), {})
+    subs = read_json(os.path.join(topic_path, _SUBS))
+    if subs is not None:
+        return subs
+    return {
+        name: _classic_entry(e.get("replicated"), e.get("positions"))
+        for name, e in read_json(os.path.join(topic_path, _LEGACY_SUBS), {}).items()
+    }
+
+
+def _classic_entry(replicated, offsets: dict | None = None) -> dict:
+    """A classic topic's registry entry: the ``replicateSubscriptionState``
+    flag of CommandSubscribe and a per-partition cursor."""
+    return {"replicated": bool(replicated), "checkpoint": Checkpoint(offsets).to_dict()}
 
 
 def _write_subscriptions(topic_path: str, subs: dict) -> None:
@@ -802,32 +820,40 @@ def _entry_cursor(entry: dict) -> tuple[Checkpoint, dict[int, list[list[int]]]]:
     return Checkpoint.from_dict(entry.get("checkpoint", {})), holes
 
 
-def _cursor(topic_path: str, subscription: str):
-    """The persisted ``(Checkpoint, holes)`` of ``subscription``."""
+def _entry(topic_path: str, subscription: str) -> dict:
+    """The persisted registry entry of ``subscription``."""
     subs = _read_subscriptions(topic_path)
     if subscription not in subs:
         raise ValueError(f"no such subscription: {subscription}")
-    return _entry_cursor(subs[subscription])
+    return subs[subscription]
+
+
+def _cursor(topic_path: str, subscription: str):
+    """The persisted ``(Checkpoint, holes)`` of ``subscription``."""
+    return _entry_cursor(_entry(topic_path, subscription))
 
 
 def _edit_cursors(
-    topic_path: str, edit, names=None, spark=None, resolve_latest: bool = False
+    topic_path: str, edit, names=None, spark=None, resolve_latest=False, create=None
 ) -> dict[str, Checkpoint]:
     """The ONE cursor edit. ``edit(ck, holes)`` gets each named entry's
     cursor (every entry when ``names`` is None) and returns its new
     ``(Checkpoint, holes)``, or None to leave it as is; all changed
     entries persist in ONE atomic registry write, so a cursor and its
-    holes can never disagree. ``resolve_latest`` (every slot edit)
-    first resolves a LATEST sentinel into its past-end vector
-    (``_resolve_latest``: needs ``spark``, raises without one) — a slot
-    set under the flag would be inert, and a slot set that dropped it
-    would flip every OTHER segment back to earliest. Returns the new
-    checkpoint per changed entry."""
+    holes can never disagree. A named entry that does not exist raises,
+    unless ``create`` gives the entry to add for it in the same write.
+    ``resolve_latest`` (every slot edit) first resolves a LATEST
+    sentinel into its past-end vector (``_resolve_latest``: needs
+    ``spark``, raises without one) — a slot set under the flag would be
+    inert, and a slot set that dropped it would flip every OTHER lane
+    back to earliest. Returns the new checkpoint per changed entry."""
 
     def apply(subs: dict) -> dict[str, Checkpoint]:
         for name in names or ():
             if name not in subs:
-                raise ValueError(f"no such subscription: {name}")
+                if create is None:
+                    raise ValueError(f"no such subscription: {name}")
+                subs[name] = dict(create)
         out = {}
         for name in subs if names is None else names:
             entry = subs[name]
@@ -864,6 +890,17 @@ def _moved(old: Checkpoint, new: Checkpoint, holes: dict):
         if rest:
             kept[seg] = rest
     return Checkpoint(offsets, latest=new.latest), kept
+
+
+def _acked(ck: Checkpoint, offsets: dict, holes: dict):
+    """A cumulative ack: each acked lane's slot moves to the max of its
+    stored and acked next offsets (AckType.Cumulative only moves a
+    cursor forward), holes reconciled by ``_moved``. Monotone, so
+    re-applying it after a crash is a no-op."""
+    ahead = {
+        int(k): max(int(ck.offsets.get(int(k), 0)), int(v)) for k, v in offsets.items()
+    }
+    return _moved(ck, Checkpoint({**ck.offsets, **ahead}), holes)
 
 
 def _set_slots(spark, topic_path: str, subscription: str, slots: dict[int, int]) -> None:
@@ -915,15 +952,19 @@ def create_subscription(
     LATER splits, exactly like the reference's lazily-propagated
     per-segment cursors."""
     scalable_metadata(topic_path)  # raises if not a scalable topic
+    earliest = Checkpoint.earliest().to_dict()
+    entry = {"type": sub_type, "created_at_ms": _now_ms(), "checkpoint": earliest}
+    return _add_subscription(topic_path, subscription, entry)
+
+
+def _add_subscription(topic_path: str, subscription: str, entry: dict) -> bool:
+    """Persist a new registry entry; False, with no write, when the
+    subscription already exists."""
 
     def add(subs: dict) -> bool:
         if subscription in subs:
             return False
-        subs[subscription] = {
-            "type": sub_type,
-            "created_at_ms": _now_ms(),
-            "checkpoint": Checkpoint.earliest().to_dict(),
-        }
+        subs[subscription] = entry
         return True
 
     return _edit_registry(topic_path, add)

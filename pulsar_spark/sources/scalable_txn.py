@@ -63,29 +63,21 @@ from pulsar_spark.operators.transactions import (
 )
 from pulsar_spark.sources.scalable import (
     Checkpoint,
+    _acked,
     _edit_cursors,
-    _moved,
     produce_scalable,
 )
 
 
 def _advance_vector(topic_path: str, subscription: str, offsets: dict) -> None:
-    """Max-forward merge of a staged vector into the persisted
-    subscription cursor — monotone, hence safely re-appliable by crash
-    recovery. A slot edit like any other: a LATEST sentinel resolves
-    (with the active session) before the merge, so the segments the ack
-    does not name keep their past-the-end position."""
-
-    def merge(ck, holes):
-        ahead = {
-            int(seg): max(int(ck.offsets.get(int(seg), 0)), int(off))
-            for seg, off in offsets.items()
-        }
-        return _moved(ck, Checkpoint({**ck.offsets, **ahead}), holes)
-
+    """A staged vector applied as a cumulative ack (``_acked``) on the
+    persisted subscription cursor — monotone, hence safely re-appliable
+    by crash recovery. A slot edit like any other: a LATEST sentinel
+    resolves (with the active session) before the merge, so the
+    segments the ack does not name keep their past-the-end position."""
     _edit_cursors(
         topic_path,
-        merge,
+        lambda ck, holes: _acked(ck, offsets, holes),
         [subscription],
         SparkSession.getActiveSession(),
         resolve_latest=True,

@@ -343,8 +343,8 @@ def _append_log(
         f"FROM ({mint_sql}"
     )
     sealed = ["*"] + [f"{sql} AS {_qi(name)}" for name, sql in seal.items()]
-    # Offsets continue from each lane's stored high offset: an 8-row
-    # aggregate over parquet footer stats, joined as a broadcast.
+    # Offsets continue from each lane's stored high offset: a grouped
+    # MAX scan of the `offset` column, joined as a broadcast.
     if existing is None:
         # fresh topic: no rebase, so the seal fuses into the statement
         df = _sql_over(spark, payload, "SELECT " + ", ".join(sealed) + " FROM (" + win, ")))")
@@ -416,8 +416,8 @@ def produce(
     expressions costs nothing extra at scale.
 
     Offsets continue from the topic's current per-partition high
-    watermark (read cheaply from the parquet footer stats of the
-    existing table; an 8-row broadcast join).
+    watermark (a grouped MAX scan of the stored ``offset`` column,
+    joined as a one-row-per-partition broadcast).
 
     Pass ``sequence_col`` to supply caller sequence ids and get
     broker-side effectively-once semantics: a row is silently dropped
@@ -628,9 +628,9 @@ def _existing_sequences(existing: DataFrame | None) -> DataFrame | None:
 def stored_high_offsets(stored: DataFrame, lane: str = "partition") -> dict[int, int]:
     """Highest stored offset per lane (``partition`` on classic topics,
     ``segment`` on scalable ones) of a topic frame, collected: one
-    bounded grouped MAX over two footer-stat columns. The one reader
-    behind high-watermark vectors, ``latest`` subscriptions, compaction
-    horizons and segment drain checks."""
+    grouped MAX scan of the ``offset`` column (no aggregate pushdown on
+    the v1 parquet source). The one aggregate behind past-the-end vectors
+    (``scalable._past_end``), compaction horizons and marker offsets."""
     return {
         int(r[0]): int(r[1])
         for r in stored.groupBy(lane).agg(F.max("offset")).collect()

@@ -111,15 +111,12 @@ def _now_ms() -> int:
 
 def high_watermarks(spark: SparkSession, topic_path: str) -> dict[int, int]:
     """Per-partition next-offset vector of a stored topic — the vector
-    rendering of ``topic.getLastPosition()``. One bounded grouped MAX
-    over two footer-stat columns; empty/missing topics are the empty
-    vector."""
-    from pulsar_spark.sources.topics import _read_topic_if_present, stored_high_offsets
+    rendering of ``topic.getLastPosition()``: the shared past-the-end
+    vector (``scalable._past_end``, one grouped MAX scan of the
+    ``offset`` column); empty/missing topics are the empty vector."""
+    from pulsar_spark.sources.scalable import _past_end
 
-    df = _read_topic_if_present(spark, topic_path)
-    if df is None:
-        return {}
-    return {p: hi + 1 for p, hi in stored_high_offsets(df).items()}
+    return _past_end(spark, topic_path, lane="partition")
 
 
 def write_marker_rows(

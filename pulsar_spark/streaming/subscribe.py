@@ -11,9 +11,14 @@ and ordering:
 - Key_Shared -> ``repartition(n, sticky_key_hash(key))`` so each task
   owns a key range (per-key order).
 
-The cursor IS the checkpoint: Spark's offset log + commit log give the
-same at-least-once/effectively-once semantics as ack + dedup. A
-subscription's position survives restarts via ``checkpoint_dir``.
+A subscription has two positions. A stream's position is its Spark
+checkpoint: the offset log + commit log give the same
+at-least-once/effectively-once semantics as ack + dedup, and it
+survives restarts via ``checkpoint_dir``. The registry cursor (the
+topic's subscription registry, sources/scalable.py; classic topics
+through sources/cursors.py) is what acks move and what
+replicated-subscription sync and failover read; ``subscribe`` does not
+read it, ``subscribe_assigned(subscription=...)`` starts from it.
 """
 
 from __future__ import annotations
@@ -60,28 +65,26 @@ def subscribe(
     SubscriptionInitialPosition.java): ``earliest`` (default) delivers
     the whole stored backlog; ``latest`` starts the new subscription's
     cursor PAST the current last message of every partition — the
-    per-partition high watermark is snapshotted at subscribe time
-    (parquet footer stats, no data scan) and pushed down as an offset
-    filter, so only rows appended after subscribe are delivered. Like
-    the reference, the position applies at subscription CREATION only:
-    when restarting from an existing checkpoint, resubscribe with the
-    default — the checkpoint is the cursor, and the skipped backlog
-    files are already in its seen-files log.
+    per-partition past-the-end vector is snapshotted at subscribe time
+    (one grouped MAX scan of the ``offset`` column) and pushed down as
+    the cursor start filter, so only rows appended after subscribe are
+    delivered. Like the reference, the position applies at subscription
+    CREATION only: when restarting from an existing checkpoint,
+    resubscribe with the default — the checkpoint is the stream's
+    position, and the skipped backlog files are already in its
+    seen-files log.
     """
     if initial_position not in ("earliest", "latest"):
         raise ValueError(
             f"initial_position must be earliest|latest, got {initial_position}"
         )
-    static, stream = _open_stream(spark, topic_path, max_files_per_trigger)
+    stream = _open_stream(spark, topic_path, max_files_per_trigger)
 
     if initial_position == "latest":
-        from pulsar_spark.envelope import watermark_lookup
-        from pulsar_spark.sources.topics import stored_high_offsets
+        from pulsar_spark.sources.scalable import Checkpoint, _past_end, checkpoint_start_filter
 
-        highs = stored_high_offsets(static)
-        stream = stream.where(
-            F.col("offset") > watermark_lookup(F.col("partition"), highs)
-        )
+        start = Checkpoint(_past_end(spark, topic_path, lane="partition"))
+        stream = checkpoint_start_filter(stream, start, lane="partition")
     if start_offset is not None:
         stream = stream.where(F.col("offset") >= start_offset)
     if start_time is not None:
@@ -92,17 +95,16 @@ def subscribe(
 
 
 def _open_stream(spark: SparkSession, topic_path: str, max_files_per_trigger):
-    """The one topic stream opener: ``(static, stream)``, where the
-    static frame is for schema discovery only — mergeSchema, because a
-    topic legitimately mixes file schemas (replicated-in files add
-    src_* columns, protocol marker files add marker_type/props) and
-    sampling one footer would silently drop those columns from the
-    whole stream."""
+    """The one topic stream opener. Its schema comes from a mergeSchema
+    batch read, because a topic legitimately mixes file schemas
+    (replicated-in files add src_* columns, protocol marker files add
+    marker_type/props) and sampling one footer would silently drop
+    those columns from the whole stream."""
     static = spark.read.option("mergeSchema", "true").parquet(topic_path)
     reader = spark.readStream.schema(static.schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return static, reader.parquet(topic_path)
+    return reader.parquet(topic_path)
 
 
 def _dispatch(stream: DataFrame, subscription_type: str, num_consumers: int, interceptors):
@@ -188,7 +190,7 @@ def subscribe_assigned(
         ack_holes = holes if ack_holes is None else ack_holes
 
     seg_ids = [int(s.segment_id) for s in assignment.segments]
-    _, stream = _open_stream(spark, topic_path, max_files_per_trigger)
+    stream = _open_stream(spark, topic_path, max_files_per_trigger)
     # empty assignment = a predicate that matches nothing, NOT
     # stream.limit(0): global limits on streaming frames are only
     # supported by append/complete-mode sinks, while a false filter

@@ -580,6 +580,23 @@ class TestEffectivelyOnceProduce:
         assert [r.v for r in got] == list(range(2000))
 
 
+def _job_ids(spark, call) -> list[int]:
+    """Ids of the Spark jobs ``call()`` runs, counted under a job group
+    through the status tracker, in submission order."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "counter-budget-" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestAppendCounterBudget:
     """Cost budget of one log append, in counters host CPU steal cannot
     move: Spark jobs per call, and the write stage's task count, which
@@ -594,19 +611,8 @@ class TestAppendCounterBudget:
 
     @staticmethod
     def _counters(spark, call):
-        import uuid
-
-        sc = spark.sparkContext
-        group = "append-budget-" + uuid.uuid4().hex
-        sc.setJobGroup(group, group)
-        try:
-            call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        jobs = sorted(tracker.getJobIdsForGroup(group))
+        jobs = _job_ids(spark, call)
+        tracker = spark.sparkContext.statusTracker()
         # the write job is submitted last (a broadcast it joins is built
         # before its RDD exists); its result stage has the highest id
         write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
@@ -639,6 +645,48 @@ class TestAppendCounterBudget:
                 spark, lambda: produce_scalable(self._payload(spark), d, key_col="k")
             )
             assert got == (jobs, lanes)
+
+
+class TestCursorCounterBudget:
+    """Cost budget of the past-the-end cursor vector on both lanes, in
+    Spark jobs per call: the declared-schema envelope read runs no
+    footer-inference job, so only the grouped MAX's two adaptive jobs
+    remain. Raising the budget is a deliberate edit."""
+
+    JOBS = 2
+    APPENDS = 3
+
+    def _payload(self, spark):
+        return spark.range(0, 400, numPartitions=4).selectExpr(
+            "CAST(id % 37 AS STRING) AS k", "id AS v"
+        )
+
+    def test_classic_high_watermarks_budget(self, spark, tmp_path):
+        from pulsar_spark.sources.topics import produce
+        from pulsar_spark.streaming.replicated_subscriptions import high_watermarks
+
+        d = str(tmp_path / "c")
+        for _ in range(self.APPENDS):
+            produce(self._payload(spark), d, key_col="k", num_partitions=8)
+        got = {}
+        jobs = _job_ids(spark, lambda: got.update(high_watermarks(spark, d)))
+        assert len(jobs) == self.JOBS
+        # offsets are dense per lane, so the vector counts every row
+        assert sorted(got) == list(range(8))
+        assert sum(got.values()) == self.APPENDS * 400
+
+    def test_scalable_past_end_budget(self, spark, tmp_path):
+        from pulsar_spark.sources import create_scalable_topic, produce_scalable
+        from pulsar_spark.sources.scalable import _past_end
+
+        d = str(tmp_path / "s")
+        create_scalable_topic(d, num_initial_segments=8)
+        for _ in range(self.APPENDS):
+            produce_scalable(self._payload(spark), d, key_col="k")
+        got = {}
+        jobs = _job_ids(spark, lambda: got.update(_past_end(spark, d)))
+        assert len(jobs) == self.JOBS
+        assert sum(got.values()) == self.APPENDS * 400
 
 
 class TestKeySharedAutoSplit:

@@ -1,6 +1,7 @@
 """Replicated subscriptions: snapshot-marker cursor sync across
 clusters (ReplicatedSubscriptionsController.java behavior spec;
 scenario shapes from the reference's ReplicatedSubscriptionTest)."""
+import json
 import os
 
 import pytest
@@ -254,6 +255,62 @@ class TestCursorRegistry:
         got = cursors.ack_cumulative(t, "ghost", {0: 1}, create_replicated=True)
         assert got == {0: 1}
         assert cursors.is_replicated(t, "ghost")
+
+
+class TestLegacyCursorFile:
+    """A classic registry written by earlier releases, ``_cursors.json``
+    with ``{name: {replicated, positions}}`` entries, reads back through
+    the one subscription registry until the first registry write
+    supersedes it. Nothing deletes the legacy file."""
+
+    def _legacy(self, tmp_path):
+        t = str(tmp_path / "t")
+        os.makedirs(t)
+        with open(os.path.join(t, "_cursors.json"), "w") as fh:
+            json.dump(
+                {
+                    "s": {"replicated": True, "positions": {"0": 5, "1": 3}},
+                    "plain": {"replicated": False, "positions": {}},
+                },
+                fh,
+            )
+        return t
+
+    def test_positions_and_flag_read_back(self, tmp_path):
+        t = self._legacy(tmp_path)
+        assert cursors.subscription_positions(t, "s") == {0: 5, 1: 3}
+        assert cursors.is_replicated(t, "s")
+        assert not cursors.is_replicated(t, "plain")
+        assert cursors.list_subscriptions(t) == {
+            "s": {"replicated": True, "positions": {0: 5, 1: 3}},
+            "plain": {"replicated": False, "positions": {}},
+        }
+
+    def test_ack_merges_then_delete_stays_deleted(self, tmp_path):
+        t = self._legacy(tmp_path)
+        assert cursors.ack_cumulative(t, "s", {0: 2, 2: 4}) == {0: 5, 1: 3, 2: 4}
+        assert cursors.subscription_positions(t, "s") == {0: 5, 1: 3, 2: 4}
+        assert cursors.delete_subscription(t, "s")
+        with pytest.raises(ValueError):
+            cursors.subscription_positions(t, "s")
+        # the last legacy entry goes too: an empty registry still
+        # supersedes the legacy file
+        assert cursors.delete_subscription(t, "plain")
+        assert cursors.list_subscriptions(t) == {}
+        assert os.path.exists(os.path.join(t, "_cursors.json"))
+
+    def test_failed_first_write_keeps_legacy_positions(self, tmp_path, monkeypatch):
+        t = self._legacy(tmp_path)
+
+        def boom(*a):
+            raise OSError("injected")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", boom)
+            with pytest.raises(OSError, match="injected"):
+                cursors.ack_cumulative(t, "s", {0: 9})
+        assert cursors.subscription_positions(t, "s") == {0: 5, 1: 3}
+        assert sorted(os.listdir(t)) == ["_cursors.json"]
 
 
 class TestIncrementalController:

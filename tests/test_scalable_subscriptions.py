@@ -339,6 +339,31 @@ def test_registry_written_only_by_the_one_edit():
     assert users == [("sources/scalable.py", "_edit_registry")]
 
 
+def test_cursor_format_has_one_home():
+    """The registry's file names and its writer appear in
+    ``sources/scalable.py`` alone: classic cursors (``sources/cursors.py``)
+    are calls on its rules, with no sidecar read or write of their own."""
+    import re
+
+    root = os.path.join(_REPO, "pulsar_spark")
+    home = os.path.join("sources", "scalable.py")
+    named = re.compile(r"_subscriptions\.json|_cursors\.json|_write_subscriptions")
+    hits = []
+    for d, _, files in os.walk(root):
+        for name in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(d, name)
+            rel = os.path.relpath(path, root)
+            if rel == home:
+                continue
+            with open(path) as fh:
+                for i, line in enumerate(fh, 1):
+                    if named.search(line):
+                        hits.append(f"{rel}:{i}: {line.strip()}")
+    assert hits == []
+    with open(os.path.join(root, "sources", "cursors.py")) as fh:
+        assert not re.search(r"\b(read_json|write_atomic)\b", fh.read())
+
+
 class TestCheckpointStartFilterLatestGuard:
     def test_latest_sentinel_raises(self, spark):
         from pulsar_spark.sources.scalable import Checkpoint, checkpoint_start_filter
